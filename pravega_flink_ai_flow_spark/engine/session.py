@@ -3,8 +3,8 @@
 The reference initializes a Flink stream environment per job
 (``batch_train_batch_predict_processor.py:36`` —
 ``flink.set_flink_env(flink.FlinkStreamEnv())``). Spark-first equivalent:
-one shared SparkSession configured for determinism (UTC, fixed shuffle
-partitions) and scale (AQE, Arrow).
+one shared SparkSession configured for determinism (UTC) and scale
+(AQE, Arrow).
 
 Scale notes (100 TB design intent, tested on local[32]):
 - AQE on: runtime coalescing of shuffle partitions, dynamic broadcast
@@ -12,8 +12,11 @@ Scale notes (100 TB design intent, tested on local[32]):
   healthy at 1000 executors.
 - Arrow on: every pandas interchange (toPandas, pandas UDF, applyInPandas)
   is Arrow-batched, never row-at-a-time pickling.
-- Shuffle partitions default to a CPU-proportional number locally; on a
-  real cluster AQE coalescing makes the initial number far less critical.
+- Shuffle partitions default to the session's task slots
+  (``defaultParallelism``). A stateful streaming micro-batch pays one
+  Python UDF start and one sink-writer start per state partition, and AQE
+  never coalesces micro-batches: on 4 cores, 32 partitions made a batch
+  ~36 tasks and ~9 s, one per core ~6 tasks and ~2 s.
 """
 
 from __future__ import annotations
@@ -21,6 +24,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 
 _DEFAULTS = {
     # determinism
@@ -91,7 +96,6 @@ _DEFAULTS = {
         str(1 << 28),
     # local runs read small parquet; keep partition count sane
     "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
-    "spark.sql.shuffle.partitions": "32",
     # silence the UI in test harnesses
     "spark.ui.enabled": "false",
     "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
@@ -149,8 +153,10 @@ def parquet_row_bound(data_dir: str) -> int | None:
     nothing to know). Tables are ``*.parquet`` files or directories of
     part files; the max across tables is a safe upper bound for any
     runtime filter's creation-side key count, because every creation
-    side is a filtered subset of some table. Returns None when nothing
-    readable is found — callers keep the static fallback grid."""
+    side is a filtered subset of some table. Returns None when no rows
+    are found — callers keep the static fallback grid. An unreadable
+    footer raises, naming its file: counting it as empty would silently
+    undersize the grid."""
     try:
         import pyarrow.parquet as pq
     except ImportError:  # pragma: no cover - pyarrow is baked in
@@ -161,8 +167,8 @@ def parquet_row_bound(data_dir: str) -> int | None:
     def file_rows(path: str) -> int:
         try:
             return pq.ParquetFile(path).metadata.num_rows
-        except Exception:
-            return 0
+        except (OSError, ValueError) as e:
+            raise ValueError(f"unreadable parquet footer: {path}: {e}") from e
 
     best = 0
     for entry in sorted(os.listdir(data_dir)):
@@ -184,7 +190,9 @@ def session_conf(extra_conf: dict[str, str] | None = None,
     :func:`parquet_row_bound` + :func:`bloom_filter_sizing`, so no
     hand-set constant survives a decade jump (the r14 sf100 lesson —
     both static cliffs were invisible until the next decade ran).
-    Explicit ``extra_conf`` still wins over the derived values."""
+    Explicit ``extra_conf`` still wins over the derived values.
+    Shuffle partitions are left to :func:`shuffle_partitions` unless
+    ``extra_conf`` sets them."""
     conf = dict(_DEFAULTS)
     if data_dir is not None:
         bound = parquet_row_bound(data_dir)
@@ -193,6 +201,13 @@ def session_conf(extra_conf: dict[str, str] | None = None,
     if extra_conf:
         conf.update(extra_conf)
     return conf
+
+
+def shuffle_partitions(conf: dict[str, str], parallelism: int) -> str:
+    """``spark.sql.shuffle.partitions`` for a session with ``parallelism``
+    task slots: an explicit value in ``conf`` wins, else one partition
+    per slot."""
+    return conf.get(SHUFFLE_PARTITIONS, str(parallelism))
 
 
 def get_spark(app_name: str = "pravega-flink-ai-flow-spark",
@@ -206,15 +221,21 @@ def get_spark(app_name: str = "pravega-flink-ai-flow-spark",
     ``data_dir`` self-sizes the runtime-bloom grid from that tier's
     parquet footers (see :func:`session_conf`); note getOrCreate reuses
     a live session, so sizing only applies to the session that actually
-    starts the JVM.
+    starts the JVM. Shuffle partitions are sized to the started
+    session's ``defaultParallelism`` (``local[N]`` gives N, a cluster its
+    executor cores) unless ``extra_conf`` sets them.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
+    conf = session_conf(extra_conf, data_dir)
     builder = SparkSession.builder.appName(app_name).master(master)
-    for k, v in session_conf(extra_conf, data_dir).items():
+    for k, v in conf.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    spark.conf.set(SHUFFLE_PARTITIONS, shuffle_partitions(
+        conf, spark.sparkContext.defaultParallelism))
+    return spark
 
 
 def stop_spark() -> None:

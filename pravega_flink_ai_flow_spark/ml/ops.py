@@ -122,14 +122,7 @@ def predict(df: DataFrame, *, registry: ModelRegistry, model_name: str,
     deployed = registry.get_deployed_model_version(model_name)
     if deployed is None:
         raise RuntimeError(f"no deployed version for model {model_name!r}")
-    model_path = deployed.model_path
-
-    @pandas_udf("double")
-    def mypred(*cols: pd.Series) -> pd.Series:
-        model = _model_cache(model_path)
-        x = pd.concat(cols, axis=1).values
-        return pd.Series(model.predict(x).astype("float64"))
-
+    mypred = _predict_udf(deployed.model_path)
     return df.withColumn(output_col, mypred(*[F.col(c) for c in feature_cols]))
 
 
@@ -142,7 +135,14 @@ def register_predict_udf(spark, *, registry: ModelRegistry, model_name: str,
     deployed = registry.get_deployed_model_version(model_name)
     if deployed is None:
         raise RuntimeError(f"no deployed version for model {model_name!r}")
-    model_path = deployed.model_path
+    mypred = _predict_udf(deployed.model_path)
+    spark.udf.register(udf_name, mypred)
+    return mypred
+
+
+def _predict_udf(model_path: str):
+    """The deployed model at ``model_path`` as a float64 pandas UDF over
+    its feature columns."""
 
     @pandas_udf("double")
     def mypred(*cols: pd.Series) -> pd.Series:
@@ -150,7 +150,6 @@ def register_predict_udf(spark, *, registry: ModelRegistry, model_name: str,
         x = pd.concat(cols, axis=1).values
         return pd.Series(model.predict(x).astype("float64"))
 
-    spark.udf.register(udf_name, mypred)
     return mypred
 
 

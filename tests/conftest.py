@@ -13,8 +13,7 @@ SF_SMOKE = "/root/testdata/sf0.001"
 @pytest.fixture(scope="session")
 def spark():
     from pravega_flink_ai_flow_spark.engine.session import get_spark
-    s = get_spark("pytest", master="local[4]",
-                  extra_conf={"spark.sql.shuffle.partitions": "4"})
+    s = get_spark("pytest", master="local[4]")
     yield s
     s.stop()
 

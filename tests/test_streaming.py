@@ -855,6 +855,52 @@ def test_streaming_dedup_within_watermark_bounded_state(spark, tmp_workdir):
     assert state is None or state["numRowsTotal"] <= 1
 
 
+def test_stateful_stream_partitions_follow_session_parallelism(
+        spark, tmp_workdir):
+    """A stateful operator takes its partition count from the engine
+    session, which sizes it to the task slots: over the Pravega socket
+    source the dedup state runs one partition per core, because every
+    state partition costs each micro-batch one more task."""
+    from pravega_flink_ai_flow_spark.io import pravega_source
+    from pravega_flink_ai_flow_spark.io.pravega_server import (
+        PravegaEmulatorServer)
+
+    srv = PravegaEmulatorServer()
+    srv.start()
+    try:
+        srv.append("scope", "ev", [
+            {"event_id": i % 40, "ts": 1_700_000_000_000_000 + i * 1_000_000}
+            for i in range(60)])
+        pravega_source.register(spark)
+        sdf = (spark.readStream.format("pravega_socket")
+               .schema("event_id bigint, ts timestamp")
+               .option("controller", srv.controller_uri)
+               .option("scope", "scope").option("stream", "ev").load())
+        deduped = st.stream_dedup_within_watermark(
+            sdf, ["event_id"], "ts", "5 minutes")
+        q = (deduped.writeStream.format("memory").queryName("dedup_parts")
+             .option("checkpointLocation", os.path.join(tmp_workdir, "ck"))
+             .trigger(availableNow=True).start())
+        assert q.awaitTermination(120)
+    finally:
+        srv.stop()
+    assert spark.sql("SELECT COUNT(*) c FROM dedup_parts").first().c == 40
+    state = q.lastProgress["stateOperators"][0]
+    assert state["numShufflePartitions"] == \
+        spark.sparkContext.defaultParallelism
+
+
+def test_explicit_shuffle_partitions_win_over_parallelism():
+    """The session's parallelism only fills in shuffle partitions that
+    the caller's ``extra_conf`` leaves unset."""
+    from pravega_flink_ai_flow_spark.engine.session import (
+        SHUFFLE_PARTITIONS, session_conf, shuffle_partitions)
+
+    assert shuffle_partitions(session_conf(), 4) == "4"
+    explicit = session_conf(extra_conf={SHUFFLE_PARTITIONS: "7"})
+    assert shuffle_partitions(explicit, 4) == "7"
+
+
 def test_stateful_ewma_exact_across_batches(spark, tmp_workdir):
     """T8: the streaming EWMA carries its recursion across micro-batches
     — the drained result must equal a single sequential numpy replica
