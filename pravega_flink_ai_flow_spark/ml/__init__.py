@@ -1,12 +1,8 @@
 from .models import KNNClassifier, load_model, save_model
 from .registry import (ModelRegistry, ModelVersionStage, ModelEvent,
-                       SqliteModelRegistry, MySQLModelRegistry,
-                       DocumentModelRegistry, FileDocumentStore,
-                       MongoDocumentStore, open_registry)
+                       SqliteModelRegistry, open_registry)
 from . import ops
 
 __all__ = ["KNNClassifier", "load_model", "save_model",
            "ModelRegistry", "ModelVersionStage", "ModelEvent",
-           "SqliteModelRegistry", "MySQLModelRegistry",
-           "DocumentModelRegistry", "FileDocumentStore",
-           "MongoDocumentStore", "open_registry", "ops"]
+           "SqliteModelRegistry", "open_registry", "ops"]

@@ -4,7 +4,7 @@ Each query exercises a real engine source/sink round-trip and is verified
 against the oracle reading the original parquet directly — so a format
 bug (quoting, nulls, timestamp rendering) breaks the hash.
 
-Round-trips write under ``.scratch/`` inside the repo (the engine never
+Round-trips write under ``.scratch/<pid>/`` inside the repo (the engine never
 touches paths outside ``/root/repo``).
 """
 
@@ -24,14 +24,38 @@ from ..io.pravega_sim import StreamDir
 _SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".scratch")
 
 
+def _pid_alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:   # alive, owned by another user
+        pass
+    return True
+
+
+def _own_scratch() -> str:
+    """This process's namespace ``.scratch/<pid>/``. Concurrent
+    harnesses each get their own, so one never deletes another's live
+    output; the first call drops the namespaces of dead processes."""
+    own = os.path.join(_SCRATCH, str(os.getpid()))
+    if not os.path.isdir(own):
+        os.makedirs(_SCRATCH, exist_ok=True)
+        for d in os.listdir(_SCRATCH):
+            if d.isdigit() and not _pid_alive(int(d)):
+                shutil.rmtree(os.path.join(_SCRATCH, d), ignore_errors=True)
+        os.makedirs(own, exist_ok=True)
+    return own
+
+
 def _tmpdir(prefix: str) -> str:
-    os.makedirs(_SCRATCH, exist_ok=True)
-    # drop leftovers from previous runs of the same query so repeated
-    # harness invocations don't accumulate scratch dirs
-    for old in os.listdir(_SCRATCH):
+    own = _own_scratch()
+    # drop this process's earlier runs of the same query so repeated
+    # calls don't accumulate scratch dirs
+    for old in os.listdir(own):
         if old.startswith(prefix):
-            shutil.rmtree(os.path.join(_SCRATCH, old), ignore_errors=True)
-    path = tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH)
+            shutil.rmtree(os.path.join(own, old), ignore_errors=True)
+    path = tempfile.mkdtemp(prefix=prefix, dir=own)
     shutil.rmtree(path)  # Spark writers want to create the dir themselves
     return path
 

@@ -289,11 +289,12 @@ def test_s19_compaction_layout_contract(spark):
     import os
 
     from pravega_flink_ai_flow_spark.queries import load_all
-    from pravega_flink_ai_flow_spark.queries.sources import _SCRATCH
+    from pravega_flink_ai_flow_spark.queries.sources import _own_scratch
 
     load_all()["s19_compaction"].fn(spark, SF).collect()
-    small = glob.glob(os.path.join(_SCRATCH, "s19_small_*", "*.parquet"))
-    out = glob.glob(os.path.join(_SCRATCH, "s19_compact_*", "*.parquet"))
+    scratch = _own_scratch()
+    small = glob.glob(os.path.join(scratch, "s19_small_*", "*.parquet"))
+    out = glob.glob(os.path.join(scratch, "s19_compact_*", "*.parquet"))
     assert len(small) >= 30
     assert 1 <= len(out) <= 4
     ranges = []

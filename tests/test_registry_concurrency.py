@@ -8,31 +8,23 @@ that had correctness-only coverage. Two real concerns:
    sequence is exactly 1..N with no duplicate and the stage machine
    lands consistent.
 
-2. The docstore backend's ``max+1`` allocation was a read-modify-write
-   across two separately-locked store ops — two in-process threads
-   could both read max=N and insert duplicate N+1 versions. The
-   allocation lock added with this suite closes it; the threaded test
-   here is the regression pin.
-
-3. Cross-PROCESS docstore writers (r12 verdict #5 — previously the
-   documented gap): FileDocumentStore now takes an exclusive flock on
-   the store's lockfile for every op and every multi-op transaction,
-   so separate OS processes hammering one store root must allocate
-   exactly 1..N like the SQLite backend does. Same 3-process protocol,
-   same assertions.
+2. Version allocation is a ``max+1`` read-modify-write in both
+   backends, so THREADS sharing one registry object must not both read
+   max=N and both take N+1: the JSON backend allocates under its
+   in-process lock, the SQLite backend under its write lock.
 """
 
 from __future__ import annotations
 
 import json
 import multiprocessing as mp
-import os
 import threading
 import time
 
+import pytest
+
 from pravega_flink_ai_flow_spark.ml.registry import (
-    DocumentModelRegistry,
-    FileDocumentStore,
+    ModelRegistry,
     ModelVersionStage,
     SqliteModelRegistry,
 )
@@ -93,7 +85,7 @@ def test_sqlite_concurrent_writers_allocate_unique_versions(tmp_path):
           f"({rate:.0f} mutations/s)")
 
 
-def _docstore_thread(reg, worker: int, got: list) -> None:
+def _writer_thread(reg, worker: int, got: list) -> None:
     for i in range(N_PER_PROC):
         mv = reg.register_model_version("m", f"/models/t{worker}/{i}")
         reg.update_model_version("m", mv.version,
@@ -101,14 +93,18 @@ def _docstore_thread(reg, worker: int, got: list) -> None:
         got.append(mv.version)
 
 
-def test_docstore_concurrent_threads_allocate_unique_versions(tmp_path):
-    """Regression pin for the max+1 read-modify-write race: before the
-    allocation lock, 4 threads reliably produced duplicate version
-    numbers (both read max=N, both inserted N+1)."""
-    reg = DocumentModelRegistry(FileDocumentStore(str(tmp_path / "doc")))
+@pytest.mark.parametrize("open_reg", [
+    pytest.param(lambda d: ModelRegistry(str(d / "r.json")), id="json"),
+    pytest.param(lambda d: SqliteModelRegistry(str(d / "a.db")),
+                 id="sqlite"),
+])
+def test_concurrent_threads_allocate_unique_versions(tmp_path, open_reg):
+    """4 threads sharing one registry object allocate exactly 1..N: no
+    two threads read the same max and both take max+1."""
+    reg = open_reg(tmp_path)
     results: list[list] = [[] for _ in range(4)]
     t0 = time.perf_counter()
-    threads = [threading.Thread(target=_docstore_thread,
+    threads = [threading.Thread(target=_writer_thread,
                                 args=(reg, w, results[w]))
                for w in range(4)]
     for t in threads:
@@ -119,74 +115,13 @@ def test_docstore_concurrent_threads_allocate_unique_versions(tmp_path):
     allocated = sorted(v for r in results for v in r)
     n = 4 * N_PER_PROC
     assert allocated == list(range(1, n + 1)), allocated
-    # the models COLLECTION races the same way versions did (find
-    # then insert under separate store locks) — exactly one doc
-    # must exist (r12 review #3)
-    assert len(reg._store.find("models", {"name": "m"})) == 1
-    versions = reg.versions("m")
-    assert len(versions) == n
+    # a fresh object over the same store sees every promotion
+    versions = open_reg(tmp_path).versions("m")
+    assert [v.version for v in versions] == list(range(1, n + 1))
     assert all(v.current_stage == ModelVersionStage.VALIDATED
                for v in versions)
-    print(f"docstore registry: 4 writer threads, {n} versions + "
+    print(f"{type(reg).__name__}: 4 writer threads, {n} versions + "
           f"{n} promotions in {wall:.2f}s ({2 * n / wall:.0f} mutations/s)")
-
-
-def _docstore_writer(root: str, worker: int, out_path: str,
-                     start_at: float) -> None:
-    reg = DocumentModelRegistry(FileDocumentStore(root))
-    # start barrier: without it spawn's staggered startup lets writers
-    # run mostly sequentially and the race window never opens (measured:
-    # unsynchronized, the UNPROTECTED store passed this protocol; with
-    # the barrier it allocates ~45 distinct of 120 — reliably caught)
-    while time.time() < start_at:
-        time.sleep(0.001)
-    got = []
-    for i in range(N_PER_PROC):
-        mv = reg.register_model_version("m", f"/models/p{worker}/{i}")
-        reg.update_model_version("m", mv.version,
-                                 ModelVersionStage.VALIDATED)
-        got.append(mv.version)
-    with open(out_path, "w") as f:
-        json.dump(got, f)
-
-
-def test_docstore_concurrent_processes_allocate_unique_versions(tmp_path):
-    """Cross-PROCESS allocation over one file-backed docstore (r12
-    verdict #5): before the flock transaction, three writer processes'
-    max+1 allocations raced at the file level (last-replace-wins lost
-    whole inserts AND duplicated version numbers). Now the exact
-    SQLite-suite assertions must hold: allocation sequence 1..N, no
-    duplicate, no gap, stage machine consistent."""
-    root = str(tmp_path / "doc")
-    ctx = mp.get_context("spawn")
-    outs = [str(tmp_path / f"p{w}.json") for w in range(N_PROCS)]
-    start_at = time.time() + 3.0
-    t0 = time.perf_counter()
-    procs = [ctx.Process(target=_docstore_writer,
-                         args=(root, w, outs[w], start_at))
-             for w in range(N_PROCS)]
-    for p in procs:
-        p.start()
-    for p in procs:
-        p.join(120)
-        assert p.exitcode == 0
-    wall = time.perf_counter() - t0
-
-    per_proc = [json.load(open(o)) for o in outs]
-    allocated = sorted(v for vs in per_proc for v in vs)
-    n = N_PROCS * N_PER_PROC
-    assert allocated == list(range(1, n + 1)), allocated
-
-    reg = DocumentModelRegistry(FileDocumentStore(root))
-    # exactly one models doc despite three processes racing find+insert
-    assert len(reg._store.find("models", {"name": "m"})) == 1
-    versions = reg.versions("m")
-    assert len(versions) == n
-    assert all(v.current_stage == ModelVersionStage.VALIDATED
-               for v in versions)
-    print(f"docstore registry: {N_PROCS} writer PROCESSES, "
-          f"{n} versions + {n} promotions in {wall:.2f}s "
-          f"({2 * n / wall:.0f} mutations/s)")
 
 
 def test_sqlite_stage_visibility_across_fresh_connections(tmp_path):

@@ -13,6 +13,8 @@ import subprocess
 import sys
 import textwrap
 
+import pytest
+
 from pravega_flink_ai_flow_spark.ml import (
     ModelRegistry, ModelVersionStage, SqliteModelRegistry, open_registry,
 )
@@ -25,6 +27,40 @@ def test_open_registry_routing(tmp_workdir):
     assert isinstance(sq, SqliteModelRegistry)
     js = open_registry(os.path.join(tmp_workdir, "registry.json"))
     assert type(js) is ModelRegistry
+
+
+@pytest.mark.parametrize("scheme", ["mysql", "mongodb", "docstore",
+                                    "postgresql"])
+def test_open_registry_rejects_other_schemes(tmp_path, monkeypatch, scheme):
+    """Only ``sqlite:///`` and bare JSON paths are stores; any other
+    ``scheme://`` fails at open time, naming both accepted forms, and
+    leaves nothing behind."""
+    monkeypatch.chdir(tmp_path)
+    with pytest.raises(ValueError, match="sqlite:///.*JSON file path"):
+        open_registry(f"{scheme}://h/db")
+    assert os.listdir(tmp_path) == []
+
+
+def test_json_registry_survives_a_crash_mid_write(tmp_path, monkeypatch):
+    """A write that dies halfway through the dump leaves the previous
+    registry.json loadable with every earlier version."""
+    path = str(tmp_path / "registry.json")
+    reg = ModelRegistry(path)
+    reg.register_model_version("m", "/p1")
+    reg.update_model_version("m", 1, ModelVersionStage.DEPLOYED)
+
+    def torn_dump(obj, f, **kw):
+        f.write('[{"name": "m", "versions": [')
+        raise OSError("process died mid-write")
+
+    monkeypatch.setattr("json.dump", torn_dump)
+    with pytest.raises(OSError):
+        reg.register_model_version("m", "/p2")
+    monkeypatch.undo()
+
+    again = ModelRegistry(path)
+    assert [v.version for v in again.versions("m")] == [1]
+    assert again.get_deployed_model_version("m").model_path == "/p1"
 
 
 def test_sqlite_lifecycle_matches_json_backend(tmp_workdir):
@@ -49,7 +85,6 @@ def test_sqlite_lifecycle_matches_json_backend(tmp_workdir):
                       ("MODEL_DEPLOYED", 1)]
 
     # unknown version: KeyError, like the JSON backend
-    import pytest
     with pytest.raises(KeyError):
         reg.update_model_version("wide_and_deep", 99,
                                  ModelVersionStage.DEPLOYED)
