@@ -371,9 +371,9 @@ def entry(spark: SparkSession) -> DataFrame:
 #       plans/r16/u7_scd2_history_audit.txt), so deferring them is
 #       the safe cut;
 #   (b) the 12 queries whose OPTIMIZED PLAN changed this round,
-#       proven by the worktree plan-diff (tools/plan_fingerprint.py,
-#       normalized explain("formatted") of all 219 at 797d236 vs
-#       HEAD — the diff, not guesswork, picked this set):
+#       proven by the worktree plan-diff (`tools/plans.py
+#       fingerprint`, normalized explain("formatted") of all 219 at
+#       797d236 vs HEAD — the diff, not guesswork, picked this set):
 #       l2_minhash_lsh_pairs (band/bucket plan trims),
 #       l3_lsh_topk + l3_recall_eval (vector-free band rows + skinny
 #       pair dedup), l3_ivf_topk + l3_ivf_kmeans_topk +

@@ -116,7 +116,7 @@ def normalize_layout(sf_dir: str) -> str:
 # coalescing/skew-splitting is what keeps plans healthy. At sf0.1 every
 # AQE query-stage materialization adds a fixed re-optimization round
 # trip (~0.1 s/stage) that is pure latency on data this small, and the
-# static plans here are already audited (tools/explain_audit.py); shuffle
+# static plans here are already audited (tools/plans.py census); shuffle
 # partitions and split sizes are sized so ~60 MB tables still scan and
 # shuffle with full 32-core parallelism.
 BENCH_CONF = {

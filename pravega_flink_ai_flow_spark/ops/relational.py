@@ -46,21 +46,21 @@ def salted_join(left: DataFrame, right: DataFrame, *,
     blanket salting replicates the ENTIRE dim side ``salt``× whether or
     not a key is hot, and that replication was 7.2× of the whole join's
     sf10 wall on uniform keys (9.88 s salted vs 1.38 s plain —
-    tools/explain_r13_tails.py; events.user_id max/avg = 99/67, zero
-    hot keys). With ``hot_threshold`` set, one map-combined count
-    aggregate finds the left keys with more rows than the threshold and
-    ONLY those keys get the salt treatment — each right row explodes to
-    ``salt`` copies when hot, 1 copy otherwise, and left rows salt to 0
-    unless hot. Uniform data degenerates to the plain join (empty hot
-    set short-circuits before touching the plan); a genuinely hot key
-    still fans across ``salt`` reducers (pytest-pinned on synthetic
-    skew). The detection aggregate runs once at plan-construction time
-    (driver collect guarded by ``max_hot_keys``: more hot keys than
-    that → fall back to blanket salting, the distributed path, rather
-    than grow the literal set) — the dispatch-signal pattern the dedup
-    family already uses. At 100 TB the threshold is what you want
-    anyway: a key is only worth salting when its row count would
-    straggle one reducer.
+    PERFORMANCE.md "The six r12 sf10 tails"; events.user_id max/avg =
+    99/67, zero hot keys). With ``hot_threshold`` set, one map-combined
+    count aggregate finds the left keys with more rows than the
+    threshold and ONLY those keys get the salt treatment — each right
+    row explodes to ``salt`` copies when hot, 1 copy otherwise, and left
+    rows salt to 0 unless hot. Uniform data degenerates to the plain
+    join (empty hot set short-circuits before touching the plan); a
+    genuinely hot key still fans across ``salt`` reducers (pytest-pinned
+    on synthetic skew). The detection aggregate runs once at
+    plan-construction time (driver collect guarded by ``max_hot_keys``:
+    more hot keys than that → fall back to blanket salting, the
+    distributed path, rather than grow the literal set) — the
+    dispatch-signal pattern the dedup family already uses. At 100 TB the
+    threshold is what you want anyway: a key is only worth salting when
+    its row count would straggle one reducer.
 
     Detection is COST-BOUNDED and can be SCALE-RELATIVE (r14, from the
     r13 verdict's two scale-honesty notes):
@@ -68,25 +68,24 @@ def salted_join(left: DataFrame, right: DataFrame, *,
     * The detection pass reads only the column-pruned KEY projection of
       ``left`` (never the full fact rows) with a map-side-combined
       count — measured at the sf10 tier it costs 0.72 s against the
-      join's own 1.1 s wall (tools/explain_r13_tails.py detection),
-      i.e. bounded under one narrow column scan, not a second full
-      read. We MEASURED row-level Bernoulli sampling as the further
-      remedy and it does NOT pay on parquet: ``sample(0.1)`` still
-      decodes every key page and the per-row rand() costs what the
+      join's own 1.1 s wall (PERFORMANCE.md "salted_join hot-key
+      detection cost"), i.e. bounded under one narrow column scan, not a
+      second full read. We MEASURED row-level Bernoulli sampling as the
+      further remedy and it does NOT pay on parquet: ``sample(0.1)``
+      still decodes every key page and the per-row rand() costs what the
       smaller hash-aggregate saves (0.765 s sampled vs 0.719 s full at
       sf10) — so the default is the exact full pass and
       ``detect_sample`` stays available for CPU-bound inputs (wide
       string keys, row formats) where decode isn't the floor. Hotness
-      only needs order-of-magnitude precision, so sampling is safe
-      where it does pay: salting is row-identical by construction —
-      a misclassified borderline key changes the plan, never the
-      RESULT. Sampled absolute thresholds are noise-floored (the
-      fraction is raised so the sampled threshold is ≥50 expected
-      rows). Callers who already maintain key statistics — a table
-      format's column stats, a prior round's counts — pass them via
-      ``key_stats`` (first column = key, second = true row count) and
-      skip the scan entirely: THAT is the 100 TB path, where any
-      detection scan is a TB-scale read.
+      only needs order-of-magnitude precision, so sampling is safe where
+      it does pay: salting is row-identical by construction — a
+      misclassified borderline key changes the plan, never the RESULT.
+      Sampled absolute thresholds are noise-floored (the fraction is
+      raised so the sampled threshold is ≥50 expected rows). Callers who
+      already maintain key statistics — a table format's column stats, a
+      prior round's counts — pass them via ``key_stats`` (first column =
+      key, second = true row count) and skip the scan entirely: THAT is
+      the 100 TB path, where any detection scan is a TB-scale read.
     * ``hot_rel_threshold`` expresses the threshold as a MULTIPLE OF
       THE MEAN rows-per-key measured by the same detection pass
       (mutually exclusive with the absolute ``hot_threshold``). An

@@ -435,26 +435,27 @@ def j11_salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     key are split across 8 salts and the dimension rows of that key
     replicated 8×, so no single reducer owns a hot key — row-identical
     to the plain join the oracle computes. Re-planned r13 to
-    MEASURED-hot-only salting (tools/explain_r13_tails.py: blanket
-    salting — every dim row replicated 8× regardless of heat — was
-    7.2× of the join's sf10 wall, 9.88 s vs 1.38 s plain, on keys whose
-    max/avg is 99/67, i.e. zero actual skew; the r12 gate tail's whole
-    8.15× ratio was that constant). The threshold is SCALE-RELATIVE
-    (r14, from the r13 verdict): 15× the mean rows-per-key measured by
-    the same detection pass — an absolute count is dishonest on data
-    where rows-per-key grows with volume (every key eventually crosses
-    it and the fallback reverts to blanket salting), while k×mean keeps
-    "hot = disproportionate share" meaningful at every scale. On this
-    table the mean is the SF-invariant 67 rows, so 15× reproduces the
-    old 1000-row bar exactly. Detection cost is bounded and measured:
-    it reads only the column-pruned key projection — 0.72 s at sf10 vs
-    this join's own 1.1 s wall (tools/explain_r13_tails.py detection;
-    row-level sampling measured as NOT paying on parquet — see
-    ops/relational.py — and key_stats is the reuse path). The salted arm
-    is pinned on synthetic skew (test_operators) AND gate-proven on
-    genuinely skewed keys by j16_hot_salted_join, with a plan contract
-    asserting this query degenerates to the plain join while j16
-    replicates. See ``ops.relational.salted_join``."""
+    MEASURED-hot-only salting (PERFORMANCE.md "The six r12 sf10 tails":
+    blanket salting — every dim row replicated 8× regardless of heat —
+    was 7.2× of the join's sf10 wall, 9.88 s vs 1.38 s plain, on keys
+    whose max/avg is 99/67, i.e. zero actual skew; the r12 gate tail's
+    whole 8.15× ratio was that constant). The threshold is
+    SCALE-RELATIVE (r14, from the r13 verdict): 15× the mean
+    rows-per-key measured by the same detection pass — an absolute count
+    is dishonest on data where rows-per-key grows with volume (every key
+    eventually crosses it and the fallback reverts to blanket salting),
+    while k×mean keeps "hot = disproportionate share" meaningful at
+    every scale. On this table the mean is the SF-invariant 67 rows, so
+    15× reproduces the old 1000-row bar exactly. Detection cost is
+    bounded and measured: it reads only the column-pruned key projection
+    — 0.72 s at sf10 vs this join's own 1.1 s wall (PERFORMANCE.md
+    "salted_join hot-key detection cost"; row-level sampling measured as
+    NOT paying on parquet — see ops/relational.py — and key_stats is the
+    reuse path). The salted arm is pinned on synthetic skew
+    (test_operators) AND gate-proven on genuinely skewed keys by
+    j16_hot_salted_join, with a plan contract asserting this query
+    degenerates to the plain join while j16 replicates. See
+    ``ops.relational.salted_join``."""
     from ..ops.relational import salted_join
     events, customer = tables(spark, sf_dir, "events", "customer")
     joined = salted_join(events, customer,

@@ -381,7 +381,7 @@ def s14_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                     if sib.fullmatch(d) and d != name:
                         # drop the catalog entry FIRST: a same-session
                         # sibling (possible only when the sizing rule is
-                        # monkeypatched, e.g. tools/explain_s14_l2edit)
+                        # monkeypatched, as the sf10 s14 measurement did)
                         # must not keep a dangling table over a deleted
                         # location
                         spark.sql(

@@ -340,6 +340,33 @@ def test_ivf_topk_recall_on_testdata(spark):
         assert recall > 8 / n_cells, (sf, recall, n_cells)
 
 
+def test_ivf_candidates_are_unique_before_ranking(spark):
+    """``ivf_topk`` ranks its cell-join candidates without a dedup: that
+    is exact only while each corpus vector sits in one cell and a
+    query's nprobe cells are distinct, so no (query, corpus) pair meets
+    twice. Built here the way l3_ivf_topk builds it at sf0.001."""
+    from pravega_flink_ai_flow_spark.ops import similarity as sim
+    from pravega_flink_ai_flow_spark.queries import tables
+    from tests.conftest import SF_SMOKE
+
+    (emb,) = tables(spark, SF_SMOKE, "embeddings")
+    corpus = emb.select(F.col("vec_id").alias("c_id"),
+                        F.col("embedding").alias("c_vec"))
+    queries = (emb.filter(F.col("vec_id") < 10)
+               .select(F.col("vec_id").alias("q_id"),
+                       F.col("embedding").alias("q_vec")))
+    cents = sim.ivf_train_quantizer(corpus)
+    assert len(cents) > 8, "vacuous: nprobe=8 would probe every cell"
+    assigned = sim.nearest_refs_arrow(corpus, id_col="c_id", vec_col="c_vec",
+                                      ref_rows=cents, k=1, out_col="cell")
+    probes = sim.nearest_refs_arrow(queries, id_col="q_id", vec_col="q_vec",
+                                    ref_rows=cents, k=8, out_col="cell")
+    pairs = [(r.q_id, r.c_id) for r in
+             assigned.join(probes, "cell").select("q_id", "c_id").collect()]
+    assert len(pairs) > 10
+    assert len(pairs) == len(set(pairs))
+
+
 def test_rolling_hash_is_order_sensitive(spark):
     df = spark.createDataFrame(
         [(1, "alpha beta gamma"), (2, "gamma beta alpha"), (3, "alpha beta gamma")],

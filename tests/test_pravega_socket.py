@@ -121,9 +121,10 @@ def test_stream_admission_control(spark, server, tmp_workdir):
     830 ms/batch under load and went red here). The deadline now binds
     only on STALL: as long as the sink's row count keeps advancing the
     drain is healthy and the poll keeps waiting; 60 s with zero
-    progress is the genuine-hang bar. The batch-shape asserts are
-    unchanged — they follow from the 100-row admission cap, not from
-    trigger cadence."""
+    progress is the genuine-hang bar, and 600 s overall bounds a drain
+    that keeps advancing too slowly to finish. The batch-shape asserts
+    are unchanged — they follow from the 100-row admission cap, not
+    from trigger cadence."""
     server.append("scope", "s2", _events(0, 250))
     pravega_source.register(spark)
     sdf = (spark.readStream.format("pravega_socket")
@@ -138,8 +139,10 @@ def test_stream_admission_control(spark, server, tmp_workdir):
          .trigger(processingTime="200 milliseconds").start())
     try:
         import time
-        seen, last_advance = -1, time.time()
-        while time.time() - last_advance < 60:
+        seen, start = -1, time.time()
+        last_advance = start
+        while (time.time() - last_advance < 60
+               and time.time() - start < 600):
             c = spark.sql(f"SELECT COUNT(*) c FROM {name}").first().c
             if c == 250:
                 break
