@@ -28,370 +28,16 @@ def entry(spark: SparkSession) -> DataFrame:
     return registry["a1_pricing_summary"].fn(spark, "/root/testdata/sf0.001")
 
 
-# Driver-window rotation. The external gate records only the FIRST 50
-# queries in *insertion* order each round. Rounds 1-3 all recorded the
-# same window (a10_unpivot → l3_ivf_topk): round 2's `a0_` key-prefix
-# rotation was a no-op because the dict was built sorted by CANONICAL
-# name, so insertion order never changed (VERDICT.md r3, wrong #2).
-# Fixed: the export dicts are built sorted by EXPORT key, so `a0_`-
-# prefixed names genuinely enter the window. Round 4 recorded the 50
-# oldest-never-recorded (all TPC-H, w1-w8, u*, o1-o3, p1-p5, t3-t7,
-# m2/m3). ROUND 5 `_PROMOTED` = the 47 queries with NO driver record in
-# any of CORRECTNESS_r01-r04 (every l4_*/l5_*/l6_*, s1-s11, p6-p8,
-# t11-t15, w9/w10, a5_grouping_id/a14/a15, f_regex, j13, m4, o4)
-# padded to exactly 50 with the three queries fixed or re-planned this
-# round, so their fixes are gate-proven: tpch_q12 + t5_session_window
-# (round-4 reds, HUGEINT oracle cast) and l3_cosine_near_dup (declared
-# plan swapped to blocked GEMM). Canonical names are unchanged in the
-# package registry, bench.py and tests; only the exported keys rotate.
-#
-# ROUND 6 (this round): `_PROMOTED` = the 14 round-5 additions that had
-# no driver record + u4_except (de-vacuated this round, needs re-proof),
-# padded to exactly 50 with the stalest greens (l3_lsh_topk r1; the
-# a*/f*/j1-j12 block last recorded r3).
-#
-# ROUND 6 recorded its window clean: 42 hash-green + 8 rows-only-by-
-# design, 0 red (CORRECTNESS_r06). After r6 the staleness census
-# (latest green per query across CORRECTNESS_r01-r06) is: 50 @ r6,
-# 50 @ r5, 47 @ r4, 38 @ r3, 0 never-recorded.
-#
-# ROUND 7 (this round): no reds to re-prove, so `_PROMOTED` =
-#   (a) the 4 queries whose DECLARED PLAN changed this round and whose
-#       r6 green therefore no longer covers the shipped code:
-#       a16 (ntile → distributed rank re-plan), j15 (guarded frontier
-#       broadcast), l2_incremental_dedup (LSH banding → lossless prefix
-#       filter), l4_pmi_collocations (integer-exact df threshold);
-#   (b) all 38 r3-stale queries (the f_* scalar families, j-block,
-#       l1/l2/l3 core, a6-a9);
-#   (c) padded to exactly 50 with the 8 name-ordered oldest r4 greens.
-# ROUND 7 recorded its window clean: 49 hash-green + 1 rows-only-by-
-# design (l2_simhash_pairs, no_oracle), 0 red (CORRECTNESS_r07). After
-# r7 the staleness census is: 50 @ r7, 46 @ r6, 50 @ r5, 39 @ r4.
-#
-# ROUND 8 (this round): no r7 reds to re-prove, so `_PROMOTED` =
-#   (a) l6_duplicate_spans, whose DECLARED PLAN changed this round
-#       (the r7 measured scale-killer: single Arrow gram-hash pass +
-#       window min≠max dup flag replaces the agg+join double-compute) —
-#       its r6 green no longer covers the shipped code — plus the two
-#       NEW queries (never recorded): l5_jpeg_decode (baseline-JPEG
-#       codec, closes the r7 verdict's one remaining seam),
-#       l6_dup_span_removal (C4 duplicated-span REMOVAL transform),
-#       l6_dsir_importance (DSIR importance weighting),
-#       l5_mixed_codec_decode (magic-byte codec routing),
-#       l3_allpairs_topk (direct gate for the ulp-tie-fixed allpairs
-#       scorer), l6_train_test_split (md5-bucket stratified split) and
-#       l3_filtered_topk (metadata-filtered search, filter-before-topk),
-#       l4_feature_hashing (md5-exact HashingTF vectorizer) and
-#       l4_bm25_search (BM25 retrieval, fixed-order float pivot) and
-#       m8_confusion_matrix (per-class precision/recall validation);
-#   (b) all 39 r4-stale queries (the TPC-H block, w1-w8, u-block,
-#       p4/p5, t3/t4/t7);
-#   (c) no pads: the round's 10 new queries fill the window exactly
-#       (a5/a14/a15/f_regex/j13/l3_cosine_near_dup return to the
-#       round-9 pad pool).
-# ROUND 8 recorded its window clean: 50/50 green (47 hash + 3 rows-
-# only), 0 red (CORRECTNESS_r08). Staleness census after r8:
-# 50 @ r8, 50 @ r7, 45 @ r6, 50 @ r5, 8 never-recorded (born after the
-# r8 window filled).
-#
-# ROUND 9: no r8 reds to re-prove, so `_PROMOTED` =
-#   (a) the 8 never-recorded queries (m9_feature_drift_psi, t22-t24,
-#       l2_containment_pairs, l4_gopher_repetition, l3_mmr_rerank,
-#       l3_recall_eval — verified green locally in r8, scheduled here);
-#   (b) the 6 queries whose DECLARED PLAN, OUTPUT or implementation
-#       changed this round, so their prior greens no longer cover the
-#       shipped code: l6_dsir_importance + l4_bigram_lm_score (6-dp
-#       rounding of the order-dependent float mean, r8 advice #2),
-#       l2_incremental_dedup (re-planned to the in-row hash-ordered
-#       prefix generator), l2_ngram_jaccard_pairs (size-join broadcast
-#       auto-select in the shared op, r8 advice #5), l5_jpeg_decode +
-#       l5_mixed_codec_decode (JPEG entropy decoder rebuilt: cached
-#       16-bit-peek Huffman LUT + batched per-component IDCT),
-#       l4_bpe_trained_tokenize (rows-only; per-task distinct-word
-#       encode memo — sf1 encode 15.4 s → 1.8 s), and l5_image_resize +
-#       l5_audio_features + l5_image_phash (spread() ahead of the
-#       interpreter-bound codec passes — new exchange in the plan;
-#       l5_image_decode/l5_audio_decode got the same change and are
-#       already in the window as r5 pads);
-#   (c) padded to exactly 50 with the 32 name-ordered-first r5-stale
-#       queries (l4/l5/l6 text+multimodal block, o4, p6/p7, m4,
-#       a5/a14/a15, f_regex, j13, l3_cosine_near_dup).
-# The 17 r5-stale leftovers (p8, s1/s3_s4/s7/s8/s9/s10/s11, t5/t11-t15,
-# tpch_q12, w9/w10) are the ROUND 10 pad pool.
-# ROUND 9 recorded its window clean: 50/50 green (47 hash + 3 rows-
-# only-by-design), 0 red (CORRECTNESS_r09). Staleness census after r9:
-# 50 @ r9, 47 @ r8, 48 @ r7, 41 @ r6, 17 @ r5 — nothing older.
-#
-# ROUND 10 (this round): no r9 reds to re-prove, so `_PROMOTED` =
-#   (a) the 4 queries whose DECLARED PLAN or shared implementation
-#       changed this round, so their prior greens no longer cover the
-#       shipped code: l2_containment_pairs + l2_incremental_dedup
-#       (now declared THROUGH the measured Zipf auto-dispatchers, r9
-#       verdict #4; the incremental plan also gained the hot-bucket
-#       degrade chunking, r9 advice #3), l2_ngram_jaccard_pairs (the
-#       shared size-broadcast decision is now memoized per corpus, r9
-#       advice #2), and the NEW l5_progressive_decode (SOF2
-#       progressive-JPEG decode — spectral selection + successive
-#       approximation — closing the r9 verdict's #6 seam), plus the
-#       two queries born after the rotation commit and reconciled in
-#       the same commit as their birth per the runbook:
-#       l5_interlaced_decode (Adam7 PNG), l2_dfcap_jaccard_pairs
-#       (df-capped shingling — the measured second-decade Zipf
-#       survivor) and l6_pretrain_pipeline (the e2e quality→dedup→
-#       decontam→export composite), all entering the gate at birth,
-#       and the four other PNG-codec consumers re-promoted when the
-#       shared scanline-filter path was vectorized late in the round
-#       (l5_image_decode, l5_image_phash, l5_image_resize,
-#       l5_mixed_codec_decode — prior greens ran the old codec), and
-#       l3_ivf_topk + l3_recall_eval when the sf1→sf10 gate measured
-#       the fixed-stride IVF quantizer quadratic (12.9× wall at 10×
-#       data) and the nlist≈√N auto-rule replaced it — their outputs
-#       changed with the centroid set (l2_semdedup and
-#       l3_ivf_kmeans_topk changed identically but were already in
-#       the (c) pads below);
-#   (b) the full 17-query r5-stale pad pool named above — after this
-#       window NOTHING in the corpus is older than r6;
-#   (c) padded to exactly 50 with the 20 name-ordered-first r6-stale
-#       greens (a-block aggregates, the l3 ANN quartet). The 21 r6
-#       leftovers (s16_zorder_key — bumped when l5_interlaced_decode
-#       was born mid-round — s15_table_profile and
-#       s14_bucketed_colocated_join — bumped when
-#       l2_dfcap_jaccard_pairs and l6_pretrain_pipeline were born —
-#       m5_softmax_predict and m6_pca_project — bumped for the two
-#       IVF-sizing re-promotions — m7_naive_bayes_predict,
-#       p9_hash_sample_per_group, s12/s13 — bumped for the four l5
-#       re-promotions — s17/s18/s19, t16-t21, u4/u6/u7) are the
-#       ROUND 11 pad pool.
-# ROUND 10 recorded its window clean: 50/50 green (45 hash + 5 rows-
-# only-by-design), 0 red (CORRECTNESS_r10). Staleness census after
-# r10 (recomputed from the artifacts): 50 @ r10, 42 @ r9, 47 @ r8,
-# 47 @ r7, 21 @ r6 — nothing older, 0 never-recorded.
-#
-# ROUND 11: no r10 reds to re-prove, so `_PROMOTED` =
-#   (a) the queries whose DECLARED PLAN or shared implementation
-#       changed this round, so their prior greens no longer cover the
-#       shipped code: l2_containment_pairs + l2_incremental_dedup +
-#       l2_ngram_jaccard_pairs (the shared dedup dispatcher gained the
-#       corpus-scale tier and the remote-URI fingerprint fix — their
-#       declared paths run through that code), l6_sequence_packing +
-#       l6_pretrain_pipeline (pack_id moved to integer div, r10
-#       advice #3), l5_mixed_codec_decode (decode_image seam gained
-#       the GIF route), and the NEW l5_gif_decode (LZW codec —
-#       entering the gate at birth per the r8 precedent);
-#   (b) the full 21-query r6-stale pad pool named above (s12-s19,
-#       m5/m6/m7, p9, t16-t21, u4/u6/u7) — after this window NOTHING
-#       in the corpus is older than r7;
-#   (c) padded to exactly 50 with the 17 name-ordered-first r7-stale
-#       greens (a6-a9+a16, the f_* scalar families). FIVE late (a)
-#       additions took the last pad slots as plans changed mid-round:
-#       l3_allpairs_topk + l3_cosine_near_dup (auto n_blocks rule;
-#       t16, the third consumer, was already in (b)),
-#       l4_text_normalize (one-pass regex re-plan, measured 50.9 s →
-#       1.8 s at sf10), and l4_quality_features + l4_quality_filter
-#       (the shared punct_ratio got the same run-pattern fix). The 30
-#       r7 leftovers (the whole j-block incl. j10/j11, l1/l2/l3 core,
-#       m2/m3, o1-o3, p1-p3, l4_pmi_collocations) are the ROUND 12
-#       pad pool.
-# ROUND 11 recorded its window clean: 50/50 green (48 hash + 2 rows-
-# only-by-design), 0 red (CORRECTNESS_r11). Staleness census after r11:
-# 50 @ r11, 45 @ r10, 37 @ r9, 46 @ r8, 30 @ r7 — nothing older,
-# 0 never-recorded.
-#
-# ROUND 12 (this round): no r11 reds to re-prove, so `_PROMOTED` =
-#   (a) the 4 NEW pinned-artifact scoring twins (entering the gate at
-#       birth per the runbook): m4b/m5b/m6b (frozen ridge/softmax/PCA
-#       weights — the r11 verdict's #1 ask: hash-checkable twins for
-#       the rows-only iterative trainers) and l3b_ivf_pinned_topk
-#       (frozen k-means IVF quantizer probe); plus l3_cosine_near_dup,
-#       whose DECLARED OUTPUT changed this round (r11 advice #1: the
-#       blocked near-dup scorer now decides and emits from the
-#       shape-independent _pair_dots re-score, so emitted cosines moved
-#       in the last ulp and the r11 green no longer covers shipped
-#       code);
-#   (b) the full 30-query r7-stale pool named above (j-block incl.
-#       j10/j11, l1/l2/l3 core, m2/m3, o1-o3, p1-p3,
-#       l4_pmi_collocations) — after this window NOTHING in the corpus
-#       is older than r8. Exactly ONE is rows-only by design
-#       (l2_simhash_pairs: xxhash64 signature has no SQL equivalent),
-#       so the window records ≥49 hash-green + ≤1 no_oracle;
-#   (c) padded to exactly 50 with the 10 name-ordered-first r8-stale
-#       greens (tpch_q13 returned to the pool when l5_quarantine_decode
-#       — the fuzz-backed s18-pattern binary-seam quarantine query —
-#       was born mid-round and took its slot per the runbook; tpch_q11
-#       likewise returned when s14_bucketed_colocated_join re-entered —
-#       its bucket count now scales with data volume, the r11 verdict
-#       #2 fix, so the r11 green no longer covers the shipped write
-#       path; tpch_q10 returned when l3c_pq_pinned_adc — the frozen
-#       -codebook ADC twin for the rows-only PQ trainer — was born, and
-#       t7_dedup_by_key when l6b_quality_score_pinned — the md5-bucket
-#       pinned-weights twin for the rows-only quality classifier —
-#       was, and t4_sliding_window when m10_calibration_bins — the
-#       declared calibration report over the pinned classifier — was).
-#       The 36 r8 leftovers (tpch_q10-q22 block, u-block, w-block,
-#       t4/t7 …) are the ROUND 13 pad pool.
-# ROUND 12 recorded its window clean: 50/50 green (49 hash + 1 rows-
-# only-by-design), 0 red (CORRECTNESS_r12). Staleness census after
-# r12: 50 @ r12, 48 @ r11, 45 @ r10, 37 @ r9, 36 @ r8 — nothing older.
-#
-# ROUND 13 (this round): no r12 reds to re-prove, so `_PROMOTED` =
-#   (a) the ENTIRE 36-query r8-stale leftover pool exactly as the r12
-#       note scheduled it (tpch_q2-q22 block, u-block, w-block,
-#       t4_sliding_window, t7_dedup_by_key) — after this window
-#       NOTHING in the corpus is older than r9;
-#   (b) the 8 queries whose DECLARED PLAN or shared implementation
-#       changed this round, so their prior greens no longer cover the
-#       shipped code: j11_salted_skew_join (re-planned to MEASURED-hot
-#       -only salting, the r12 sf10-tail fix), l2_minhash_lsh_pairs +
-#       l2_semdedup + l3_ivf_topk + l3_ivf_kmeans_topk +
-#       l3b_ivf_pinned_topk + l3_recall_eval (the shared MinHash
-#       signature became a projected-column expression and
-#       nearest_refs_arrow gained the slack-banded sequential-fold
-#       re-score of boundary picks — r12 advice #1), and
-#       l3c_pq_pinned_adc (same advice: the PQ encode argmin now
-#       re-scores float-noise near-ties through the oracle's exact
-#       fold chain). Three of the eight (tpch_q5, tpch_q21, j3 — in
-#       (a) already) additionally carry the r13 bloom-filter sizing
-#       conf, so the whole shuffle-bound tail re-proves in this window;
-#   (c) padded to exactly 50 with the name-ordered-first r9-stale
-#       greens (a14_hll_mergeable_sketch, a15_filtered_agg,
-#       a5_grouping_id, f_regex, j13_asof_tolerance). Two of the 50
-#       are rows-only by design (a14 sketch, l3_ivf_kmeans iterative
-#       trainer), so the window records ≥48 hash-green + ≤2 no_oracle.
-#       l3_mmr_rerank initially held the 6th pad slot and returned to
-#       the pool when j16_hot_salted_join — the NEW query that
-#       gate-proves the SALTED arm of the hot-key join on genuinely
-#       skewed keys (j11's uniform keys degenerate to the plain join,
-#       so that arm was pytest-only) — was born mid-round and took its
-#       slot per the runbook. The 32 r9 leftovers (incl. l3_mmr) are
-#       the ROUND 14 pad pool.
-# ROUND 13 recorded its window clean: 50/50 green (48 hash + 2 rows-
-# only-by-design), 0 red (CORRECTNESS_r13). Staleness census after
-# r13: 50 @ r13, 46 @ r12, 48 @ r11, 41 @ r10, 32 @ r9 — nothing
-# older.
-#
-# ROUND 14 (this round): no r13 reds to re-prove, so `_PROMOTED` =
-#   (a) the ENTIRE 32-query r9-stale pool exactly as the r13 census
-#       left it (l3_mmr_rerank, the l4 text-analysis block, the l5
-#       decode block, the l6 pipeline block, m4/m9, o4/p6/p7,
-#       t22-t24) — after this window NOTHING in the corpus is older
-#       than r10;
-#   (b) the 14 queries whose DECLARED PLAN or shared implementation
-#       changed this round, so their prior greens no longer cover the
-#       shipped code: j11_salted_skew_join + j16_hot_salted_join
-#       (salted_join's hot detection became scale-relative — both now
-#       pass hot_rel_threshold), j9_asof_join + j13_asof_tolerance
-#       (asof_merge's null-struct cast targets are now built
-#       python-side from the input schemas), and the shingle/MinHash
-#       family whose expressions were rebuilt as single-F.expr SQL
-#       (word_shingles / minhash_sig_expr / lsh_band_table /
-#       lsh_candidate_pairs_from_bands — bench plan-build):
-#       l2_minhash_lsh_pairs, l2_ngram_jaccard_pairs,
-#       l2_dfcap_jaccard_pairs, l2_edit_distance_pairs,
-#       l2_containment_pairs, l2_dedup_clusters, l2_dedup_keep,
-#       l2_incremental_dedup, l2_simhash_pairs (rows-only by design),
-#       l6_pretrain_pipeline (l6_benchmark_decontam is also affected
-#       and already in (a));
-#   (c) padded to exactly 50 with the name-ordered-first r10-stale
-#       greens (a10_unpivot, a11_string_agg, a12_corr_covar;
-#       a13_approx_percentile initially held the 4th pad slot and
-#       returned to the pool when l5_webp_decode — the NEW VP8L
-#       lossless codec query, closing the r13 verdict #7 seam — was
-#       born mid-round and took its slot per the runbook).
-#       THREE of the 50 are rows-only by
-#       design, each with a documented reason and (for the trainers) a
-#       hash-green pinned twin: l2_simhash_pairs (xxhash64 signature
-#       has no SQL equivalent), l4_bpe_trained_tokenize (iterative
-#       merge loop; worked-example pytest + l4_bpe_token_count twin),
-#       m4_ridge_predict (iterative trainer; m4b pinned twin). So the
-#       window records ≥47 hash-green + ≤3 no_oracle. The 38 r10
-#       leftovers (incl. a13) are the ROUND 15 pad pool.
-#
-# ROUND 14 recorded its window clean: 50/50 green (47 hash + 3 rows-
-# only-by-design), 0 red (CORRECTNESS_r14). Staleness census after
-# r14: 50 @ r14, 46 @ r13, 41 @ r12, 44 @ r11, 37 @ r10 — nothing
-# older.
-#
-# ROUND 15 (this round): no r14 reds to re-prove, so `_PROMOTED` =
-#   (a) the ENTIRE 37-query r10-stale pool exactly as the r14 census
-#       left it (the s-block roundtrips, a1-a5 aggregate family,
-#       a13/a4 sketches, the l3 index block's r10 members, l4/l5/l6
-#       stragglers, p8, t5/t11-t15, tpch_q12, w9/w10, j14) — after
-#       this window NOTHING in the corpus is older than r11;
-#   (b) the 9 queries whose OPTIMIZED PLAN changed this round, proven
-#       by a worktree plan-diff against the previous revision
-#       (normalized explain("formatted") of all 219 queries — the
-#       diff, not guesswork, picked this set): the `_rank_merge`
-#       selectExpr fusion of the blocked-scorer window merges changed
-#       the l3-IVF family's plan (a redundant Project dropped — the
-#       vectors are now pruned BEFORE the window exchange) and moved
-#       the KNN vote's pred_label alias ahead of its aggregate:
-#       l3_allpairs_topk, l3_ivf_topk, l3_ivf_kmeans_topk,
-#       l3_recall_eval, l3b_ivf_pinned_topk, m2_knn_predict,
-#       m3_model_accuracy, m8_confusion_matrix,
-#       t16_user_similarity_topk. The OTHER queries touched this
-#       round (asof_merge identifier quoting → j9/j13; word_shingles
-#       quoting + minhash threshold lit → the l2 family; the
-#       brute/filtered/LSH-bucket/int8/near-dup `_rank_merge` tails)
-#       measured **plan-for-plan IDENTICAL** in the same diff, so
-#       their r14 greens still cover the shipped plans and they are
-#       NOT re-promoted — the slots go to staleness instead;
-#   (c) the NEW query (enters the gate at birth per the runbook):
-#       j17_stats_salted_join — the key_stats zero-detection-scan arm
-#       of salted_join, classified from parquet-footer metadata;
-#   (d) padded to exactly 50 with the name-ordered-first r11-stale
-#       greens: a16_equidepth_histogram, a6_positional_aggs —
-#       a7_stats initially held the 3rd pad slot and returned to the
-#       pool when l5_webp_decode re-entered mid-round per the runbook
-#       (its mapInPandas closure now routes every 5th/7th doc through
-#       the NEW VP8L predictor / color transforms, so the r14 green no
-#       longer covers the shipped code).
-#       FIVE of the 50 are rows-only by design, each with a documented
-#       reason and (for the trainers) a hash-green twin:
-#       a4_approx_count_distinct + a13_approx_percentile (sketch
-#       estimates; tolerance pytests), l3_ivf_kmeans_topk (iterative
-#       trainer; l3b frozen-index twin — itself in this window),
-#       l3_pq_topk (trained quantizer; l3c pinned twin), and
-#       l6_quality_classifier (trained model; l6b pinned twin). So the
-#       window records ≥45 hash-green + ≤5 no_oracle. The 41 r11-stale
-#       leftovers are the ROUND 16 pad pool.
-# ROUND 15 recorded its window clean: 50/50 green (45 hash + 5 rows-
-# only-by-design), 0 red (CORRECTNESS_r15).
-#
-# ROUND 16 (this round, optimization 2 of 2): no r15 reds to
-# re-prove, so `_PROMOTED` =
-#   (a) the r11-stale pool as the r15 census left it (40 queries:
-#       recomputed this round as registry minus the union of the
-#       r12-r15 windows — a7/a8/a9, the f_* scalar battery,
-#       l4_quality*/l4_text_normalize, l5_gif/l5_mixed,
-#       l6_sequence_packing, m5/m6/m7, p9, the s12-s19 source block,
-#       t17-t21, u4/u6/u7), MINUS the name-ordered-last two
-#       (u6_merge_upsert, u7_scd2_history) trimmed to fit the 50-slot
-#       window — both were examined this round with plans UNCHANGED
-#       since their last green (u7 audited one-exchange-optimal,
-#       plans/r16/u7_scd2_history_audit.txt), so deferring them is
-#       the safe cut;
-#   (b) the 12 queries whose OPTIMIZED PLAN changed this round,
-#       proven by the worktree plan-diff (`tools/plans.py
-#       fingerprint`, normalized explain("formatted") of all 219 at
-#       797d236 vs HEAD — the diff, not guesswork, picked this set):
-#       l2_minhash_lsh_pairs (band/bucket plan trims),
-#       l3_lsh_topk + l3_recall_eval (vector-free band rows + skinny
-#       pair dedup), l3_ivf_topk + l3_ivf_kmeans_topk +
-#       l3b_ivf_pinned_topk (no-op candidate dedup removed),
-#       j15_recursive_hierarchy (multi-level BFS fusion),
-#       m8_confusion_matrix + m9_feature_drift_psi +
-#       l6_heavy_hitter_terms (census-found duplicated subtrees →
-#       windows), a14_hll_mergeable_sketch (sketch partials
-#       persisted), l4_bm25_search (null-safe tokenize).
-#       FOUR of the 50 are rows-only by design, each with a
-#       documented reason and (for the trained ones) a hash-green
-#       twin: a14_hll_mergeable_sketch (DataSketches binary format;
-#       tolerance pytest), l3_ivf_kmeans_topk (iterative trainer;
-#       l3b frozen-index twin — itself in this window),
-#       m5_softmax_predict (iterative trainer; m5b pinned twin),
-#       m6_pca_project (iterative trainer; m6b pinned twin). So the
-#       window records ≥46 hash-green + ≤4 no_oracle. The 2 deferred
-#       r11-stale greens (u6, u7) are the next-round pad pool.
+# Driver-window rule. The external gate records only the FIRST 50
+# exported queries each round, in export-key order (both dicts below
+# are built sorted by export key). A name in `_PROMOTED` exports as
+# `a0_<name>` and so sorts into that window; every other query exports
+# under its own name, and canonical names in the package registry,
+# bench.py and tests never change. Each round `_PROMOTED` holds exactly
+# 50 names: first any red to re-prove, any new query, and every query
+# whose optimized plan changed since its last green (the diff of two
+# `tools/plans.py fingerprint` runs), then the stalest greens as pad.
+# The round-by-round history of the set is in git and CHANGES.md.
 _PROMOTED = frozenset({
     # (a) the r11-stale pool minus the two name-ordered-last deferrals
     "a7_stats", "a8_having", "a9_pivot", "f_array", "f_bitwise",

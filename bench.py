@@ -5,6 +5,10 @@
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
+A fallback the run took is reported in the same line: ``layout_fallback``
+(a table directory timed in its raw layout), ``duckdb_error`` (no DuckDB
+pairing) and ``warmup_failures`` (headline queries whose warm-up failed).
+
 The headline set covers each scale-critical plan shape: pruned parquet
 scan, star broadcast join, large-large shuffle join, grouped agg, window,
 as-of join, session windows, MinHash-LSH dedup, ANN top-k, KNN predict.
@@ -80,35 +84,32 @@ def normalize_layout(sf_dir: str) -> str:
     corrected this sentence: the expression never enforced the
     "16-group floor" it used to claim). Rewrite cost ~2 s,
     cached across runs by source mtime; the version prefix invalidates
-    layouts written by the old rule."""
-    try:
-        import pyarrow.parquet as pq
+    layouts written by the old rule. An unreadable source table raises."""
+    import pyarrow.parquet as pq
 
-        base = os.path.basename(sf_dir.rstrip("/"))
-        out_dir = os.path.join(REPO, ".bench_layout", "v2-" + base)
-        os.makedirs(out_dir, exist_ok=True)
-        # reclaim the superseded v1 (un-prefixed) layout — ~1.5 GB of
-        # rewritten tiers nothing reads anymore (r11 review)
-        import shutil
-        shutil.rmtree(os.path.join(REPO, ".bench_layout", base),
-                      ignore_errors=True)
-        for fn in sorted(os.listdir(sf_dir)):
-            if not fn.endswith(".parquet"):
-                continue
-            src, dst = os.path.join(sf_dir, fn), os.path.join(out_dir, fn)
-            if (os.path.exists(dst)
-                    and os.path.getmtime(dst) >= os.path.getmtime(src)):
-                continue
-            tbl = pq.read_table(src)
-            n_bytes = os.path.getsize(src)
-            rows_per_8mb = max(1, int(tbl.num_rows * 8 * 2**20
-                                      / max(n_bytes, 1)))
-            group = max(16384, min(tbl.num_rows // 16 or 16384,
-                                   rows_per_8mb))
-            pq.write_table(tbl, dst, row_group_size=group)
-        return out_dir
-    except Exception:
-        return sf_dir  # bench must run even if the rewrite can't
+    base = os.path.basename(sf_dir.rstrip("/"))
+    out_dir = os.path.join(REPO, ".bench_layout", "v2-" + base)
+    os.makedirs(out_dir, exist_ok=True)
+    # reclaim the superseded v1 (un-prefixed) layout — ~1.5 GB of
+    # rewritten tiers nothing reads anymore (r11 review)
+    import shutil
+    shutil.rmtree(os.path.join(REPO, ".bench_layout", base),
+                  ignore_errors=True)
+    for fn in sorted(os.listdir(sf_dir)):
+        if not fn.endswith(".parquet"):
+            continue
+        src, dst = os.path.join(sf_dir, fn), os.path.join(out_dir, fn)
+        if (os.path.exists(dst)
+                and os.path.getmtime(dst) >= os.path.getmtime(src)):
+            continue
+        tbl = pq.read_table(src)
+        n_bytes = os.path.getsize(src)
+        rows_per_8mb = max(1, int(tbl.num_rows * 8 * 2**20
+                                  / max(n_bytes, 1)))
+        group = max(16384, min(tbl.num_rows // 16 or 16384,
+                               rows_per_8mb))
+        pq.write_table(tbl, dst, row_group_size=group)
+    return out_dir
 
 
 # Bench-session overrides (documented, deliberate). The engine defaults
@@ -136,7 +137,7 @@ BENCH_CONF = {
 
 def scale_session(app_name: str):
     """The shared measurement session of the scale-tier tools
-    (bench_scale / remeasure / ab_spread — one definition so their
+    (bench_scale / bench_incremental — one definition so their
     'same protocol' claims cannot drift apart): BENCH_CONF with
     shuffle parallelism following the data (32 at sf1) and the 32 GiB
     heap the r8 gate lesson established (at 8 GiB, dozens of persisted
@@ -173,6 +174,18 @@ def main() -> None:
     from pravega_flink_ai_flow_spark.queries import load_all
 
     registry = load_all()
+    # fallbacks the bench took, reported in its JSON line
+    fallbacks: dict = {}
+
+    def error(e: Exception) -> str:
+        return f"{type(e).__name__}: {str(e)[:200]}"
+
+    def layout(raw_dir: str) -> str:
+        try:
+            return normalize_layout(raw_dir)
+        except Exception as e:  # noqa: BLE001 — time the raw layout
+            fallbacks.setdefault("layout_fallback", {})[raw_dir] = error(e)
+            return raw_dir
 
     # Same-box DuckDB pairing, measured TWICE — once before the JVM
     # exists (the state closest to a standalone DuckDB run, the judge's
@@ -213,16 +226,18 @@ def main() -> None:
                 total += statistics.median(runs)
             con.close()
             return round(total, 3)
-        except Exception:
-            return None     # a partial sum would pair a full Spark
-                            # total against a truncated DuckDB one
+        except Exception as e:  # noqa: BLE001 — reported, no pairing
+            # a partial sum would pair a full Spark total against a
+            # truncated DuckDB one
+            fallbacks["duckdb_error"] = error(e)
+            return None
 
     duck_before = duck_sweep()
 
     spark = get_spark("bench", extra_conf=BENCH_CONF)
     spark.sparkContext.setLogLevel("ERROR")
     raw_parent = os.path.dirname(sf_dir.rstrip("/"))
-    sf_dir = normalize_layout(sf_dir)
+    sf_dir = layout(sf_dir)
 
     # Dimension-table caching (documented, deliberate). region / nation /
     # supplier / customer / part are the star-schema dimension sides —
@@ -282,13 +297,13 @@ def main() -> None:
                                  os.path.join(raw_parent, "sf0.001"))
                      if os.path.isdir(d) and d != sf_dir.rstrip("/")), None)
     if warm_dir:
-        warm_dir = normalize_layout(warm_dir)
+        warm_dir = layout(warm_dir)
         for name in HEADLINE:
             try:
                 registry[name].fn(spark, warm_dir) \
                     .write.format("noop").mode("overwrite").save()
-            except Exception:
-                pass  # warmup must never fail the bench
+            except Exception as e:  # noqa: BLE001 — warmup never fails
+                fallbacks.setdefault("warmup_failures", {})[name] = error(e)
 
     # Five timed runs per query. The headline metric is the per-query
     # MEDIAN of runs 2-5 (steady-state throughput); run 1 (+ plan build)
@@ -423,6 +438,7 @@ def main() -> None:
         if duck_after:
             out["duckdb_after"] = duck_after
         out["ratio_vs_duckdb_same_box"] = round(total / duck_total, 2)
+    out.update(fallbacks)
     print(json.dumps(out))
     spark.stop()
 

@@ -711,18 +711,14 @@ def _input_fingerprint(df: DataFrame) -> tuple:
     return tuple(sorted(out))
 
 
-def _resolve_broadcast_sizes(sizes: DataFrame,
-                             broadcast_sizes: bool | None) -> bool:
-    """Auto-select broadcast vs shuffle for the post-aggregate size join
-    (r8 advice): ``None`` (the default) counts the per-doc size table —
-    a column-pruned doc count, O(corpus rows) but no shuffle — and
-    broadcasts only under :data:`_SIZES_BCAST_MAX_ROWS`. A forced
-    corpus-sized broadcast at 100 TB OOMs the driver/executors; nothing
-    should rely on the caller remembering to flip a flag. The count is
-    memoized per (session, corpus plan) so repeated constructions over
-    the same corpus pay it once (r9 advice #2)."""
-    if broadcast_sizes is not None:
-        return broadcast_sizes
+def _sizes_fit_broadcast(sizes: DataFrame) -> bool:
+    """Broadcast vs shuffle for the post-aggregate size join (r8
+    advice): counts the per-doc size table — a column-pruned doc count,
+    O(corpus rows) but no shuffle — and broadcasts only under
+    :data:`_SIZES_BCAST_MAX_ROWS`. A forced corpus-sized broadcast at
+    100 TB OOMs the driver/executors. The count is memoized per
+    (session, corpus plan) so repeated constructions over the same
+    corpus pay it once (r9 advice #2)."""
     key = (sizes.sparkSession.sparkContext.applicationId,
            sizes.semanticHash())
     if key not in _SIZES_BCAST_CACHE:
@@ -730,24 +726,20 @@ def _resolve_broadcast_sizes(sizes: DataFrame,
     return _SIZES_BCAST_CACHE[key]
 
 
-def jaccard_count_pairs(arrs: DataFrame, *, threshold: float,
-                        broadcast_sizes: bool | None = None) -> DataFrame:
-    """Exact Jaccard ≥ ``threshold`` pairs via the count-based inverted
-    index: self-join the exploded shingle table on the shingle into a
-    pure 2-key COUNT per (id_a, id_b) — map-side partial aggregation
+def _count_index_join(arrs: DataFrame) -> DataFrame:
+    """The count-based inverted index shared by the exact pair plans:
+    self-join the exploded (id, shingle) table on the shingle into a
+    pure 2-key COUNT per (id_a < id_b) — map-side partial aggregation
     collapses the per-shingle fan-out before the shuffle — then join
-    the per-doc size table in AFTER the aggregate and filter on the
-    ratio. The only wide data that ever moves is the skinny (id,
-    shingle) table; no array shuffles.
+    the per-doc size table in AFTER the aggregate (broadcast per
+    :func:`_sizes_fit_broadcast`). The only wide data that ever moves
+    is the skinny (id, shingle) table; no array shuffles.
 
     The sizes deliberately do NOT ride through the aggregate as
-    ``first()`` buffers: measured at sf1 on the identical plan shape
-    (see :func:`containment_pairs`), the fat agg buffers blow the
-    partial hash map out of memory and run 3.6× slower than the bare
-    count + post-agg size join. The broadcast-vs-shuffle size join is
-    auto-selected from a doc-count guard by default
-    (:func:`_resolve_broadcast_sizes`); pass True/False to pin it.
-    Input: (id, shingles array). Output: (id_a < id_b, jaccard)."""
+    ``first()`` buffers: measured at sf1 (50 k docs, 11.3 M co-shingle
+    pair groups), the fat agg buffers blow the partial hash map out of
+    memory and run 3.6× slower (7.2 s vs 2.0 s) than the bare count +
+    post-agg size join. Output: (id_b, id_a, __common, __na, __nb)."""
     shingled = arrs.select("id", F.explode("shingles").alias("shingle"))
     sizes = arrs.select("id", F.size("shingles").alias("__n"))
     inter = (shingled.alias("a")
@@ -759,9 +751,16 @@ def jaccard_count_pairs(arrs: DataFrame, *, threshold: float,
              .agg(F.count("*").alias("__common")))
     sa = sizes.select(F.col("id").alias("id_a"), F.col("__n").alias("__na"))
     sb = sizes.select(F.col("id").alias("id_b"), F.col("__n").alias("__nb"))
-    if _resolve_broadcast_sizes(sizes, broadcast_sizes):
+    if _sizes_fit_broadcast(sizes):
         sa, sb = F.broadcast(sa), F.broadcast(sb)
-    return (inter.join(sa, "id_a").join(sb, "id_b")
+    return inter.join(sa, "id_a").join(sb, "id_b")
+
+
+def jaccard_count_pairs(arrs: DataFrame, *, threshold: float) -> DataFrame:
+    """Exact Jaccard ≥ ``threshold`` pairs via the count-based inverted
+    index (:func:`_count_index_join`), filtered on the ratio.
+    Input: (id, shingles array). Output: (id_a < id_b, jaccard)."""
+    return (_count_index_join(arrs)
             .withColumn("jaccard",
                         F.col("__common")
                         / (F.col("__na") + F.col("__nb") - F.col("__common")))
@@ -769,8 +768,7 @@ def jaccard_count_pairs(arrs: DataFrame, *, threshold: float,
             .select("id_a", "id_b", "jaccard"))
 
 
-def containment_pairs(arrs: DataFrame, *, threshold: float,
-                      broadcast_sizes: bool | None = None) -> DataFrame:
+def containment_pairs(arrs: DataFrame, *, threshold: float) -> DataFrame:
     """ASYMMETRIC shingle-set containment pairs — C(a→b) = |A∩B| / |A|.
 
     Jaccard misses subset duplication (a short doc quoted whole inside a
@@ -779,21 +777,9 @@ def containment_pairs(arrs: DataFrame, *, threshold: float,
     id_b`` pair where EITHER direction's containment reaches
     ``threshold``, with both directions' exact values.
 
-    Plan: count-based inverted index — skinny ``(id, shingle)``
-    self-join into a pure 2-key COUNT aggregate, then the per-doc size
-    table (one int per doc) joins in AFTER the aggregate. Measured at
-    sf1 (50 k docs, 11.3 M co-shingle pair groups): carrying the sizes
-    THROUGH the aggregate instead (``first()`` buffers — the shape
-    :func:`jaccard_count_pairs` also used before this finding)
-    made the identical-shaped plan
-    3.6× slower (7.2 s vs 2.0 s) — the wider agg buffers blow the
-    partial hash map out of memory while the bare count stays in it.
-    The broadcast-vs-shuffle size join is auto-selected from a
-    doc-count guard by default (:func:`_resolve_broadcast_sizes`) —
-    an explicit broadcast (doc-count × 12 bytes) under the budget, two
-    shuffle joins of 8-byte rows past it (which still beats the
-    fat-buffer aggregate); pass True/False to pin it. Both containments are single exact-int
-    divisions — bit-identical across engines, never rounded.
+    Plan: the count-based inverted index (:func:`_count_index_join`).
+    Both containments are single exact-int divisions — bit-identical
+    across engines, never rounded.
 
     Scale honesty (revised r10 with second-decade measurements): the
     co-shingle pair count grows super-linearly whenever shingle df
@@ -812,20 +798,7 @@ def containment_pairs(arrs: DataFrame, *, threshold: float,
     every exact plan (:func:`cap_shingle_df` rides along there for
     pair QUALITY; measured wall-neutral). Input: (id, shingles
     array). Output: (id_a < id_b, cont_a_in_b, cont_b_in_a)."""
-    shingled = arrs.select("id", F.explode("shingles").alias("shingle"))
-    sizes = arrs.select("id", F.size("shingles").alias("__n"))
-    inter = (shingled.alias("a")
-             .join(shingled.alias("b"),
-                   (F.col("a.shingle") == F.col("b.shingle"))
-                   & (F.col("a.id") < F.col("b.id")))
-             .groupBy(F.col("a.id").alias("id_a"),
-                      F.col("b.id").alias("id_b"))
-             .agg(F.count("*").alias("__common")))
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("__n").alias("__na"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("__n").alias("__nb"))
-    if _resolve_broadcast_sizes(sizes, broadcast_sizes):
-        sa, sb = F.broadcast(sa), F.broadcast(sb)
-    return (inter.join(sa, "id_a").join(sb, "id_b")
+    return (_count_index_join(arrs)
             .withColumn("cont_a_in_b", F.col("__common") / F.col("__na"))
             .withColumn("cont_b_in_a", F.col("__common") / F.col("__nb"))
             .filter(F.greatest("cont_a_in_b", "cont_b_in_a") >= threshold)
@@ -955,8 +928,9 @@ def containment_pairs_lsh(arrs: DataFrame, *, threshold: float,
     upgrade path for this rung, documented rather than half-shipped.
     The auto dispatcher routes here only above
     :data:`_SCALE_DISPATCH_DOCS` on a Zipf-headed corpus, with a
-    :class:`ScaleDispatchWarning` naming the trade, and
-    ``scale_escalation='exact'`` pins the lossless plan."""
+    :class:`ScaleDispatchWarning` naming the trade; call an exact plan
+    (:func:`containment_pairs_prefix`) directly to keep recall lossless,
+    or this op directly to accept the trade without the warning."""
     sig = minhash_signatures_arrow(arrs, num_hashes)
     cand = lsh_candidate_pairs(sig, num_hashes, bands)
     return _containment_verify(cand, arrs, threshold)
@@ -1033,9 +1007,9 @@ _N_DOCS_CACHE: dict[tuple, int] = {}
 class ScaleDispatchWarning(UserWarning):
     """Emitted when an auto dispatcher leaves the exact-plan family:
     the routed plan keeps exact PRECISION (verify step) but inherits
-    LSH candidate RECALL. Silence it by passing the route explicitly
-    (``scale_escalation='exact'`` to pin the lossless plan, or call
-    the LSH op directly to accept the trade without the warning)."""
+    LSH candidate RECALL. To choose a plan without the warning, call
+    the op you want directly (an exact plan such as
+    :func:`containment_pairs_prefix`, or the LSH op)."""
 
 
 def corpus_doc_count(arrs: DataFrame) -> int:
@@ -1060,8 +1034,7 @@ def auto_route(df_head_ratio: float, n_docs: int) -> str:
     (df-ordered prefix exact plans), or ``'lsh'`` (banded-LSH
     candidates + exact verify). Exported so tools and tests can pin
     routing against corpus statistics without building plans; the
-    dispatchers below apply exactly this table (plus the
-    ``scale_escalation='exact'`` override)."""
+    dispatchers below apply this table and nothing else."""
     if df_head_ratio <= _DF_HEAD_DISPATCH:
         return "flat"
     if n_docs >= _SCALE_DISPATCH_DOCS:
@@ -1069,67 +1042,59 @@ def auto_route(df_head_ratio: float, n_docs: int) -> str:
     return "zipf_exact"
 
 
-def _escalate(op: str, n_docs: int, scale_escalation: str) -> bool:
-    """Shared scale-tier decision + warning of the auto dispatchers."""
+def _route(op: str, arrs: DataFrame, df_head_ratio: float | None,
+           n_docs: int | None) -> str:
+    """The :func:`auto_route` of corpus ``arrs`` for dispatcher ``op``.
+    Missing signals are computed; the doc count only past the df-head
+    gate, where the table reads it. The ``'lsh'`` route warns."""
     import warnings
 
-    if scale_escalation not in ("lsh", "exact"):
-        raise ValueError(f"scale_escalation must be 'lsh' or 'exact', "
-                         f"got {scale_escalation!r}")
-    if n_docs < _SCALE_DISPATCH_DOCS:
-        return False
-    if scale_escalation == "exact":
+    if df_head_ratio is None:
+        df_head_ratio = shingle_df_head_ratio(arrs)
+    if n_docs is None and df_head_ratio > _DF_HEAD_DISPATCH:
+        n_docs = corpus_doc_count(arrs)
+    route = auto_route(df_head_ratio, n_docs)
+    if route == "lsh":
         warnings.warn(
-            f"{op}: exact candidate generation pinned on a Zipf-headed "
-            f"corpus of {n_docs:,} docs — at 500k such docs every exact "
-            f"plan measured >= 2.8-3.3x the LSH wall and carries df-"
-            f"proportional-to-n candidate work (BENCH_zipf huge tiers)",
+            f"{op}: corpus-scale escalation to banded-LSH + exact-verify "
+            f"at {n_docs:,} Zipf-headed docs (>= {_SCALE_DISPATCH_DOCS:,}):"
+            f" at the measured 500k tier every exact candidate plan costs "
+            f">= 2.8-3.3x the LSH wall and its df ~ n candidate work keeps "
+            f"growing super-linearly (BENCH_zipf huge tiers). Precision "
+            f"stays exact (verify step); candidate RECALL becomes LSH's — "
+            f"floors measured in BENCH_zipf.json (jaccard 0.99; "
+            f"containment 0.80-0.83, see containment_pairs_lsh's "
+            f"docstring). Call an exact plan directly for lossless "
+            f"recall.",
             ScaleDispatchWarning, stacklevel=3)
-        return False
-    warnings.warn(
-        f"{op}: corpus-scale escalation to banded-LSH + exact-verify at "
-        f"{n_docs:,} Zipf-headed docs (>= {_SCALE_DISPATCH_DOCS:,}): at "
-        f"the measured 500k tier every exact candidate plan costs >= "
-        f"2.8-3.3x the LSH wall and its df ~ n candidate work keeps "
-        f"growing super-linearly (BENCH_zipf huge tiers). Precision "
-        f"stays exact (verify step); candidate RECALL becomes LSH's — "
-        f"floors measured in BENCH_zipf.json (jaccard 0.99; containment "
-        f"0.80-0.83, see containment_pairs_lsh's docstring). Pass "
-        f"scale_escalation='exact' to pin the lossless plan.",
-        ScaleDispatchWarning, stacklevel=3)
-    return True
+    return route
 
 
 def containment_pairs_auto(arrs: DataFrame, *, threshold: float,
                            df_head_ratio: float = None,
-                           n_docs: int = None,
-                           scale_escalation: str = "lsh") -> DataFrame:
+                           n_docs: int = None) -> DataFrame:
     """Max-containment ≥ ``threshold`` pairs with MEASURED plan
-    dispatch: below :data:`_DF_HEAD_DISPATCH` df-head the count-based
-    inverted index (:func:`containment_pairs` — wins every flat-corpus
-    comparison, BENCH_sf1), above it the small-side prefix plan
-    (:func:`containment_pairs_prefix` — 3.3× vs the count plan's 62.6×
-    at 10× Zipfian docs, BENCH_zipf) — and past
+    dispatch (:func:`auto_route`): below :data:`_DF_HEAD_DISPATCH`
+    df-head the count-based inverted index (:func:`containment_pairs` —
+    wins every flat-corpus comparison, BENCH_sf1), above it the
+    small-side prefix plan (:func:`containment_pairs_prefix` — 3.3× vs
+    the count plan's 62.6× at 10× Zipfian docs, BENCH_zipf) — and past
     :data:`_SCALE_DISPATCH_DOCS` docs on such a Zipf-headed corpus,
     the banded-LSH + exact-verify ladder
     (:func:`containment_pairs_lsh`), with a
     :class:`ScaleDispatchWarning`, because there EVERY exact generator
     is measured intrinsically quadratic (df ∝ n for every shingle —
     BENCH_zipf huge tiers). The escalated route keeps exact precision
-    but LSH recall; ``scale_escalation='exact'`` pins the lossless
-    plan (still warns, so the 40×/decade choice is never silent).
+    but LSH recall.
 
     Pass cached ``df_head_ratio`` / ``n_docs`` (per-corpus statistics)
     to skip the signal aggregates. Below the scale tier both branches
     are exact, so dispatch can never change the answer, only the
     wall-clock."""
-    if df_head_ratio is None:
-        df_head_ratio = shingle_df_head_ratio(arrs)
-    if df_head_ratio > _DF_HEAD_DISPATCH:
-        if n_docs is None:
-            n_docs = corpus_doc_count(arrs)
-        if _escalate("containment_pairs_auto", n_docs, scale_escalation):
-            return containment_pairs_lsh(arrs, threshold=threshold)
+    route = _route("containment_pairs_auto", arrs, df_head_ratio, n_docs)
+    if route == "lsh":
+        return containment_pairs_lsh(arrs, threshold=threshold)
+    if route == "zipf_exact":
         return containment_pairs_prefix(arrs, threshold=threshold)
     return containment_pairs(arrs, threshold=threshold)
 
@@ -1138,13 +1103,11 @@ def jaccard_candidates_between_auto(arrs_new: DataFrame,
                                     arrs_corpus: DataFrame, *,
                                     threshold: float,
                                     df_head_ratio: float = None,
-                                    n_docs: int = None,
-                                    scale_escalation: str = "lsh"
-                                    ) -> DataFrame:
-    """Batch×corpus jaccard candidates with the same measured dispatch:
-    flat df head → the in-row hash-ordered prefix generator
-    (:func:`jaccard_hash_prefix_candidates_between`, fastest on every
-    flat measurement); Zipfian head → the df-ordered generator
+                                    n_docs: int = None) -> DataFrame:
+    """Batch×corpus jaccard candidates with the same measured dispatch
+    (:func:`auto_route`): flat df head → the in-row hash-ordered prefix
+    generator (:func:`jaccard_hash_prefix_candidates_between`, fastest
+    on every flat measurement); Zipfian head → the df-ordered generator
     (:func:`jaccard_prefix_candidates_between`, 2.9× vs 20.4× at 10×
     skewed docs, BENCH_zipf); Zipfian head AND corpus past
     :data:`_SCALE_DISPATCH_DOCS` docs → MinHash LSH banding between
@@ -1153,22 +1116,18 @@ def jaccard_candidates_between_auto(arrs_new: DataFrame,
     :class:`ScaleDispatchWarning` — the measured 16×/decade survivor
     where every exact generator costs ≥ 2.8-3.3× the LSH wall (BENCH_zipf huge
     tiers). The escalated candidates are NOT lossless (callers verify
-    for precision; recall floor in BENCH_zipf.json);
-    ``scale_escalation='exact'`` pins the lossless df-order plan.
+    for precision; recall floor in BENCH_zipf.json).
 
     The signal runs over the corpus side (the big one — the batch
     inherits its distribution at 100 TB); pass the cached per-corpus
     statistics to skip it."""
-    if df_head_ratio is None:
-        df_head_ratio = shingle_df_head_ratio(arrs_corpus)
-    if df_head_ratio > _DF_HEAD_DISPATCH:
-        if n_docs is None:
-            n_docs = corpus_doc_count(arrs_corpus)
-        if _escalate("jaccard_candidates_between_auto", n_docs,
-                     scale_escalation):
-            return lsh_candidate_pairs_between(
-                minhash_signatures_arrow(arrs_new, 64),
-                minhash_signatures_arrow(arrs_corpus, 64), 64, 16)
+    route = _route("jaccard_candidates_between_auto", arrs_corpus,
+                   df_head_ratio, n_docs)
+    if route == "lsh":
+        return lsh_candidate_pairs_between(
+            minhash_signatures_arrow(arrs_new, 64),
+            minhash_signatures_arrow(arrs_corpus, 64), 64, 16)
+    if route == "zipf_exact":
         return jaccard_prefix_candidates_between(
             arrs_new, arrs_corpus, threshold=threshold)
     return jaccard_hash_prefix_candidates_between(

@@ -196,7 +196,7 @@ def asof_merge(left: DataFrame, right: DataFrame, *,
     match time included, even when the caller consumes two of them.
     Pass the consumed subset to shrink the carried struct; the output
     then has lcols + carry_cols. Default (None) keeps the full-rcols
-    contract.
+    contract. A column name containing a line break raises ValueError.
     """
     lcols = list(left.columns)
     rcols = list(carry_cols) if carry_cols is not None \
@@ -216,11 +216,13 @@ def asof_merge(left: DataFrame, right: DataFrame, *,
     # schemas python-side (no extra analysis pass), as explicitly
     # quoted struct DDL. simpleString() is NOT that DDL: it leaves
     # field names bare, so a name containing ',', ':' or '<>' would
-    # parse as type syntax (r14 advice). Names the DDL parser cannot
-    # round-trip even quoted (embedded newlines — the lexer treats a
-    # quoted identifier as single-line) take the Column-DSL fallback
-    # below: same plan, more py4j chatter, any name.
-    from pyspark.sql.types import StructType
+    # parse as type syntax (r14 advice). A name with a line break cannot
+    # be read by the lexer even quoted, so it is rejected.
+    bad = [c for c in lcols + rcols + [right_on, right_time, *tie_breakers]
+           if "\n" in c or "\r" in c]
+    if bad:
+        raise ValueError(f"asof_merge cannot quote a column name with a "
+                         f"line break: {bad[0]!r}")
 
     def q(c: str) -> str:
         return "`" + c.replace("`", "``") + "`"
@@ -230,12 +232,6 @@ def asof_merge(left: DataFrame, right: DataFrame, *,
             f"{q(c)}:{schema[c].dataType.simpleString()}" for c in cols)
             + ">")
 
-    if any("\n" in c or "\r" in c for c in lcols + rcols):
-        return _asof_merge_dsl(left, right, left_on=left_on,
-                               right_on=right_on, left_time=left_time,
-                               right_time=right_time,
-                               tie_breakers=tie_breakers,
-                               carry_cols=rcols)
     l_ddl = struct_ddl(left.schema, lcols)
     r_ddl = struct_ddl(right.schema, rcols)
     l = left.selectExpr(
@@ -265,58 +261,6 @@ def asof_merge(left: DataFrame, right: DataFrame, *,
               .filter("__is_left = 1 AND __carry IS NOT NULL"))
     return merged.selectExpr(*[f"__l.{q(c)} AS {q(c)}" for c in lcols],
                              *[f"__carry.{q(c)} AS {q(c)}" for c in rcols])
-
-
-def _asof_merge_dsl(left: DataFrame, right: DataFrame, *,
-                    left_on: str, right_on: str,
-                    left_time: str, right_time: str,
-                    tie_breakers: Sequence[str] = (),
-                    carry_cols: Sequence[str] | None = None) -> DataFrame:
-    """Column-DSL twin of :func:`asof_merge` for column names the SQL
-    DDL/identifier lexer cannot express (embedded newlines). Identical
-    plan nodes, built object-side — only plan-BUILD cost differs, so
-    the fast path stays the default."""
-    from pyspark.sql.types import StructType
-
-    def qc(c: str) -> Column:
-        # F.col() PARSES its argument as a (possibly multi-part)
-        # attribute name — dots split, stray backticks error — so every
-        # dynamic name must go in pre-quoted; parseAttributeName (unlike
-        # the SQL lexer) accepts any character inside a quoted part,
-        # newlines included
-        return F.col("`" + c.replace("`", "``") + "`")
-
-    lcols = list(left.columns)
-    rcols = list(carry_cols) if carry_cols is not None \
-        else list(right.columns)
-    l_t = StructType([left.schema[c] for c in lcols])
-    r_t = StructType([right.schema[c] for c in rcols])
-    l = left.select(
-        qc(left_on).alias("__k"),
-        qc(left_time).cast("timestamp").alias("__t"),
-        F.lit(1).alias("__is_left"),
-        F.struct(*[qc(c) for c in lcols]).alias("__l"),
-        F.lit(None).cast(r_t).alias("__r"),
-        *[F.lit(None).cast(right.schema[c].dataType).alias(f"__tb_{c}")
-          for c in tie_breakers])
-    r = right.select(
-        qc(right_on).alias("__k"),
-        qc(right_time).cast("timestamp").alias("__t"),
-        F.lit(0).alias("__is_left"),
-        F.lit(None).cast(l_t).alias("__l"),
-        F.struct(*[qc(c) for c in rcols]).alias("__r"),
-        *[qc(c).alias(f"__tb_{c}") for c in tie_breakers])
-    w = (Window.partitionBy("__k")
-         .orderBy(F.col("__t").asc(), F.col("__is_left").asc(),
-                  *[qc(f"__tb_{c}").asc() for c in tie_breakers])
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    merged = (l.unionByName(r)
-              .withColumn("__carry", F.last("__r", ignorenulls=True).over(w))
-              .filter((F.col("__is_left") == 1)
-                      & F.col("__carry").isNotNull()))
-    return merged.select(*[F.col("__l").getField(c).alias(c) for c in lcols],
-                         *[F.col("__carry").getField(c).alias(c)
-                           for c in rcols])
 
 
 def asof_join(left: DataFrame, right: DataFrame, *,

@@ -715,60 +715,3 @@ def stateful_ewma(df: DataFrame, key_col: str = "user_id",
     return (df.groupBy(key_col)
             .applyInPandasWithState(update, out_schema, "ewma double",
                                     "append", GroupStateTimeout.NoTimeout))
-
-
-def tws_available() -> bool:
-    """Whether Spark 4's transformWithState Python API can run here: its
-    state-server protocol is protobuf-based, so the worker crashes with
-    an opaque STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE when
-    ``google.protobuf`` is absent (this sandbox). Probed up front so
-    callers fail with a clear message instead."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        return True
-    except ImportError:
-        return False
-
-
-def stateful_topk(df: DataFrame, key_col: str = "user_id",
-                  value_col: str = "value", k: int = 3):
-    """T8 on the MODERN API: per-key running top-k via Spark 4's
-    ``transformWithStateInPandas`` (typed ValueState holding the k-array
-    — state is O(k) per key regardless of stream length). The
-    TransformWithState surface (named state variables, timers, schema
-    evolution of state) is the successor to applyInPandasWithState;
-    this repo's always-runnable ops use the latter, and this op is the
-    forward-compat seam: same semantics, new engine. Requires protobuf
-    (see ``tws_available``) and the RocksDB state store provider —
-    raises a documented error when the environment lacks them rather
-    than crashing the query's Python runner."""
-    import pandas as pd
-
-    if not tws_available():
-        raise NotImplementedError(
-            "transformWithStateInPandas needs google.protobuf, which "
-            "this environment does not ship; use "
-            "stateful_running_agg/stateful_ewma (applyInPandasWithState) "
-            "for the same per-key stateful semantics")
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class TopK(StatefulProcessor):
-        def init(self, handle):
-            self.state = handle.getValueState("topk", "vals array<double>")
-
-        def handleInputRows(self, key, rows, timerValues):
-            vals = list(self.state.get()[0]) if self.state.exists() else []
-            for pdf in rows:
-                vals.extend(float(x) for x in pdf[value_col])
-            vals = sorted(vals, reverse=True)[:k]
-            self.state.update((vals,))
-            yield pd.DataFrame({key_col: [key[0]],
-                                "topk": [",".join(f"{v:g}" for v in vals)]})
-
-        def close(self):
-            pass
-
-    return (df.groupBy(key_col)
-            .transformWithStateInPandas(TopK(),
-                                        f"{key_col} long, topk string",
-                                        "Update", "None"))

@@ -1953,9 +1953,7 @@ def test_auto_dispatchers_escalate_to_lsh_at_corpus_scale(spark):
     corpus statistics past _SCALE_DISPATCH_DOCS on a Zipf head, both
     auto dispatchers must (a) build the LSH plan — visible as the
     MapInArrow signature pass — and (b) warn with ScaleDispatchWarning;
-    scale_escalation='exact' must pin the lossless plan and STILL warn
-    (the 40×/decade choice is never silent); first-decade statistics
-    must keep the exact plans warning-free."""
+    first-decade statistics must keep the exact plans warning-free."""
     import warnings
 
     docs = spark.createDataFrame(
@@ -1983,17 +1981,7 @@ def test_auto_dispatchers_escalate_to_lsh_at_corpus_scale(spark):
                                            dedup.ScaleDispatchWarning)]
     assert "MapInArrow" in plan_of(esc_j)
 
-    # (b) pinned exact: no LSH pass, still warns
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        pinned = dedup.containment_pairs_auto(
-            arrs, threshold=0.6, df_head_ratio=0.19, n_docs=500_000,
-            scale_escalation="exact")
-        assert [x for x in w if issubclass(x.category,
-                                           dedup.ScaleDispatchWarning)]
-    assert "MapInArrow" not in plan_of(pinned)
-
-    # (c) first decade: exact, silent
+    # (b) first decade: exact, silent
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
         first = dedup.containment_pairs_auto(
@@ -2001,13 +1989,6 @@ def test_auto_dispatchers_escalate_to_lsh_at_corpus_scale(spark):
         assert not [x for x in w if issubclass(
             x.category, dedup.ScaleDispatchWarning)]
     assert "MapInArrow" not in plan_of(first)
-
-    # (d) junk mode rejected
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        dedup.containment_pairs_auto(
-            arrs, threshold=0.6, df_head_ratio=0.19, n_docs=500_000,
-            scale_escalation="maybe")
 
 
 def test_containment_lsh_exact_precision_and_subset_recall(spark):
@@ -2234,8 +2215,8 @@ def test_asof_merge_non_identifier_columns(spark):
     """r15 (r14 advice): asof_merge's selectExpr assembly must survive
     column names the bare simpleString() DDL would misparse — spaces,
     dashes, commas, colons, angle brackets, embedded backticks — and
-    names with newlines must route to the Column-DSL fallback with the
-    same result."""
+    reject a name with a newline, which the SQL lexer cannot read even
+    quoted, with a ValueError naming it."""
     weird_l = ["event id", "k,ey", "t:im<e>"]
     weird_r = ["order`id", "k-2", "t 2", "amt,val"]
     l = spark.createDataFrame(
@@ -2252,14 +2233,13 @@ def test_asof_merge_non_identifier_columns(spark):
     got = {(x["event id"], x["order`id"]) for x in out.collect()}
     assert got == {(1, 100), (2, 101)}   # event 3 precedes its right row
 
-    # a newline in a name cannot survive the SQL lexer → DSL fallback,
-    # identical semantics
+    # a newline in a name cannot survive the SQL lexer: rejected by name
     l2 = l.withColumnRenamed("event id", "event\nid")
-    out2 = relational.asof_merge(
-        l2, r, left_on="k,ey", right_on="k-2",
-        left_time="t:im<e>", right_time="t 2", tie_breakers=["order`id"])
-    got2 = {(x["event\nid"], x["order`id"]) for x in out2.collect()}
-    assert got2 == {(1, 100), (2, 101)}
+    with pytest.raises(ValueError, match=r"event\\nid"):
+        relational.asof_merge(
+            l2, r, left_on="k,ey", right_on="k-2",
+            left_time="t:im<e>", right_time="t 2",
+            tie_breakers=["order`id"])
 
 
 def test_salted_join_detect_sample_validation(spark):

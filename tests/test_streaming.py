@@ -938,51 +938,6 @@ def test_stateful_ewma_exact_across_batches(spark, tmp_workdir):
     assert abs(got[(2, 2.0)] - exp_u2[1]) < 1e-12
 
 
-def test_stateful_topk_modern_api_or_documented_seam(spark, tmp_workdir):
-    """T8 via transformWithStateInPandas where the environment supports
-    it (protobuf-backed state protocol); otherwise the op must raise
-    the documented NotImplementedError seam — never the opaque
-    python-runner crash.
-
-    Environment fact, re-verified per run (r9 verdict #7): this sandbox
-    ships no google.protobuf and package installs are prohibited, so
-    the seam branch is the one that executes here. The gate is asserted
-    against a live import probe so tws_available() can never silently
-    disagree with ground truth (a stale gate would either crash the
-    python runner or dead-gate a working API)."""
-    import importlib.util
-
-    import pytest
-
-    try:
-        protobuf_actually_present = (
-            importlib.util.find_spec("google.protobuf") is not None)
-    except ModuleNotFoundError:     # no `google` namespace package at all
-        protobuf_actually_present = False
-    assert st.tws_available() == protobuf_actually_present, (
-        "tws_available() disagrees with the live google.protobuf probe")
-
-    stream = StreamDir(os.path.join(tmp_workdir, "s"), SCHEMA)
-    stream.append(_mk_events(spark, [(1, 0, 1, 5.0), (2, 1, 1, 9.0),
-                                     (3, 2, 1, 1.0)]).coalesce(1))
-    stream.append(_mk_events(spark, [(4, 3, 1, 8.0)]).coalesce(1))
-    sdf = stream.read_stream(spark, max_files_per_trigger=1)
-    if not st.tws_available():
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            st.stateful_topk(sdf)
-        return
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider")
-    out = st.stateful_topk(sdf, k=3)
-    st.run_available_now(out, checkpoint=os.path.join(tmp_workdir, "ck"),
-                         memory_table="tws_tk", output_mode="update")
-    rows = spark.sql("SELECT * FROM tws_tk").collect()
-    last = {r.user_id: r.topk for r in rows}
-    assert last[1] == "9,8,5"   # running top-3 across both batches
-
-
 def test_streaming_near_dedup_long_doc_burst_routes_by_bytes(
         spark, tmp_workdir, monkeypatch):
     """r15 (r14 verdict "What's wrong" #3): the broadcast payload is

@@ -129,7 +129,7 @@ def main() -> None:
     for k, batch in enumerate(batches):
         # EXACT replan: the declared-query shape — corpus shingles
         # recomputed per batch (that IS the B·O(C+b) cost being
-        # measured), candidates from the measured auto-dispatcher.
+        # measured), candidates from the lossless hash-prefix generator.
         def exact_run():
             # both sides spread exactly as the declared query does —
             # a filtered file scan's partition count lies (CLAUDE.md),
@@ -139,11 +139,11 @@ def main() -> None:
                                           "doc_id", "text", 3).persist()
             arrs_n = dedup.shingle_arrays(dedup.spread(batch),
                                           "doc_id", "text", 3).persist()
-            # scale_escalation pinned: this arm IS the exact baseline
-            # the probe's recall is quoted against — the r11 corpus-
-            # scale tier must not silently swap it for LSH candidates
-            cands = dedup.jaccard_candidates_between_auto(
-                arrs_n, arrs_c, threshold=0.7, scale_escalation="exact")
+            # the lossless generator, called directly: this arm IS the
+            # exact baseline the probe's recall is quoted against, so
+            # the auto dispatcher's LSH tier must never replace it
+            cands = dedup.jaccard_hash_prefix_candidates_between(
+                arrs_n, arrs_c, threshold=0.7)
             out = {(r.id_new, r.id_corpus)
                    for r in verified(cands, arrs_n, arrs_c).collect()}
             arrs_c.unpersist()

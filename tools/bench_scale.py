@@ -127,8 +127,7 @@ def main() -> None:
     t_big = time_queries(spark, registry, names, big)
 
     # key names derive from the tier dir basenames so a tier run
-    # (sf1 → sf10) writes honestly-labelled keys (sf1_sec / sf10_sec);
-    # the default run keeps the exact keys remeasure.py edits in place
+    # (sf1 → sf10) writes honestly-labelled keys (sf1_sec / sf10_sec)
     ks = os.path.basename(sf_small.rstrip("/")) + "_sec"
     kb = os.path.basename(sf_big.rstrip("/")) + "_sec"
     rows = {}
