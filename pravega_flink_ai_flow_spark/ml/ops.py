@@ -158,9 +158,12 @@ _MODEL_CACHE: dict[str, object] = {}
 
 def _model_cache(path: str):
     """One deserialization per executor process (the F3 open()-lifecycle
-    equivalent: module-level cache, lazy init)."""
+    equivalent: module-level cache, lazy init). Only the latest path is
+    kept, so a long-running stream holds one model however often the
+    deployed version changes."""
     model = _MODEL_CACHE.get(path)
     if model is None:
         model = load_model(path)
+        _MODEL_CACHE.clear()
         _MODEL_CACHE[path] = model
     return model

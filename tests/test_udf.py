@@ -134,3 +134,17 @@ def test_row_udf_matches_pandas_udf(spark, iris, deployed_registry):
                ml_ops.predict(test, registry=deployed_registry, model_name="m",
                               feature_cols=FEATURES).collect()]
     assert row_out == vec_out
+
+
+def test_model_cache_keeps_only_the_latest_model(tmp_path):
+    """A worker scoring a refreshed model drops the one it replaced."""
+    import numpy as np
+    from pravega_flink_ai_flow_spark.ml.models import save_model
+
+    x, y = np.eye(4), np.arange(4.0)
+    paths = [str(tmp_path / f"m{i}.pkl") for i in range(2)]
+    for k, p in enumerate(paths, start=1):
+        save_model(KNNClassifier(k).fit(x, y), p)
+    ml_ops._MODEL_CACHE.clear()
+    assert [ml_ops._model_cache(p).n_neighbors for p in paths] == [1, 2]
+    assert list(ml_ops._MODEL_CACHE) == [paths[1]]
