@@ -20,7 +20,9 @@ Scale notes (100 TB design intent, tested on local[32]):
 - Python workers fork from :mod:`.pydaemon`, which imports numpy, pandas,
   pyarrow and the engine once and freezes them out of the collector, so
   the forked workers share those pages (``stream_predict`` worker-pool
-  PSS at peak, 4 cores: 785 → 497 MB).
+  PSS at peak, 4 cores: 785 → 497 MB). Its workers also re-read a zip
+  archive at task start only when it changed, which takes about 190 ms
+  off every Python task start on CPython 3.11.
 """
 
 from __future__ import annotations

@@ -4,7 +4,9 @@ the 100 TB story depends on (PERFORMANCE.md). These assert on
 shared hardware:
 
 - NO declared query may plan a row-at-a-time Python UDF
-  (``BatchEvalPython``) or an unintended ``CartesianProduct``;
+  (``BatchEvalPython``) or an unintended ``CartesianProduct`` (the
+  all-query census below; the single-query tests assert their own
+  plan shapes only);
 - dimension joins stay broadcast (tpch_q5's five dims);
 - filter pushdown + column pruning reach the parquet scan (s7);
 - the GEMM scorers stay Arrow-native (``MapInArrow``), never fall back
@@ -151,7 +153,6 @@ def test_q5_broadcasts_every_dimension(spark):
     plan = _plan(spark, "tpch_q5")
     assert plan.count("BroadcastHashJoin") >= 4
     assert "SortMergeJoin" not in plan
-    assert "CartesianProduct" not in plan
 
 
 def test_j2_dim_join_is_broadcast(spark):
@@ -191,7 +192,6 @@ def test_a1_filter_pushed_to_scan(spark):
 def test_gemm_scorers_stay_arrow_native(spark, name):
     plan = _plan(spark, name)
     assert "MapInArrow" in plan, "blocked-GEMM scorer regressed off Arrow"
-    assert "BatchEvalPython" not in plan
 
 
 @pytest.mark.parametrize("name", ["l3_brute_force_topk", "m2_knn_predict",
@@ -294,13 +294,10 @@ def test_t16_allpairs_is_distributed_no_driver_collect(spark):
     GEMM (FlatMapGroupsInArrow since r15 — zero-copy list flatten; was
     FlatMapGroupsInPandas) — the r5 verdict flagged the previous
     closure path's 100k driver-collect ceiling. The mean-centering
-    mapInArrow pass must survive too, and nothing may plan a
-    row-at-a-time Python UDF."""
+    mapInArrow pass must survive too."""
     plan = _plan(spark, "t16_user_similarity_topk")
     assert "FlatMapGroupsInArrow" in plan
     assert "MapInArrow" in plan
-    assert "BatchEvalPython" not in plan
-    assert "CartesianProduct" not in plan
 
 
 def test_m6_pca_projection_is_arrow_map_only(spark):
@@ -309,7 +306,6 @@ def test_m6_pca_projection_is_arrow_map_only(spark):
     import re
     plan = _plan(spark, "m6_pca_project")
     assert "MapInArrow" in plan
-    assert "BatchEvalPython" not in plan
     # only the orderBy's range-partitioning Exchange is allowed
     n = len(re.findall(r"^\(\d+\) Exchange", plan, re.MULTILINE))
     assert n <= 1, f"PCA projection plans {n} exchanges"
@@ -318,17 +314,14 @@ def test_m6_pca_projection_is_arrow_map_only(spark):
 def test_pinned_twins_stay_arrow_and_join_free_on_the_corpus(spark):
     """The r12 pinned-artifact scoring twins must keep their 100 TB plan
     shapes: l3c's PQ encode+ADC and l3b's IVF assignment run as
-    MapInArrow GEMM passes (never row-at-a-time Python), m6b's
-    projection is one Arrow pass with only the presentation sort's
-    exchange, and none of them may plan a CartesianProduct."""
+    MapInArrow GEMM passes, and m6b's projection is one Arrow pass with
+    only the presentation sort's exchange."""
     import re
 
     for name in ("l3c_pq_pinned_adc", "l3b_ivf_pinned_topk",
                  "m6b_pca_project_pinned"):
         plan = _plan(spark, name)
         assert "MapInArrow" in plan, name
-        assert "BatchEvalPython" not in plan, name
-        assert "CartesianProduct" not in plan, name
     plan = _plan(spark, "m6b_pca_project_pinned")
     n = len(re.findall(r"^\(\d+\) Exchange", plan, re.MULTILINE))
     assert n <= 1, f"m6b plans {n} exchanges"
@@ -359,7 +352,6 @@ def test_char_entropy_is_arrow_not_explode(spark):
     plan = _plan(spark, "l4_char_entropy")
     assert "MapInArrow" in plan
     assert "Generate" not in plan
-    assert "BatchEvalPython" not in plan
 
 
 def test_u7_scd2_is_single_key_shuffle(spark):
@@ -378,7 +370,6 @@ def test_m7_nb_model_joins_broadcast_and_grouplimit(spark):
     plan = _plan(spark, "m7_naive_bayes_predict")
     assert plan.count("BroadcastHashJoin") >= 1
     assert "WindowGroupLimit" in plan
-    assert "BatchEvalPython" not in plan
 
 
 def test_s19_compaction_layout_contract(spark):
@@ -425,15 +416,13 @@ def test_l6_duplicate_spans_single_arrow_gram_pass(spark):
     """l6's r8 re-plan (the r7 measured scale-killer, 13.9-17x wall at
     10x data): grams must be built by ONE MapInArrow tokenize+hash pass
     — no Generate/posexplode of an interpreted HOF gram array (the old
-    plan built it twice, once per side of its agg+join), no Python row
-    UDF — and the whole query fits an exchange budget of 4 (spread
-    repartition, gram-hash window, per-doc island window, final
-    order)."""
+    plan built it twice, once per side of its agg+join) — and the whole
+    query fits an exchange budget of 4 (spread repartition, gram-hash
+    window, per-doc island window, final order)."""
     import re
     plan = _plan(spark, "l6_duplicate_spans")
     assert "MapInArrow" in plan
     assert "Generate" not in plan          # no posexplode re-compute
-    assert "BatchEvalPython" not in plan
     n = len(re.findall(r"^\(\d+\) Exchange", plan, re.MULTILINE))
     assert n <= 4, f"{n} exchanges > 4"
     # and only ONE Arrow pass: the gram frame is never recomputed
@@ -526,7 +515,6 @@ def test_recall_eval_two_arrow_passes_broadcast_membership(spark):
                           re.MULTILINE)) == 3
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
-    assert "CartesianProduct" not in plan
 
 
 def test_codec_queries_force_spread_round_robin(spark):
@@ -542,7 +530,6 @@ def test_codec_queries_force_spread_round_robin(spark):
         plan = _plan(spark, name)
         assert "REPARTITION_BY_NUM" in plan or "RoundRobinPartitioning" \
             in plan, f"{name}: no forced round-robin spread\n{plan}"
-        assert "BatchEvalPython" not in plan
 
 
 def test_containment_pairs_sizes_join_broadcast_after_agg(spark):
@@ -552,14 +539,13 @@ def test_containment_pairs_sizes_join_broadcast_after_agg(spark):
     plan = _plan(spark, "l2_containment_pairs")
     assert plan.count("BroadcastHashJoin") >= 2   # __na and __nb joins
     assert "first(" not in plan
-    assert "CartesianProduct" not in plan
 
 
 def test_pretrain_pipeline_composition_contracts(spark):
     """l6_pretrain_pipeline (the e2e chain): the quality gate must stay
-    Arrow-native (MapInArrow, not BatchEvalPython), the benchmark gram
-    probe must be a BROADCAST semi-join (the training corpus never
-    shuffles by gram), nothing may go cartesian, and the whole four-
+    Arrow-native (MapInArrow), the benchmark gram probe must be a
+    BROADCAST semi-join (the training corpus never shuffles by gram),
+    and the whole four-
     stage chain must stay within a bounded shuffle budget — digest
     window, contaminated-id distinct, anti-join, lang window, and the
     presentation orderBy account for the allowance; an extra Exchange
@@ -567,8 +553,6 @@ def test_pretrain_pipeline_composition_contracts(spark):
     import re
     plan = _plan(spark, "l6_pretrain_pipeline")
     assert "MapInArrow" in plan
-    assert "BatchEvalPython" not in plan
-    assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan        # gram semi-probe
     n = len(re.findall(r"^\(\d+\) Exchange", plan, re.MULTILINE))
     assert n <= 8, f"pipeline planned {n} exchanges"

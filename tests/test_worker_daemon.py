@@ -1,16 +1,21 @@
 """Python workers fork from the engine daemon (``engine/pydaemon.py``),
 which preloads the workers' imports and freezes them out of the
-collector so the forked workers share those pages."""
+collector so the forked workers share those pages, and which re-reads a
+zip archive only when it changed."""
 
+import importlib
 import os
 import subprocess
 import sys
 import textwrap
+import zipfile
+import zipimport
 
 import pandas as pd
 
 from pyspark.sql.functions import pandas_udf
 
+from pravega_flink_ai_flow_spark.engine.pydaemon import invalidate_if_changed
 from pravega_flink_ai_flow_spark.engine.session import session_conf
 
 from conftest import REPO
@@ -40,6 +45,74 @@ def test_workers_fork_from_the_frozen_engine_daemon(spark):
         "|", 1)
     assert int(frozen) > 0
     assert DAEMON in parent.split()
+
+
+def test_worker_task_start_reads_no_zip_directory(spark):
+    """Inside a worker, ``importlib.invalidate_caches()`` (which pyspark
+    calls at every task start) re-reads none of its zip archives."""
+
+    @pandas_udf("long")
+    def reads(x: pd.Series) -> pd.Series:
+        import importlib
+        import zipimport
+        calls = []
+        original = zipimport._read_directory
+
+        def counting(archive):
+            calls.append(archive)
+            return original(archive)
+
+        zipimport._read_directory = counting
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = original
+        return pd.Series([len(calls)] * len(x))
+
+    assert spark.range(4).select(reads("id")).first()[0] == 0
+
+
+def _write_zip(path, modules):
+    with zipfile.ZipFile(path, "w") as z:
+        for name, source in modules.items():
+            z.writestr(f"{name}.py", source)
+
+
+def test_zip_importer_rereads_only_a_changed_archive(tmp_path, monkeypatch):
+    """An unchanged archive is not re-read; one rewritten in place on
+    ``sys.path`` is, so a module added to it becomes importable."""
+    archive = str(tmp_path / "mods.zip")
+    _write_zip(archive, {"zipmod_a": "X = 1\n"})
+    reads = []
+    original = zipimport._read_directory
+
+    def counting(path):
+        reads.append(path)
+        return original(path)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counting)
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches",
+                        invalidate_if_changed)
+    monkeypatch.syspath_prepend(archive)
+    try:
+        assert importlib.import_module("zipmod_a").X == 1
+        importlib.invalidate_caches()  # no stamps yet: reads and stamps
+        del reads[:]
+        importlib.invalidate_caches()
+        assert reads == []
+
+        _write_zip(archive, {"zipmod_a": "X = 1\n", "zipmod_b": "Y = 2\n"})
+        importlib.invalidate_caches()
+        assert reads == [archive]
+        assert importlib.import_module("zipmod_b").Y == 2
+    finally:
+        for name in ("zipmod_a", "zipmod_b"):
+            sys.modules.pop(name, None)
+        for finder in list(sys.path_importer_cache.values()):
+            if isinstance(finder, zipimport.zipimporter):
+                vars(finder).pop("_archive_stamp", None)
+        sys.path_importer_cache.pop(archive, None)
+        zipimport._zip_directory_cache.pop(archive, None)
 
 
 def test_driver_outside_the_repo_runs_a_pandas_udf(tmp_path):
