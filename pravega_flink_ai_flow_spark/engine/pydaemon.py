@@ -12,26 +12,23 @@ Each task also starts with ``importlib.invalidate_caches()`` (pyspark's
 ``setup_spark_files``). On CPython 3.11 that makes every zip importer
 re-read its whole archive directory at once: a UDF worker holds 16,
 over ``pyspark.zip``, the py4j zip and the ``spark-core`` jar, 26,672
-entries and about 190 ms per task on 4 cores. Run as the daemon,
-this module lets an importer re-read its archive only when the
-archive's modification time or size differs from its last read, so new
-spark-files paths and archives rewritten in place are still read.
+entries and about 190 ms per task on 4 cores.
+:func:`install_zip_stamps` lets an importer re-read its archive only
+when the archive's modification time or size differs from its last
+read, so new spark-files paths and archives rewritten in place are
+still read. The daemon installs it before forking; Spark's data-source
+planner workers always start from ``pyspark.daemon``, and
+``io/pravega_source.py`` installs it there when a reused planner worker
+first loads the data source.
+
+Importing this module imports nothing beyond the standard library and
+changes nothing; the preload runs only as the daemon (``__main__``).
 """
 
 import gc
 import os
 import sys
 import zipimport
-
-import pyspark.daemon  # imports the worker module named in argv[1]
-
-import numpy  # noqa: F401
-import pandas  # noqa: F401
-import pyarrow  # noqa: F401
-import pyspark.sql.pandas.serializers  # noqa: F401
-
-import pravega_flink_ai_flow_spark.io.pravega_source  # noqa: F401
-import pravega_flink_ai_flow_spark.ml.ops  # noqa: F401
 
 _read_archive = zipimport.zipimporter.invalidate_caches
 
@@ -57,11 +54,31 @@ def invalidate_if_changed(importer):
         importer._archive_stamp = stamp
 
 
-if __name__ == "__main__":
+def install_zip_stamps():
+    """Patch ``zipimporter.invalidate_caches`` with
+    :func:`invalidate_if_changed` and stamp the zip importers in
+    ``sys.path_importer_cache``, which read their archives when they
+    were made or at the last ``invalidate_caches()``. A second call does
+    nothing."""
+    if zipimport.zipimporter.invalidate_caches is invalidate_if_changed:
+        return
     zipimport.zipimporter.invalidate_caches = invalidate_if_changed
-    # The importers the daemon holds read their archives moments ago.
     for finder in sys.path_importer_cache.values():
         if isinstance(finder, zipimport.zipimporter):
             finder._archive_stamp = _stat_stamp(finder)
+
+
+if __name__ == "__main__":
+    import pyspark.daemon  # imports the worker module named in argv[1]
+
+    import numpy  # noqa: F401
+    import pandas  # noqa: F401
+    import pyarrow  # noqa: F401
+    import pyspark.sql.pandas.serializers  # noqa: F401
+
+    import pravega_flink_ai_flow_spark.io.pravega_source  # noqa: F401
+    import pravega_flink_ai_flow_spark.ml.ops  # noqa: F401
+
+    install_zip_stamps()
     gc.freeze()
     pyspark.daemon.manager()

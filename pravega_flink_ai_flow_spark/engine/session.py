@@ -22,7 +22,9 @@ Scale notes (100 TB design intent, tested on local[32]):
   the forked workers share those pages (``stream_predict`` worker-pool
   PSS at peak, 4 cores: 785 → 497 MB). Its workers also re-read a zip
   archive at task start only when it changed, which takes about 190 ms
-  off every Python task start on CPython 3.11.
+  off every Python task start on CPython 3.11. Spark's data-source
+  planner workers ignore the setting and start from ``pyspark.daemon``;
+  the ``pravega_socket`` source installs the same check there.
 """
 
 from __future__ import annotations

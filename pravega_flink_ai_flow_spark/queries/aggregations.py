@@ -476,17 +476,15 @@ def a14_hll_mergeable_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB equivalent — rows-only by design; pytest checks the
     merged estimate against exact counts.
 
-    The sketch frame is persisted (r16, found by the census re-run):
-    the union's global branch re-aggregated ``sketches``, and Catalyst
-    shares no common subtrees, so the raw events scan + HLL aggregate
-    ran TWICE — betraying exactly the "without touching the raw data
-    again" property this query demonstrates. The persisted frame is one
-    row per event_type (a few KB); both union branches now read the
-    materialized partials, estimates byte-identical."""
+    The sketch frame is checkpointed eagerly (one row per event_type,
+    a few KB): Catalyst shares no common subtrees, so without it the
+    union's two branches each scan the raw events and aggregate them
+    again. Both branches read the materialized partials, and the query
+    leaves no session cache entry behind."""
     (events,) = tables(spark, sf_dir, "events")
     sketches = (events.groupBy("event_type")
                 .agg(F.hll_sketch_agg("user_id").alias("__sk"))
-                .persist())
+                .localCheckpoint())
     per_type = sketches.select(
         "event_type",
         F.hll_sketch_estimate("__sk").alias("est_distinct_users"))

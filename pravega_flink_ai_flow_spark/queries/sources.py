@@ -48,6 +48,14 @@ def _own_scratch() -> str:
     return own
 
 
+def _s14_warehouse() -> str:
+    """The s14 database location, in this process's namespace: s14
+    deletes a bucketed table's files that its own session's catalog does
+    not know, which in a shared warehouse are another process's live
+    table."""
+    return os.path.join(_own_scratch(), "s14_warehouse")
+
+
 def _tmpdir(prefix: str) -> str:
     own = _own_scratch()
     # drop this process's earlier runs of the same query so repeated
@@ -339,7 +347,7 @@ def s14_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket write itself (hash function, bucket pruning metadata) is
     what the value hash checks."""
     (orders, lineitem) = tables(spark, sf_dir, "orders", "lineitem")
-    db_dir = os.path.join(_SCRATCH, "s14_warehouse")
+    db_dir = _s14_warehouse()
     spark.sql(f"CREATE DATABASE IF NOT EXISTS s14_bucketed LOCATION "
               f"'{db_dir}'")
     # table names carry the scale-factor tag: one pytest session runs

@@ -1199,6 +1199,17 @@ def test_hll_sketch_estimates_within_bound(spark):
         assert abs(est[k] - n) / n < 0.05, (k, est[k], n)
 
 
+def test_hll_sketch_query_leaves_no_session_cache(spark):
+    """The mergeable-HLL query checkpoints its sketch partials instead of
+    caching them, so running it leaves the session cache empty."""
+    from pravega_flink_ai_flow_spark.queries import load_all
+    from tests.conftest import SF_SMOKE
+
+    spark.catalog.clearCache()
+    load_all()["a14_hll_mergeable_sketch"].fn(spark, SF_SMOKE).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_jaccard_prefix_filter_is_lossless(spark):
     """PPJoin prefix filtering must be a superset of the true result:
     every pair with Jaccard >= t shares a prefix shingle."""

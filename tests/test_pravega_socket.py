@@ -359,6 +359,76 @@ def test_stream_write(spark, server, tmp_workdir):
     assert server.tail("scope", "out") == 120
 
 
+def test_reused_sink_planner_worker_reads_no_zip_directory(
+        spark, server, tmp_workdir):
+    """Each micro-batch's ``commit`` runs in Spark's reused
+    ``python_streaming_sink_runner`` planner worker, which starts from
+    ``pyspark.daemon`` whatever ``spark.python.daemon.module`` says.
+    Unpickling the data source there installed the engine's zip stamp
+    check, so the ``importlib.invalidate_caches()`` every planner call
+    starts with reads no zip directory."""
+    log = os.path.join(tmp_workdir, "commits.log")
+
+    # Local classes pickle by value; their base classes load
+    # io.pravega_source in the planner worker.
+    class ProbeWriter(pravega_source._StreamWriter):
+        def commit(self, messages, batchId):
+            import importlib
+            import zipimport
+            reads = []
+            original = zipimport._read_directory
+
+            def counting(archive):
+                reads.append(archive)
+                return original(archive)
+
+            zipimport._read_directory = counting
+            try:
+                importlib.invalidate_caches()
+            finally:
+                zipimport._read_directory = original
+            with open(log, "a") as f:
+                f.write(f"{os.getpid()} {len(reads)}\n")
+            super().commit(messages, batchId)
+
+    class ProbeSource(pravega_source.PravegaSocketDataSource):
+        @classmethod
+        def name(cls):
+            return "pravega_socket_planner_probe"
+
+        def streamWriter(self, schema, overwrite):
+            return ProbeWriter(self.options, schema)
+
+    server.append("scope", "zin", _events(0, 300))
+    pravega_source.register(spark)
+    spark.dataSource.register(ProbeSource)
+    sdf = (spark.readStream.format("pravega_socket")
+           .schema(SCHEMA)
+           .option("controller", server.controller_uri)
+           .option("scope", "scope").option("stream", "zin")
+           .option("maxRecordsPerBatch", "100")
+           .load())
+    q = (sdf.writeStream.format(ProbeSource.name())
+         .option("controller", server.controller_uri)
+         .option("scope", "scope").option("stream", "zout")
+         .option("checkpointLocation", os.path.join(tmp_workdir, "c"))
+         .trigger(processingTime="200 milliseconds").start())
+    try:
+        import time
+        start = time.time()
+        while server.tail("scope", "zout") < 300 and time.time() - start < 300:
+            time.sleep(0.5)
+    finally:
+        q.stop()
+    assert server.tail("scope", "zout") == 300
+    with open(log) as f:
+        commits = [tuple(map(int, line.split())) for line in f]
+    assert len(commits) >= 3
+    assert [reads for _, reads in commits] == [0] * len(commits)
+    first_pid = commits[0][0]
+    assert [pid for pid, _ in commits] == [first_pid] * len(commits)
+
+
 def test_ddl_socket_transport(spark, server):
     """The reference's CREATE TABLE … WITH('connector'='pravega',
     'controller-uri'='tcp://…') shape, opted into the network path."""

@@ -15,6 +15,7 @@ import pandas as pd
 
 from pyspark.sql.functions import pandas_udf
 
+from pravega_flink_ai_flow_spark.engine import pydaemon
 from pravega_flink_ai_flow_spark.engine.pydaemon import invalidate_if_changed
 from pravega_flink_ai_flow_spark.engine.session import session_conf
 
@@ -113,6 +114,56 @@ def test_zip_importer_rereads_only_a_changed_archive(tmp_path, monkeypatch):
                 vars(finder).pop("_archive_stamp", None)
         sys.path_importer_cache.pop(archive, None)
         zipimport._zip_directory_cache.pop(archive, None)
+
+
+# Imports the data source in a fresh interpreter, as a driver
+# (argv[1] == "driver") or as a Spark worker after setup_spark_files.
+IMPORT_SOURCE = textwrap.dedent("""
+    import sys, zipimport
+    sys.path.insert(0, %r)
+    from pyspark.core.files import SparkFiles
+    SparkFiles._is_running_on_worker = sys.argv[1] == "worker"
+    import pravega_flink_ai_flow_spark.io.pravega_source  # noqa: F401
+    print(zipimport.zipimporter.invalidate_caches.__qualname__,
+          sorted({"pandas", "pyarrow"} & set(sys.modules)))
+""") % REPO
+
+
+def test_data_source_installs_the_stamp_check_only_in_a_worker(
+        monkeypatch):
+    """Importing ``io.pravega_source`` on a driver leaves
+    ``zipimporter.invalidate_caches`` as it was; in a Spark worker it
+    installs the stamp check without importing pandas or pyarrow. The
+    installer patches once and stamps the zip importers it finds."""
+    def imported_as(role):
+        out = subprocess.run([sys.executable, "-c", IMPORT_SOURCE, role],
+                             timeout=120, capture_output=True, text=True)
+        assert out.returncode == 0, out.stderr[-2000:]
+        return out.stdout.split()
+
+    assert imported_as("driver") == ["zipimporter.invalidate_caches", "[]"]
+    assert imported_as("worker") == ["invalidate_if_changed", "[]"]
+
+    archive = "held.zip"
+    held = object.__new__(zipimport.zipimporter)
+    held.archive = archive
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches",
+                        pydaemon._read_archive)
+    monkeypatch.setitem(sys.path_importer_cache, archive, held)
+    monkeypatch.setattr(pydaemon, "_stat_stamp",
+                        lambda importer: (1, importer.archive))
+    try:
+        pydaemon.install_zip_stamps()
+        assert zipimport.zipimporter.invalidate_caches is \
+            invalidate_if_changed
+        assert held._archive_stamp == (1, archive)
+        held._archive_stamp = "kept"
+        pydaemon.install_zip_stamps()
+        assert held._archive_stamp == "kept"
+    finally:
+        for finder in list(sys.path_importer_cache.values()):
+            if isinstance(finder, zipimport.zipimporter):
+                vars(finder).pop("_archive_stamp", None)
 
 
 def test_driver_outside_the_repo_runs_a_pandas_udf(tmp_path):
