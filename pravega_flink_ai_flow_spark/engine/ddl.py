@@ -127,27 +127,15 @@ class ConnectorTable:
         return self.options.get("connector", "")
 
 
-def _default_stream_root() -> str:
-    import os
-    import tempfile
-    root = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.dirname(os.path.abspath(__file__)))), ".scratch", "streams")
-    try:
-        os.makedirs(root, exist_ok=True)
-        return root
-    except OSError:
-        # installed into read-only site-packages: fall back to tmp
-        return os.path.join(tempfile.gettempdir(), "pravega_sim_streams")
-
-
 @dataclass
 class FlinkDdlEnv:
     """Spark-backed stand-in for the reference's ``TableEnvironment`` +
     ``StatementSet`` pair: ``execute_sql`` (DDL), ``from_path`` (source
-    read), ``add_insert`` (sink write)."""
+    read), ``add_insert`` (sink write). ``stream_root`` holds the
+    emulated streams; each caller passes its own directory."""
 
     spark: SparkSession
-    stream_root: str = field(default_factory=_default_stream_root)
+    stream_root: str
     tables: dict[str, ConnectorTable] = field(default_factory=dict)
 
     # -- DDL ---------------------------------------------------------------

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Column, Window, functions as F
 
+from ..engine.memo import input_files, memo
 from .partitioning import spread, spread_coalesced
 
 # Mersenne prime 2^31-1: universal-hash modulus. The base hash and the
@@ -642,88 +643,17 @@ _BUCKET_PAIR_BUDGET = 1_000_000
 _SIZES_BCAST_MAX_ROWS = 10_000_000
 
 
-# (applicationId, semanticHash of the size-table plan) -> fits-broadcast.
-# The decision is a property of the corpus, not the call site: without
-# the memo every plan CONSTRUCTION (including plan-only inspection in
-# tests/tools) re-ran the column-pruned corpus count — an extra full
-# pass per call (r9 advice #2). semanticHash is driver-side analysis
-# only; keyed by applicationId so a restarted context never reuses a
-# stale decision.
-_SIZES_BCAST_CACHE: dict[tuple[str, int], bool] = {}
-
-# (applicationId, semanticHash of the shingle-array plan, sample
-# fraction) -> measured df-head ratio; see shingle_df_head_ratio.
-_DF_HEAD_CACHE: dict[tuple[str, int, float | None], float] = {}
-
-# (applicationId, semanticHash of the shingle-array plan, input-file
-# fingerprint, cap fraction, literal budget) -> the collected
-# hot-shingle list; see cap_shingle_df. Only literal-path (small) hot
-# sets are cached. Unlike _SIZES_BCAST_CACHE/_DF_HEAD_CACHE (cached
-# DECISIONS, where staleness costs performance) this caches query
-# RESULTS, where staleness flips output rows — so the key also
-# fingerprints the input files: semanticHash identifies the plan, not
-# the data, and a path rewritten mid-session (tier regeneration) must
-# miss (r10 review).
-_HOT_SHINGLE_CACHE: dict[tuple, list] = {}
-
-
-def _input_fingerprint(df: DataFrame) -> tuple:
-    """(uri, size, mtime) per input file of ``df``'s plan, sorted —
-    a data-identity key for caches that store collected results.
-    A plan with no file sources (local relation) returns () — its
-    rows are baked into the plan hash itself.
-
-    Only ``file:``/scheme-less URIs are os.stat'ed (r10 advice: the
-    bare ``urlparse(uri).path`` of an ``hdfs://``/``s3a://`` URI can
-    stat an UNRELATED local file at the same path — a wrong-but-
-    plausible fingerprint). Remote schemes ask the URI's own Hadoop
-    FileSystem for (length, modificationTime); a filesystem that
-    can't answer (unknown scheme, auth failure) degrades to
-    (uri, -1, -1) — path-identity caching, stale-able on in-place
-    remote rewrites, the documented residual."""
-    import os
-    from urllib.parse import unquote, urlparse
-
-    out = []
-    jvm = hconf = None
-    for uri in df.inputFiles():
-        scheme = urlparse(uri).scheme
-        if scheme in ("", "file"):
-            try:
-                # Hadoop Path URIs percent-encode specials — unquote or
-                # a path with a space stats the wrong file, degrades to
-                # (-1, -1) and reintroduces the stale-cache bug
-                st = os.stat(unquote(urlparse(uri).path))
-                out.append((uri, st.st_size, st.st_mtime_ns))
-            except OSError:
-                out.append((uri, -1, -1))
-            continue
-        try:
-            if jvm is None:
-                spark = df.sparkSession
-                jvm = spark._jvm
-                hconf = spark._jsc.hadoopConfiguration()
-            p = jvm.org.apache.hadoop.fs.Path(uri)
-            st = p.getFileSystem(hconf).getFileStatus(p)
-            out.append((uri, st.getLen(), st.getModificationTime()))
-        except Exception:
-            out.append((uri, -1, -1))
-    return tuple(sorted(out))
-
-
 def _sizes_fit_broadcast(sizes: DataFrame) -> bool:
-    """Broadcast vs shuffle for the post-aggregate size join (r8
-    advice): counts the per-doc size table — a column-pruned doc count,
-    O(corpus rows) but no shuffle — and broadcasts only under
-    :data:`_SIZES_BCAST_MAX_ROWS`. A forced corpus-sized broadcast at
-    100 TB OOMs the driver/executors. The count is memoized per
-    (session, corpus plan) so repeated constructions over the same
-    corpus pay it once (r9 advice #2)."""
-    key = (sizes.sparkSession.sparkContext.applicationId,
-           sizes.semanticHash())
-    if key not in _SIZES_BCAST_CACHE:
-        _SIZES_BCAST_CACHE[key] = sizes.count() <= _SIZES_BCAST_MAX_ROWS
-    return _SIZES_BCAST_CACHE[key]
+    """Broadcast vs shuffle for the post-aggregate size join: counts the
+    per-doc size table — a column-pruned doc count, O(corpus rows) but
+    no shuffle — and broadcasts only under :data:`_SIZES_BCAST_MAX_ROWS`.
+    A forced corpus-sized broadcast at 100 TB OOMs the driver/executors.
+    The decision is a corpus property, memoised per plan and input data
+    so repeated plan constructions pay the count once."""
+    return memo(sizes.sparkSession,
+                ("sizes_fit_broadcast", sizes.semanticHash()),
+                input_files(sizes),
+                lambda: sizes.count() <= _SIZES_BCAST_MAX_ROWS)
 
 
 def _count_index_join(arrs: DataFrame) -> DataFrame:
@@ -952,26 +882,24 @@ def shingle_df_head_ratio(arrs: DataFrame, *,
     not the query) and cache it next to the table statistics. A
     ``sample_fraction`` makes it an estimate from a doc sample (df of
     a hot shingle scales with the sample; fine for dispatch, which
-    only needs one order of magnitude). Memoized per (session, corpus
-    plan) — same rationale as :data:`_SIZES_BCAST_CACHE`: the signal
-    is a corpus property, and without the memo every plan construction
-    through the auto dispatchers re-paid the aggregate."""
-    key = (arrs.sparkSession.sparkContext.applicationId,
-           arrs.semanticHash(), sample_fraction)
-    if key in _DF_HEAD_CACHE:
-        return _DF_HEAD_CACHE[key]
-    if sample_fraction is not None:
-        arrs = arrs.sample(fraction=sample_fraction, seed=7)
-    shingled = arrs.select(F.explode("shingles").alias("shingle"))
-    row = (shingled.groupBy("shingle").agg(F.count("*").alias("df"))
-           .agg(F.max("df").alias("max_df"))
-           .crossJoin(F.broadcast(arrs.agg(F.count("*").alias("n"))))
-           .first())
-    # max_df is NULL when the corpus has docs but zero shingles (every
-    # doc shorter than the shingle size): no head → 0.0, not a TypeError
-    ratio = 0.0 if (not row.n or row.max_df is None) else row.max_df / row.n
-    _DF_HEAD_CACHE[key] = ratio
-    return ratio
+    only needs one order of magnitude). Memoised per corpus plan and
+    input data: every plan construction through the auto dispatchers
+    would otherwise re-pay the aggregate."""
+    def measure() -> float:
+        sample = arrs if sample_fraction is None \
+            else arrs.sample(fraction=sample_fraction, seed=7)
+        shingled = sample.select(F.explode("shingles").alias("shingle"))
+        row = (shingled.groupBy("shingle").agg(F.count("*").alias("df"))
+               .agg(F.max("df").alias("max_df"))
+               .crossJoin(F.broadcast(sample.agg(F.count("*").alias("n"))))
+               .first())
+        # max_df is NULL when the corpus has docs but zero shingles (every
+        # doc shorter than the shingle size): no head → 0.0, not a TypeError
+        return 0.0 if (not row.n or row.max_df is None) \
+            else row.max_df / row.n
+    return memo(arrs.sparkSession,
+                ("df_head_ratio", arrs.semanticHash(), sample_fraction),
+                input_files(arrs), measure)
 
 
 # past this df-head ratio the count-index / hash-prefix plans'
@@ -1001,8 +929,6 @@ _DF_HEAD_DISPATCH = 0.05
 # through sf10.
 _SCALE_DISPATCH_DOCS = 200_000
 
-_N_DOCS_CACHE: dict[tuple, int] = {}
-
 
 class ScaleDispatchWarning(UserWarning):
     """Emitted when an auto dispatcher leaves the exact-plan family:
@@ -1013,19 +939,12 @@ class ScaleDispatchWarning(UserWarning):
 
 
 def corpus_doc_count(arrs: DataFrame) -> int:
-    """Memoized doc count of a corpus frame — the n_docs half of the
-    scale-dispatch signal. One column-pruned count per (session,
-    corpus plan, input data); at 100 TB this is a table statistic
-    computed at ingest, like :func:`shingle_df_head_ratio`. The key
-    includes the input-file fingerprint (the _HOT_SHINGLE_CACHE
-    principle: this memo stores a collected RESULT, and a path
-    rewritten in place keeps its semanticHash — a stale count would
-    silently flip the scale-dispatch route, r11 review)."""
-    key = (arrs.sparkSession.sparkContext.applicationId,
-           arrs.semanticHash(), _input_fingerprint(arrs))
-    if key not in _N_DOCS_CACHE:
-        _N_DOCS_CACHE[key] = arrs.count()
-    return _N_DOCS_CACHE[key]
+    """Memoised row count of a corpus frame — the n_docs half of the
+    scale-dispatch signal and the N of the IVF √N rule. One count per
+    corpus plan and input data; at 100 TB this is a table statistic
+    computed at ingest, like :func:`shingle_df_head_ratio`."""
+    return memo(arrs.sparkSession, ("doc_count", arrs.semanticHash()),
+                input_files(arrs), arrs.count)
 
 
 def auto_route(df_head_ratio: float, n_docs: int) -> str:
@@ -1167,26 +1086,19 @@ def cap_shingle_df(arrs: DataFrame, *, max_df_frac: float = 0.05,
 
     Input/output: (id, shingles array) — docs whose shingles are all
     hot come back with an empty array (they cannot near-dup on
-    content). The corpus count + hot-set collect run at plan
-    CONSTRUCTION; both are memoized per (session, corpus plan,
-    input-file fingerprint, cap) — the :data:`_SIZES_BCAST_CACHE`
-    principle (r9 advice #2) plus a data-identity component, because
-    this memo stores collected RESULTS (see _HOT_SHINGLE_CACHE)."""
-    memo_key = (arrs.sparkSession.sparkContext.applicationId,
-                arrs.semanticHash(), _input_fingerprint(arrs),
-                max_df_frac, max_literal)
+    content). The corpus count and the hot-set collect run at plan
+    CONSTRUCTION, memoised per corpus plan, input data and cap."""
     ex = arrs.select("id", F.explode("shingles").alias("shingle"))
-    hot_df = None
-    if memo_key in _HOT_SHINGLE_CACHE:
-        hot = _HOT_SHINGLE_CACHE[memo_key]
-    else:
-        n_docs = arrs.count()
-        hot_df = (ex.groupBy("shingle").agg(F.count("*").alias("__df"))
-                  .filter(F.col("__df") > max_df_frac * n_docs)
-                  .select("shingle"))
-        hot = [r.shingle for r in hot_df.limit(max_literal + 1).collect()]
-        if len(hot) <= max_literal:
-            _HOT_SHINGLE_CACHE[memo_key] = hot
+
+    def hot_frame() -> DataFrame:
+        return (ex.groupBy("shingle").agg(F.count("*").alias("__df"))
+                .filter(F.col("__df") > max_df_frac * corpus_doc_count(arrs))
+                .select("shingle"))
+    hot = memo(arrs.sparkSession,
+               ("hot_shingles", arrs.semanticHash(), max_df_frac, max_literal),
+               input_files(arrs),
+               lambda: [r.shingle for r in
+                        hot_frame().limit(max_literal + 1).collect()])
     if len(hot) <= max_literal:
         if not hot:
             return arrs
@@ -1194,7 +1106,7 @@ def cap_shingle_df(arrs: DataFrame, *, max_df_frac: float = 0.05,
             "shingles",
             F.array_except("shingles",
                            F.array(*[F.lit(s) for s in hot])))
-    kept = ex.join(F.broadcast(hot_df), "shingle", "left_anti")
+    kept = ex.join(F.broadcast(hot_frame()), "shingle", "left_anti")
     rebuilt = (kept.groupBy("id")
                .agg(F.collect_list("shingle").alias("__kept")))
     return (arrs.drop("shingles")

@@ -12,6 +12,7 @@ import hashlib
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from .dedup import corpus_doc_count
 from .partitioning import spread
 
 
@@ -497,13 +498,6 @@ def nearest_refs_arrow(df: DataFrame, *, id_col: str, vec_col: str,
     return df.select(id_col, vec_col).mapInArrow(assign, out_schema)
 
 
-# (applicationId, corpus plan hash, input-file fingerprint) -> corpus
-# row count, for the auto-stride rule — one count per session/corpus,
-# data-identity-keyed like ops.dedup._HOT_SHINGLE_CACHE because a
-# stale count silently changes which rows become centroids.
-_CORPUS_COUNT_CACHE: dict[tuple, int] = {}
-
-
 def auto_centroid_stride(corpus: DataFrame) -> int:
     """The standard IVF sizing rule nlist ≈ √N as a deterministic id
     stride: ``max(1, ceil(N / ceil(√N)))``. A FIXED stride makes the
@@ -523,7 +517,7 @@ def auto_centroid_stride(corpus: DataFrame) -> int:
     count(*) / ceil(sqrt(count(*)))) AS BIGINT))) — ceil/sqrt/÷ are
     correctly-rounded IEEE doubles in both, so the strides agree
     bit-for-bit for any N < 2^53."""
-    return _stride_rule(_corpus_count(corpus))
+    return _stride_rule(corpus_doc_count(corpus))
 
 
 def _stride_rule(n: int) -> int:
@@ -535,19 +529,6 @@ def _stride_rule(n: int) -> int:
     if n <= 1:
         return 1
     return max(1, math.ceil(n / math.ceil(math.sqrt(n))))
-
-
-def _corpus_count(df: DataFrame) -> int:
-    """Memoized corpus row count (one count per session/corpus/data —
-    see :data:`_CORPUS_COUNT_CACHE`); at 100 TB this is a table
-    statistic computed at ingest."""
-    from .dedup import _input_fingerprint
-
-    key = (df.sparkSession.sparkContext.applicationId,
-           df.semanticHash(), _input_fingerprint(df))
-    if key not in _CORPUS_COUNT_CACHE:
-        _CORPUS_COUNT_CACHE[key] = df.count()
-    return _CORPUS_COUNT_CACHE[key]
 
 
 # Per-task GEMM block budget for the all-pairs block-pair ops: ~6 k
@@ -582,7 +563,7 @@ def auto_n_blocks(df: DataFrame, floor: int = 8) -> int:
     longer is. The ``floor`` keeps small corpora at the measured
     8-block layout so existing sub-sf1 plans and their driver-gate
     hashes are untouched."""
-    return _n_blocks_rule(_corpus_count(df), floor)
+    return _n_blocks_rule(corpus_doc_count(df), floor)
 
 
 def ivf_train_quantizer(corpus: DataFrame, *, corpus_id: str = "c_id",

@@ -21,6 +21,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..engine.memo import memo
+
 
 @dataclass
 class DeclaredQuery:
@@ -93,30 +95,33 @@ def _read_events(spark: SparkSession, path: str) -> DataFrame:
     footer (driver-side, one footer read) and branch: micros reads
     natively; nanos reads as raw int64 via an explicit schema and converts
     to a microsecond timestamp JVM-side. Never assume the unit — the
-    wrong divisor silently lands every event in 1970."""
+    wrong divisor silently lands every event in 1970. An unreadable
+    footer raises, naming its file; a path that is not local reads
+    natively."""
+    import glob
+
+    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
+    files = sorted(glob.glob(os.path.join(path, "*.parquet"))) \
+        if os.path.isdir(path) else [path] if os.path.isfile(path) else []
     units: set[str | None] = set()
-    try:
-        import glob
-
-        import pyarrow.parquet as pq
-        files = sorted(glob.glob(os.path.join(path, "*.parquet"))) \
-            if os.path.isdir(path) else [path]
-        # sniff EVERY footer (cheap, driver-side): a mixed-unit dataset
-        # read with one unit would silently corrupt the other parts
-        for f in files:
-            t = pq.read_schema(f).field("ts").type
-            units.add(getattr(t, "unit", None))
-    except Exception:
-        units = set()
+    # sniff EVERY footer (cheap, driver-side): a mixed-unit dataset
+    # read with one unit would silently corrupt the other parts
+    for f in files:
+        try:
+            units.add(getattr(pq.read_schema(f).field("ts").type,
+                              "unit", None))
+        except (OSError, ValueError, KeyError) as e:
+            raise ValueError(
+                f"unreadable events parquet footer: {f}: {e}") from e
     if len(units) > 1:
         raise ValueError(
             f"events parquet at {path} has mixed ts units {units}; "
             "refusing to guess — regenerate the dataset with one unit")
     unit = next(iter(units)) if units else None
     if unit is None:
-        # sniff failure: native read is the safe default — it raises
+        # no unit to sniff: native read is the safe default — it raises
         # loudly on nanos instead of silently dividing, and a cast
         # normalizes Spark 4's inferred TIMESTAMP_NTZ (which forbids the
         # numeric casts downstream consumers rely on)
@@ -137,101 +142,15 @@ def _read_events(spark: SparkSession, path: str) -> DataFrame:
         "ts", F.timestamp_micros(F.expr(f"ts div {divisor}")))
 
 
-def _path_fingerprint(path: str) -> tuple:
-    """(name, size, mtime_ns) identity of one parquet table — a plain
-    file, or a directory layout (``events.parquet/part-*.parquet``,
-    which :func:`_read_events` supports) fingerprinted by its INNER
-    files: a part file overwritten in place keeps the directory's own
-    stat unchanged, so the directory entry alone would lie (r10
-    review #3).
-
-    Known residual (r10 advice #4): on filesystems with coarse mtime
-    granularity, a same-size in-place rewrite landing within one
-    timestamp tick is indistinguishable — session_memo/_TABLE_CACHE
-    would serve the stale result. Acceptable here because tier
-    regeneration (parquet write of ≥thousands of rows) takes well
-    over any real filesystem's tick; if sub-second rewrite tooling
-    ever appears, add a content sentinel (parquet footer length or a
-    generation file) to this tuple."""
-    import os
-
-    try:
-        if os.path.isdir(path):
-            with os.scandir(path) as it:
-                return tuple(sorted(
-                    (e.name, e.stat().st_size, e.stat().st_mtime_ns)
-                    for e in it if e.is_file()))
-        st = os.stat(path)
-        return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
-    except OSError:
-        return ()
-
-
-def _sf_dir_fingerprint(sf_dir: str) -> tuple:
-    """Concatenated :func:`_path_fingerprint` of every parquet table
-    under ``sf_dir`` — the data-identity component of
-    :func:`session_memo` keys. Every session-scoped cache here stores
-    results derived from the tables in ``sf_dir`` (collected models,
-    centroid rows, query matrices — or persisted/checkpointed frames,
-    see the eviction note in session_memo); a path alone identifies
-    the plan, not the data, and a tier regenerated in place
-    mid-session must miss (the same rule as
-    ops.dedup._HOT_SHINGLE_CACHE, r10 review). One scandir of ≤10
-    entries per lookup — driver-side noise."""
-    import os
-
+def tier(sf_dir: str) -> list[str]:
+    """The table paths of a tier: the inputs that query-level memo
+    entries (trained models, collected query sets) are derived from.
+    A directory that cannot be listed locally stands for itself."""
     try:
         with os.scandir(sf_dir) as it:
-            names = sorted(e.name for e in it
-                           if e.name.endswith(".parquet"))
+            return sorted(e.path for e in it if e.name.endswith(".parquet"))
     except OSError:
-        return ()
-    return tuple((n, _path_fingerprint(os.path.join(sf_dir, n)))
-                 for n in names)
-
-
-def session_memo(store: dict, spark: SparkSession, sf_dir: str, compute):
-    """Get-or-compute memoization keyed by (applicationId, sf_dir,
-    data fingerprint) — the shared pattern for fixed artifacts of a
-    query definition (trained models, collected query matrices,
-    quantizers, persisted shingle frames): repeated invocations in one
-    session (bench loops, oracle sweeps, the plan-contract corpus
-    sweep) must not re-pay their Spark jobs. Keyed by applicationId so
-    a restarted SparkContext never sees a stale artifact, and by
-    :func:`_sf_dir_fingerprint` so a tier rewritten at the same path
-    never serves stale results. A superseded entry (same app +
-    sf_dir, older fingerprint) is EVICTED when the new one is
-    computed — some stores hold .persist()ed / localCheckpoint'd
-    DataFrames (llm_dedup), and without eviction every in-place
-    rewrite would pin another copy's executor storage for the session
-    (the scale_session docstring's memo-thrash failure mode). ``None``
-    is a cachable result (oversized-split sentinels), hence the
-    explicit `in` check."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir, _sf_dir_fingerprint(sf_dir))
-    if key not in store:
-        for old in [k for k in store if k[:2] == (app_id, sf_dir)]:
-            try:
-                unpersist = getattr(store[old], "unpersist", None)
-                if callable(unpersist):
-                    unpersist(False)
-            except Exception:
-                pass
-            del store[old]
-        store[key] = compute()
-    return store[key]
-
-
-# (appId, sf_dir, table, path fingerprint) -> DataFrame. A DataFrame is
-# an immutable logical plan, so reuse across queries is safe; what it
-# saves is the per-read driver-side work (file listing + parquet
-# footer/schema resolution) that otherwise repeats for every query in a
-# bench/gate run. Keyed by applicationId so a restarted SparkContext
-# never sees stale plans, and by the path fingerprint so a table
-# rewritten in place re-resolves its file index — without it the
-# fingerprinted session_memo layer above would miss correctly but then
-# recompute from THIS cache's stale listing (r10 review)."""
-_TABLE_CACHE: dict[tuple, DataFrame] = {}
+        return [sf_dir]
 
 
 ALL_TABLES = ("region", "nation", "customer", "supplier", "part",
@@ -249,21 +168,15 @@ def register_views(spark: SparkSession, sf_dir: str,
 
 
 def tables(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    """Load driver test tables as DataFrames (plan-cached per session)."""
-    app_id = spark.sparkContext.applicationId
+    """Load driver test tables as DataFrames. A DataFrame is an immutable
+    plan, so each table's read (file listing, footer and schema
+    resolution) is memoised until its files change."""
     out = []
     for n in names:
         path = f"{sf_dir}/{n}.parquet"
-        key = (app_id, sf_dir, n, _path_fingerprint(path))
-        df = _TABLE_CACHE.get(key)
-        if df is None:
-            for old in [k for k in _TABLE_CACHE
-                        if k[0] == app_id and k[1] == sf_dir and k[2] == n]:
-                del _TABLE_CACHE[old]
-            df = (_read_events(spark, path) if n == "events"
-                  else spark.read.parquet(path))
-            _TABLE_CACHE[key] = df
-        out.append(df)
+        out.append(memo(spark, ("table", sf_dir, n), (path,),
+                        lambda: _read_events(spark, path) if n == "events"
+                        else spark.read.parquet(path)))
     return out
 
 
@@ -293,33 +206,34 @@ def one_sql(spark: SparkSession, sf_dir: str, names: "tuple[str, ...]",
 def head_rows_fast(sf_dir: str, table: str, *, key_col: str, bound: int,
                    cols: "tuple[str, ...]") -> "list[tuple] | None":
     """Driver-side footer-pruned read of a broadcast-small key range —
-    the fast path behind the collected query/test-split memos (r15,
-    bench plan-build): the equivalent Spark collect schedules a real
-    job (scan + filter + collect, ~0.3-0.4 s of per-session fixed cost
-    on a busy box) for a few hundred rows that parquet row-group
-    statistics prune to one footer read. Values are identical — both
-    paths surface the file's float32 embeddings as Python floats.
-    Returns None when the table layout isn't a plain parquet file/dir
-    (callers fall back to the Spark collect)."""
-    try:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-    except ImportError:  # pragma: no cover - pyarrow is baked in
-        return None
+    the fast path behind the collected query/test-split memos: the
+    equivalent Spark collect schedules a real job (~0.3-0.4 s of
+    per-session fixed cost) for a few hundred rows that parquet
+    row-group statistics prune to one footer read. Values are identical
+    — both paths surface the file's float32 embeddings as Python floats.
+    Returns None when the table is not a local parquet file or directory
+    of part files (callers fall back to the Spark collect); an
+    unreadable file raises, naming it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     p = os.path.join(sf_dir, f"{table}.parquet")
-    try:
-        if os.path.isfile(p):
-            paths = [p]
-        elif os.path.isdir(p):
-            paths = sorted(os.path.join(p, f) for f in os.listdir(p)
-                           if f.endswith(".parquet"))
-        else:
-            return None
-        parts = [pq.read_table(f, columns=list(cols),
-                               filters=[(key_col, "<", bound)])
-                 for f in paths]
-        t = pa.concat_tables(parts)
-    except Exception:
+    if os.path.isfile(p):
+        paths = [p]
+    elif os.path.isdir(p):
+        paths = sorted(os.path.join(p, f) for f in os.listdir(p)
+                       if f.endswith(".parquet"))
+    else:
+        paths = []
+    if not paths:
         return None
+    parts = []
+    for f in paths:
+        try:
+            parts.append(pq.read_table(f, columns=list(cols),
+                                       filters=[(key_col, "<", bound)]))
+        except (OSError, ValueError) as e:
+            raise ValueError(f"unreadable parquet file: {f}: {e}") from e
+    t = pa.concat_tables(parts)
     return list(zip(*[t.column(c).to_pylist() for c in cols])) \
         if t.num_rows else []

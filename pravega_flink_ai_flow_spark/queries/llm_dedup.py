@@ -11,41 +11,30 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from . import declared, session_memo, tables
+from . import declared, tables, tier
+from ..engine.memo import memo
 from ..ops import dedup
 
-# (appId, sf_dir) -> components DataFrame. l2_dedup_clusters and
-# l2_dedup_keep both need the full pairs -> connected-components
-# pipeline (signature build, band join, Jaccard verify, the iterative
-# label propagation's per-round jobs); connected_components returns a
-# localCheckpoint'd frame, so one computation serves both queries for
-# the price of none. Same rationale as the trained-model memos.
-_COMPONENTS_MEMO: dict = {}
-
-
 def _dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The localCheckpoint'd connected components of the near-dup pairs,
+    shared by l2_dedup_clusters and l2_dedup_keep."""
     def compute() -> DataFrame:
         (docs,) = tables(spark, sf_dir, "documents")
         pairs = dedup.minhash_dedup_pairs(
             docs, "doc_id", "text", k=3, num_hashes=64, bands=16,
             threshold=0.7)
         return dedup.connected_components(pairs)
-    return session_memo(_COMPONENTS_MEMO, spark, sf_dir, compute)
-
-
-# (appId, sf_dir) -> persisted k=3 shingle-array frame, shared by the
-# Jaccard-candidate queries (l2_ngram_jaccard_pairs and
-# l2_edit_distance_pairs build the IDENTICAL frame; one persist serves
-# both instead of two separate cache copies + two explode passes).
-_SHINGLE_ARRAYS_MEMO: dict = {}
+    return memo(spark, ("dedup_components", sf_dir), tier(sf_dir), compute)
 
 
 def _shingle_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The persisted k=3 shingle-array frame that the Jaccard-candidate
+    queries share: one cache copy and one explode pass."""
     def compute() -> DataFrame:
         (docs,) = tables(spark, sf_dir, "documents")
         return dedup.shingle_arrays(
             dedup.spread(docs), "doc_id", "text", k=3).persist()
-    return session_memo(_SHINGLE_ARRAYS_MEMO, spark, sf_dir, compute)
+    return memo(spark, ("shingle_arrays", sf_dir), tier(sf_dir), compute)
 
 # Shared SQL fragment: exact word-3-gram shingle sets per doc.
 _SHINGLES_CTE = """

@@ -8,7 +8,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
-from . import declared, session_memo, tables
+from . import declared, tables, tier
+from ..engine.memo import memo
 from ..ops import text as T
 
 
@@ -458,28 +459,23 @@ def l6_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def l6_heavy_hitter_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heavy hitters: terms above 1% of total corpus tokens — ONE
-    exact aggregation (map-side partial counts). The corpus total is a
-    global window SUM over the per-term aggregate itself (r16, found by
-    the census re-run): the old 1-row broadcast total re-ran the whole
-    corpus explode under the join's build side — the same
-    no-common-subtree disease the r15 q11/q15 rewrite cured, and
-    Σ per-term counts IS the token total. The single-partition window
-    moves only the ndv-sized term histogram (the q11 caveat applies if
-    the term universe ever outgrows one task). This is the oracle twin
-    of the count-min sketch path (ops.sketch — bounded state when the
-    term universe itself can't be shuffled); pytest bounds the sketch's
+    exact aggregation (map-side partial counts). The per-term histogram
+    is checkpointed and the token total (Σ per-term counts) is summed
+    from it on the driver, so the corpus is exploded once and no task
+    receives the whole vocabulary. This is the oracle twin of the
+    count-min sketch path (ops.sketch — bounded state when the term
+    universe itself can't be shuffled); pytest bounds the sketch's
     estimates against these exact counts."""
     (docs,) = tables(spark, sf_dir, "documents")
     toks = docs.select(F.explode(
         F.filter(F.split(F.trim("text"), r"\s+"), lambda t: t != "")
     ).alias("term"))
-    return (toks.groupBy("term")
-            .agg(F.count("*").alias("n_occurrences"))
-            .withColumn("__total",
-                        F.sum("n_occurrences").over(Window.partitionBy()))
-            .filter(F.col("n_occurrences") > F.col("__total") * 0.01)
+    hist = (toks.groupBy("term").agg(F.count("*").alias("n_occurrences"))
+            .localCheckpoint())
+    total = F.lit(hist.agg(F.sum("n_occurrences")).first()[0]).cast("long")
+    return (hist.filter(F.col("n_occurrences") > total * 0.01)
             .select("term", "n_occurrences",
-                    (F.col("n_occurrences") / F.col("__total")).alias("share")))
+                    (F.col("n_occurrences") / total).alias("share")))
 
 
 _CHUNK, _STRIDE = 64, 48   # tokens per chunk, stride (16-token overlap)
@@ -636,12 +632,6 @@ def l6_boilerplate_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("doc_id"))
 
 
-# (applicationId, sf_dir) -> whether the bigram probability table fits
-# the broadcast budget (see the guard in l4_bigram_lm_score).
-_BIGRAM_BCAST_CACHE: dict[tuple[str, str], bool] = {}
-_DSIR_BCAST_CACHE: dict[tuple[str, str], bool] = {}
-
-
 def _bigram_pairs(docs: DataFrame) -> DataFrame:
     """Lowercased adjacent word-pair stream ``(doc_id, w1, w2)`` from
     native array expressions only (split → array_remove → arrays_zip
@@ -757,8 +747,8 @@ def l4_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # repeated invocations must not re-pay the probe job) — and fall
     # back to the scale-safe shuffle join on the (w1, w2) key when the
     # model outgrows the broadcast budget.
-    broadcastable = session_memo(
-        _BIGRAM_BCAST_CACHE, spark, sf_dir,
+    broadcastable = memo(
+        spark, ("bigram_bcast", sf_dir), tier(sf_dir),
         lambda: cnt2.count() <= 1_000_000)
     scoring_model = F.broadcast(probs) if broadcastable else probs
     return (bigrams
@@ -855,8 +845,8 @@ def l6_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
                       - F.log2((F.col("sc") + 1).cast("double")
                                / (F.col("st") + F.col("v"))))
                      .alias("__li")))
-    broadcastable = session_memo(
-        _DSIR_BCAST_CACHE, spark, sf_dir,
+    broadcastable = memo(
+        spark, ("dsir_bcast", sf_dir), tier(sf_dir),
         lambda: cnt.count() <= 1_000_000)
     scoring_model = F.broadcast(model) if broadcastable else model
     return (bigrams
@@ -926,12 +916,6 @@ def l4_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("doc_id", "rank"))
 
 
-# (applicationId, sf_dir) -> (median threshold, fitted softmax model).
-# Same memoization rationale as m5 / the ANN index caches: the trained
-# classifier is a fixed artifact of the query definition.
-_QC_MODEL_CACHE: dict[tuple[str, str], tuple] = {}
-
-
 @declared(
     "l6_quality_classifier",
     oracle=None,   # iterative GD training on hashed features — not
@@ -987,7 +971,7 @@ def l6_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
             epochs=60)
         return thr, model
 
-    thr, model = session_memo(_QC_MODEL_CACHE, spark, sf_dir, fit)
+    thr, model = memo(spark, ("qc_model", sf_dir), tier(sf_dir), fit)
     feats = _labeled_feats(thr)
     diff = model.W[:, 1] - model.W[:, 0]     # decision score > 0 → keep
     coef = F.array(*[F.lit(float(c)) for c in diff[:-1]])
@@ -1141,10 +1125,6 @@ def l4_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("doc_id"))
 
 
-# (appId, sf_dir) -> learned BPE merge list (fixed artifact of the data)
-_BPE_MERGES_CACHE: dict[tuple[str, str], object] = {}
-
-
 @declared(
     "l4_bpe_trained_tokenize",
     oracle=None,   # iterative merge learning is not SQL-expressible;
@@ -1171,8 +1151,8 @@ def l4_bpe_trained_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..ops import bpe
 
     (docs,) = tables(spark, sf_dir, "documents")
-    merges = session_memo(
-        _BPE_MERGES_CACHE, spark, sf_dir,
+    merges = memo(
+        spark, ("bpe_merges", sf_dir), tier(sf_dir),
         lambda: bpe.train_bpe(bpe.word_freq(docs), n_merges=40))
     return (bpe.encode_frame(docs.select("doc_id", "text"), merges)
             .orderBy("doc_id"))

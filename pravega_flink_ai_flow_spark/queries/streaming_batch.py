@@ -11,13 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from . import declared, session_memo, tables
-
-# t16's corpus-wide day-grid bounds — a fixed artifact of the data,
-# memoized so repeated builds in one session (bench loops, sweeps)
-# don't re-pay the bounds aggregate job (r15, same pattern as
-# ops.similarity._corpus_count).
-_T16_BOUNDS_MEMO: dict = {}
+from . import declared, tables, tier
+from ..engine.memo import memo
 from ..ops.relational import session_windows
 
 
@@ -469,8 +464,8 @@ def t16_user_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                       F.expr("unix_micros(ts) div 86400000000")
                       .alias("bucket"))
              .agg(F.sum("value").alias("v")))
-    b0, b1 = session_memo(
-        _T16_BOUNDS_MEMO, spark, sf_dir,
+    b0, b1 = memo(
+        spark, ("t16_day_bounds", sf_dir), tier(sf_dir),
         lambda: tuple(daily.agg(F.min("bucket"), F.max("bucket")).first()))
     b0, n_days = int(b0), int(b1 - b0 + 1)
 

@@ -105,8 +105,8 @@ def test_pravega_unbounded_source_is_streaming(spark, tmp_workdir):
     assert env.from_path("s").isStreaming
 
 
-def test_datagen_connector(spark):
-    env = FlinkDdlEnv(spark)
+def test_datagen_connector(spark, tmp_workdir):
+    env = FlinkDdlEnv(spark, stream_root=tmp_workdir)
     env.execute_sql("""
         create table gen (a BIGINT, b DOUBLE) with (
             'connector' = 'datagen', 'number-of-rows' = '5'
@@ -117,7 +117,7 @@ def test_datagen_connector(spark):
     assert rows[0].__fields__ == ["a", "b"]
 
 
-def test_datagen_noncastable_types(spark):
+def test_datagen_noncastable_types(spark, tmp_workdir):
     """DATE/TIMESTAMP/BOOLEAN/BINARY datagen columns need explicit
     constructions — a blind bigint cast to these is invalid under ANSI
     (the driver's vanilla session keeps ANSI ON), so a datagen DDL
@@ -126,7 +126,7 @@ def test_datagen_noncastable_types(spark):
     clear error instead of a Catalyst cast failure."""
     import datetime
 
-    env = FlinkDdlEnv(spark)
+    env = FlinkDdlEnv(spark, stream_root=tmp_workdir)
     env.execute_sql("""
         create table gen2 (d DATE, t TIMESTAMP(3), f BOOLEAN, raw BYTES)
         with ('connector' = 'datagen', 'number-of-rows' = '4')
@@ -148,8 +148,8 @@ def test_datagen_noncastable_types(spark):
         env.from_path("gen3")
 
 
-def test_bad_ddl_raises(spark):
-    env = FlinkDdlEnv(spark)
+def test_bad_ddl_raises(spark, tmp_workdir):
+    env = FlinkDdlEnv(spark, stream_root=tmp_workdir)
     with pytest.raises(ValueError):
         env.execute_sql("SELECT 1")
     with pytest.raises(ValueError):

@@ -811,11 +811,11 @@ def test_knn_collect_guard_falls_back_to_distributed(spark, monkeypatch):
     sf = "/root/testdata/sf0.001"
     expected = {tuple(r) for r in mq._spark_knn(spark, sf).collect()}
     monkeypatch.setattr(mq, "_MAX_TEST_ROWS", 3)   # force the guard to trip
-    mq._TEST_SPLIT_CACHE.clear()
     assert mq._test_rows(spark, sf) is None
     got = {tuple(r) for r in mq.m2_knn_predict(spark, sf).collect()}
     assert got == expected
-    mq._TEST_SPLIT_CACHE.clear()                   # don't poison other tests
+    monkeypatch.undo()                             # the guard is in the key
+    assert len(mq._test_rows(spark, sf)) == mq._SPLIT
 
 
 def test_knn_closure_labels_match_fold(spark):
@@ -1375,88 +1375,81 @@ def test_kmeans_distributed_matches_driver_numpy(spark):
 
 
 def test_session_memo_misses_and_evicts_on_tier_rewrite(spark, tmp_path):
-    """The data-identity contract of the session caches (r10 review):
-    a tier rewritten IN PLACE mid-session must (a) miss session_memo
+    """A tier rewritten IN PLACE mid-session must (a) miss the memo
     (fresh compute, not stale collected results), (b) evict the
     superseded entry and unpersist a persisted DataFrame value, and
-    (c) miss the tables() plan cache so the recompute doesn't read a
-    stale file index one layer down."""
+    (c) miss the tables() entry so the recompute doesn't read a stale
+    file index one layer down."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from pravega_flink_ai_flow_spark.queries import (
-        _TABLE_CACHE, session_memo, tables,
-    )
+    from pravega_flink_ai_flow_spark.engine import memo as m
+    from pravega_flink_ai_flow_spark.queries import tables, tier
 
-    tier = tmp_path / "tier"
-    tier.mkdir()
-    path = str(tier / "documents.parquet")
+    tier_dir = tmp_path / "tier"
+    tier_dir.mkdir()
+    sf = str(tier_dir)
+    path = str(tier_dir / "documents.parquet")
 
     def write(vals):
         pq.write_table(pa.table({"doc_id": list(range(len(vals))),
                                  "text": vals}), path)
 
     write(["alpha", "beta"])
-    store: dict = {}
     calls = []
 
     def compute():
-        (docs,) = tables(spark, str(tier), "documents")
+        (docs,) = tables(spark, sf, "documents")
         df = docs.persist()
         calls.append(df)
         return df
 
-    first = session_memo(store, spark, str(tier), compute)
-    assert session_memo(store, spark, str(tier), compute) is first
+    key = ("rewrite_probe", sf)
+    first = m.memo(spark, key, tier(sf), compute)
+    assert m.memo(spark, key, tier(sf), compute) is first
     assert len(calls) == 1 and first.count() == 2
 
     write(["alpha", "beta", "gamma"])  # same path, new data
-    second = session_memo(store, spark, str(tier), compute)
+    second = m.memo(spark, key, tier(sf), compute)
     assert len(calls) == 2 and second is not first
     assert second.count() == 3, \
         "tables() served a stale plan after the in-place rewrite"
     assert not first.is_cached, "superseded persisted memo not evicted"
-    assert len(store) == 1, "superseded session_memo key not removed"
-    assert len([k for k in _TABLE_CACHE
-                if k[1] == str(tier)]) == 1, \
-        "superseded _TABLE_CACHE entry not removed"
+    assert len([k for k in m._STORE if k[1] == key]) == 1, \
+        "superseded memo entry not removed"
+    assert len([k for k in m._STORE
+                if k[1][:2] == ("table", sf)]) == 1, \
+        "superseded tables() entry not removed"
+    second.unpersist()
 
 
 def test_input_fingerprint_never_stats_local_path_of_remote_uri(spark, tmp_path):
-    """r10 advice #2: ``_input_fingerprint`` must not feed a REMOTE
-    URI's path to ``os.stat`` — an ``s3a://bucket/<path>`` whose path
-    happens to exist locally would fingerprint the unrelated local
-    file (wrong-but-plausible identity). Remote schemes go through the
-    URI's own Hadoop FileSystem; schemes Hadoop can't serve degrade to
-    the documented (uri, -1, -1) path-identity fallback. Local
-    ``file:`` URIs keep the exact os.stat identity."""
-    from pravega_flink_ai_flow_spark.ops.dedup import _input_fingerprint
+    """The memo fingerprint must not feed a REMOTE URI's path to
+    ``os.stat`` — an ``s3a://bucket/<path>`` whose path happens to exist
+    locally would fingerprint the unrelated local file (wrong-but-
+    plausible identity). Remote schemes go through the URI's own Hadoop
+    FileSystem; schemes Hadoop can't serve degrade to the documented
+    (uri, -1, -1) path-identity fallback. Local ``file:`` URIs keep the
+    exact os.stat identity."""
+    from pravega_flink_ai_flow_spark.engine.memo import fingerprint
 
     local = tmp_path / "decoy.txt"
     local.write_text("decoy")
     st = os.stat(local)
 
-    class _FakeDF:
-        def __init__(self, uris):
-            self.sparkSession = spark
-            self._uris = uris
-
-        def inputFiles(self):
-            return self._uris
-
     # (a) file: URI → real stat identity
-    (fp,) = _input_fingerprint(_FakeDF([local.as_uri()]))
-    assert fp == (local.as_uri(), st.st_size, st.st_mtime_ns)
+    (fp,) = fingerprint(spark, [local.as_uri()])
+    assert fp == (str(local), st.st_size, st.st_mtime_ns)
 
     # (b) remote URI whose PATH exists locally → must NOT be the local
     # stat; s3a has no FileSystem impl in this build, so the documented
     # degrade is (uri, -1, -1)
     remote = f"s3a://bucket{local}"
-    (fp,) = _input_fingerprint(_FakeDF([remote]))
+    (fp,) = fingerprint(spark, [remote])
     assert fp == (remote, -1, -1)
 
     # (c) unknown scheme → same safe degrade, no exception
-    (fp,) = _input_fingerprint(_FakeDF(["nosuchfs://x/y"]))
+    (fp,) = fingerprint(spark, ["nosuchfs://x/y"])
     assert fp == ("nosuchfs://x/y", -1, -1)
 
 

@@ -74,8 +74,6 @@ SINGLE_PARTITION = {
     "l4_pmi_collocations": (3, _PARTIALS + ", one per document count"),
     "l4_tfidf_keywords": (1, _PARTIALS + " (document count)"),
     "l6_dsir_importance": (1, _PARTIALS + " (corpus totals)"),
-    "l6_heavy_hitter_terms": (
-        1, "vocabulary-sized (ROADMAP carried-over item)"),
     "m7_naive_bayes_predict": (
         2, "one row per language (prior window); " + _PARTIALS
            + " (vocabulary size)"),

@@ -429,7 +429,7 @@ def test_reused_sink_planner_worker_reads_no_zip_directory(
     assert [pid for pid, _ in commits] == [first_pid] * len(commits)
 
 
-def test_ddl_socket_transport(spark, server):
+def test_ddl_socket_transport(spark, server, tmp_path):
     """The reference's CREATE TABLE … WITH('connector'='pravega',
     'controller-uri'='tcp://…') shape, opted into the network path."""
     from pravega_flink_ai_flow_spark.engine.ddl import FlinkDdlEnv
@@ -437,7 +437,7 @@ def test_ddl_socket_transport(spark, server):
     server.append("scope", "train-stream",
                   [{"sl": 6.4, "sw": 2.8, "pl": 5.6, "pw": 2.2, "type": 2.0}
                    for _ in range(30)])
-    env = FlinkDdlEnv(spark)
+    env = FlinkDdlEnv(spark, stream_root=str(tmp_path))
     env.execute_sql(f"""
         create table train (sl DOUBLE, sw DOUBLE, pl DOUBLE, pw DOUBLE,
                             type DOUBLE) with (
