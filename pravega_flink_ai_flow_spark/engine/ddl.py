@@ -40,6 +40,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructField, StructType, _parse_datatype_string
 
@@ -171,8 +172,10 @@ class FlinkDdlEnv:
                 and "scan.streams" in opts):
             try:
                 self.from_path(t.name).createOrReplaceTempView(t.name)
-            except Exception:
-                pass  # sink-only tables may point at not-yet-written paths
+            except AnalysisException as e:
+                # sink-only tables may point at not-yet-written paths
+                if e.getCondition() != "PATH_NOT_FOUND":
+                    raise
         return t
 
     # -- source ------------------------------------------------------------

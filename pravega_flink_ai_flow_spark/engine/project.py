@@ -41,7 +41,8 @@ def init_project(yaml_path: str, *, spark: SparkSession | None = None,
     """``af.init_ai_flow_context()`` analog: load ``project.yaml``,
     construct the shared session + catalog + registry + workflow
     operation. ``state_dir`` (default: alongside the yaml) holds the
-    catalog/registry JSON state so a reopened project sees its
+    catalog JSON file and, unless ``db_uri`` names another database, the
+    registry's SQLite ``aiflow.db``, so a reopened project sees its
     registrations, like the reference's metadata DB."""
     with open(yaml_path) as f:
         data = _load_yaml(f.read()) or {}

@@ -13,7 +13,7 @@ Reference surface being re-expressed Spark-first:
   by the test harness) → vectorized parquet reader with predicate
   pushdown / column pruning for free.
 - Literal rows (``pd.DataFrame.from_records``, ``processor.py:248-249``)
-  → ``spark.createDataFrame``.
+  → the same pandas frame into ``spark.createDataFrame``.
 
 Schemas are explicit everywhere — the reference always declares DDL
 schemas and reads its CSVs headerless (SURVEY.md §1.3).
@@ -24,7 +24,7 @@ from __future__ import annotations
 from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 _FORMATS = ("csv", "json", "parquet")
 
@@ -36,9 +36,11 @@ def read(spark: SparkSession, data_format: str, uri: str,
     if data_format == "csv":
         return read_csv(spark, uri, schema, **options)
     if data_format == "json":
-        return read_json(spark, uri, schema, **options)
+        return spark.read.schema(schema).options(**options).json(uri)
     if data_format == "parquet":
-        return read_parquet(spark, uri)
+        # parquet carries its own schema; Catalyst prunes columns and
+        # pushes predicates into the scan
+        return spark.read.parquet(uri)
     if data_format == "stream-dir":
         from .pravega_sim import StreamDir
         return StreamDir(uri, schema).read_bounded(spark)
@@ -74,21 +76,20 @@ def read_csv(spark: SparkSession, path: str, schema: StructType,
     return reader.options(**options).csv(path)
 
 
-def read_json(spark: SparkSession, path: str, schema: StructType,
-              **options) -> DataFrame:
-    return spark.read.schema(schema).options(**options).json(path)
-
-
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    # Parquet carries its own schema; Catalyst prunes columns and pushes
-    # predicates into the scan (check .explain for PushedFilters/ReadSchema).
-    return spark.read.parquet(path)
-
-
 def from_rows(spark: SparkSession, rows: Iterable, schema: StructType | str) -> DataFrame:
     """In-memory rows source — the reference builds tables from literal
-    records via ``pd.DataFrame.from_records`` (processor.py:248-249)."""
-    return spark.createDataFrame(list(rows), schema)
+    records via ``pd.DataFrame.from_records`` (processor.py:248-249).
+
+    Built through pandas so that, with Arrow on, the JVM decodes the
+    rows itself: a list of rows would run an RDD Python task, whose
+    worker environment differs from the SQL tasks' and so starts a second
+    Python daemon. ``schema`` is a ``StructType`` or a DDL string."""
+    import pandas as pd  # not at import: the data-source workers skip it
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    pdf = pd.DataFrame.from_records(list(rows), columns=schema.names)
+    return spark.createDataFrame(pdf, schema)
 
 
 def to_pandas(df: DataFrame):

@@ -1,8 +1,8 @@
 from .models import KNNClassifier, load_model, save_model
 from .registry import (ModelRegistry, ModelVersionStage, ModelEvent,
-                       SqliteModelRegistry, open_registry)
+                       open_registry)
 from . import ops
 
 __all__ = ["KNNClassifier", "load_model", "save_model",
            "ModelRegistry", "ModelVersionStage", "ModelEvent",
-           "SqliteModelRegistry", "open_registry", "ops"]
+           "open_registry", "ops"]

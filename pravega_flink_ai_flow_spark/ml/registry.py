@@ -6,30 +6,28 @@ Re-expresses the AI Flow model center the reference depends on:
 ``af.get_deployed_model_version`` / ``get_latest_generated_model_version``
 (processor.py:165-166, 240), ``af.update_model_version`` with stages
 GENERATED → VALIDATED → DEPLOYED → DEPRECATED (processor.py:26,
-168-198). Two storage backends, selected by ``open_registry(uri)``:
+168-198).
 
-- ``sqlite:///path/to/db`` → :class:`SqliteModelRegistry` — the
-  reference's own default metadata store (``db_uri:
-  sqlite:///${AIFLOW_HOME}/aiflow.db``, README.md:39); transactional
-  and multi-process-safe (every mutation is one IMMEDIATE
-  transaction, version numbers allocated under the write lock).
-- a bare file path → JSON-file :class:`ModelRegistry` (single-writer,
-  human-readable — the demo/test default); each write replaces the
-  whole file atomically.
-
-Any other ``scheme://`` URI raises ``ValueError``.
+The store is SQLite, the reference's own default metadata store
+(``db_uri: sqlite:///${AIFLOW_HOME}/aiflow.db``, README.md:39):
+every read hits the DB and every mutation is one ``BEGIN IMMEDIATE``
+transaction, so version numbers are allocated under the write lock and
+writers in separate processes are safe. ``open_registry(uri)`` accepts
+``sqlite:///path/to/db`` and raises ``ValueError`` for anything else.
 
 Every stage transition publishes an event to the in-process bus,
 mirroring the notification-server events that drive the reference's
-control edges (batch_train_batch_predict.py:115-120).
+control edges (batch_train_batch_predict.py:115-120). Events fire in
+the process that made the mutation, like the reference's notification
+client.
 """
 
 from __future__ import annotations
 
-import json
+import contextlib
 import os
-import threading
-from dataclasses import dataclass, asdict, field
+import sqlite3
+from dataclasses import dataclass, field
 from typing import Callable, Optional
 
 
@@ -70,19 +68,28 @@ class ModelMeta:
 
 
 class ModelRegistry:
-    """In-process, optionally file-persisted model registry."""
+    """SQLite-backed model registry over the database file ``db_path``."""
 
-    def __init__(self, path: str | None = None):
-        self._path = path
-        self._models: dict[str, ModelMeta] = {}
+    def __init__(self, db_path: str):
+        self._db_path = db_path
         self._listeners: list[Callable[[str, str, ModelVersion], None]] = []
-        self._lock = threading.Lock()
-        if path and os.path.exists(path):
-            with open(path) as f:
-                for m in json.load(f):
-                    meta = ModelMeta(m["name"], m.get("model_desc", ""))
-                    meta.versions = [ModelVersion(**v) for v in m["versions"]]
-                    self._models[meta.name] = meta
+        os.makedirs(os.path.dirname(os.path.abspath(db_path)), exist_ok=True)
+        with self._conn() as con:
+            con.execute("""CREATE TABLE IF NOT EXISTS models (
+                name TEXT PRIMARY KEY, model_desc TEXT NOT NULL DEFAULT '')""")
+            con.execute("""CREATE TABLE IF NOT EXISTS model_versions (
+                model_name TEXT NOT NULL, version INTEGER NOT NULL,
+                model_path TEXT NOT NULL,
+                current_stage TEXT NOT NULL DEFAULT 'GENERATED',
+                PRIMARY KEY (model_name, version))""")
+
+    def _conn(self):
+        # contextlib.closing: sqlite3's own context manager commits but
+        # never CLOSES — per-op connections must not leak file handles
+        con = sqlite3.connect(self._db_path, timeout=30.0,
+                              isolation_level=None)  # explicit txns
+        con.execute("PRAGMA journal_mode=WAL")
+        return contextlib.closing(con)
 
     # -- event bus hookup ---------------------------------------------------
 
@@ -98,112 +105,6 @@ class ModelRegistry:
     # -- API mirroring the reference's af.* calls ---------------------------
 
     def register_model(self, model_name: str, model_desc: str = "") -> ModelMeta:
-        with self._lock:
-            meta = self._models.setdefault(model_name, ModelMeta(model_name, model_desc))
-            self._persist()
-        return meta
-
-    def register_model_version(self, model_name: str, model_path: str) -> ModelVersion:
-        """New version starts GENERATED and emits MODEL_GENERATED —
-        the event the reference's validate job listens for
-        (batch_train_batch_predict.py:115-117)."""
-        with self._lock:
-            meta = self._models.setdefault(model_name, ModelMeta(model_name))
-            version = len(meta.versions) + 1
-            mv = ModelVersion(model_name, version, model_path)
-            meta.versions.append(mv)
-            self._persist()
-        self._emit(ModelEvent.MODEL_GENERATED, mv)
-        return mv
-
-    def update_model_version(self, model_name: str, model_version: int,
-                             current_stage: str) -> ModelVersion:
-        with self._lock:
-            mv = self._find(model_name, model_version)
-            mv.current_stage = current_stage
-            self._persist()
-        self._emit(_STAGE_EVENT[current_stage], mv)
-        return mv
-
-    def get_deployed_model_version(self, model_name: str) -> Optional[ModelVersion]:
-        for mv in self._versions(model_name):
-            if mv.current_stage == ModelVersionStage.DEPLOYED:
-                return mv
-        return None
-
-    def get_latest_generated_model_version(self, model_name: str) -> Optional[ModelVersion]:
-        gen = [mv for mv in self._versions(model_name)
-               if mv.current_stage == ModelVersionStage.GENERATED]
-        return gen[-1] if gen else None
-
-    def versions(self, model_name: str) -> list[ModelVersion]:
-        return list(self._versions(model_name))
-
-    # -- internals ----------------------------------------------------------
-
-    def _versions(self, model_name: str) -> list[ModelVersion]:
-        meta = self._models.get(model_name)
-        return meta.versions if meta else []
-
-    def _find(self, model_name: str, version: int) -> ModelVersion:
-        for mv in self._versions(model_name):
-            if mv.version == version:
-                return mv
-        raise KeyError(f"{model_name} v{version} not registered")
-
-    def _persist(self) -> None:
-        if not self._path:
-            return
-        data = [{"name": m.name, "model_desc": m.model_desc,
-                 "versions": [asdict(v) for v in m.versions]}
-                for m in self._models.values()]
-        # temp-file + os.replace: a crash mid-write leaves the previous
-        # file intact instead of a truncated one the next open cannot load
-        tmp = f"{self._path}.tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump(data, f, indent=2)
-        os.replace(tmp, self._path)
-
-
-class SqliteModelRegistry(ModelRegistry):
-    """SQLite-backed registry — the reference's own default metadata
-    store (``db_uri: sqlite:///${AIFLOW_HOME}/aiflow.db``, README.md:39).
-
-    Unlike the JSON backend (load-once, write-whole-file), every read
-    hits the DB and every mutation is one ``BEGIN IMMEDIATE``
-    transaction, so concurrent writers in separate PROCESSES are safe:
-    version numbers are allocated under SQLite's write lock, and stage
-    transitions made by one process are visible to the next reader in
-    another. The in-process event bus semantics are unchanged (events
-    fire in the process that performed the mutation, exactly like the
-    reference's notification client)."""
-
-    def __init__(self, db_path: str):
-        super().__init__(path=None)
-        self._db_path = db_path
-        os.makedirs(os.path.dirname(os.path.abspath(db_path)), exist_ok=True)
-        with self._conn() as con:
-            con.execute("""CREATE TABLE IF NOT EXISTS models (
-                name TEXT PRIMARY KEY, model_desc TEXT NOT NULL DEFAULT '')""")
-            con.execute("""CREATE TABLE IF NOT EXISTS model_versions (
-                model_name TEXT NOT NULL, version INTEGER NOT NULL,
-                model_path TEXT NOT NULL,
-                current_stage TEXT NOT NULL DEFAULT 'GENERATED',
-                PRIMARY KEY (model_name, version))""")
-
-    def _conn(self):
-        # contextlib.closing: sqlite3's own context manager commits but
-        # never CLOSES — per-op connections must not leak file handles
-        import contextlib
-        import sqlite3
-        con = sqlite3.connect(self._db_path, timeout=30.0,
-                              isolation_level=None)  # explicit txns
-        con.execute("PRAGMA journal_mode=WAL")
-        return contextlib.closing(con)
-
-    # -- API (same surface as the JSON registry) ----------------------------
-
-    def register_model(self, model_name: str, model_desc: str = "") -> ModelMeta:
         with self._conn() as con:
             con.execute("BEGIN IMMEDIATE")
             con.execute("INSERT OR IGNORE INTO models(name, model_desc) "
@@ -216,6 +117,9 @@ class SqliteModelRegistry(ModelRegistry):
         return meta
 
     def register_model_version(self, model_name: str, model_path: str) -> ModelVersion:
+        """New version starts GENERATED and emits MODEL_GENERATED —
+        the event the reference's validate job listens for
+        (batch_train_batch_predict.py:115-117)."""
         with self._conn() as con:
             con.execute("BEGIN IMMEDIATE")   # version alloc under write lock
             con.execute("INSERT OR IGNORE INTO models(name) VALUES (?)",
@@ -252,7 +156,18 @@ class SqliteModelRegistry(ModelRegistry):
         self._emit(_STAGE_EVENT[current_stage], mv)
         return mv
 
-    def _versions(self, model_name: str) -> list[ModelVersion]:
+    def get_deployed_model_version(self, model_name: str) -> Optional[ModelVersion]:
+        for mv in self.versions(model_name):
+            if mv.current_stage == ModelVersionStage.DEPLOYED:
+                return mv
+        return None
+
+    def get_latest_generated_model_version(self, model_name: str) -> Optional[ModelVersion]:
+        gen = [mv for mv in self.versions(model_name)
+               if mv.current_stage == ModelVersionStage.GENERATED]
+        return gen[-1] if gen else None
+
+    def versions(self, model_name: str) -> list[ModelVersion]:
         with self._conn() as con:
             rows = con.execute(
                 "SELECT model_name, version, model_path, current_stage "
@@ -263,12 +178,9 @@ class SqliteModelRegistry(ModelRegistry):
 
 def open_registry(uri: str) -> ModelRegistry:
     """Registry factory keyed by the reference's ``db_uri`` convention
-    (README.md:39): ``sqlite:///path.db`` → SQLite backend; a bare path
-    → JSON-file backend. Any other ``scheme://`` raises ``ValueError``
-    before anything is created."""
-    if uri.startswith("sqlite:///"):
-        return SqliteModelRegistry(uri[len("sqlite:///"):])
-    if "://" in uri:
+    (README.md:39): ``sqlite:///path.db`` opens that database. Anything
+    else raises ``ValueError`` before anything is created."""
+    if not uri.startswith("sqlite:///"):
         raise ValueError(f"unsupported registry URI {uri!r}: use "
-                         "sqlite:///path/to/db or a bare JSON file path")
-    return ModelRegistry(uri)
+                         "sqlite:///path/to/db")
+    return ModelRegistry(uri[len("sqlite:///"):])

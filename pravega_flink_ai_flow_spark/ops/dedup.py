@@ -121,21 +121,6 @@ def shingle_arrays(df: DataFrame, id_col: str = "doc_id",
                      word_shingles(text_col, k).alias("shingles"))
 
 
-def minhash_signatures_from_arrays(arrs: DataFrame,
-                                   num_hashes: int = 64) -> DataFrame:
-    """MinHash signature per id computed entirely inside the row — no
-    explode, no groupBy, no shuffle: hash the shingle array once, then
-    every permutation-min comes out of ONE nested higher-order expression
-    producing an ``array<long>`` signature column.
-
-    One expression instead of ``num_hashes`` separate ``array_min``
-    columns matters: 64 wide expressions generate megabytes of
-    whole-stage-codegen source whose first-run janino compile costs
-    seconds; the array form is a few hundred bytes of code regardless of
-    ``num_hashes`` (the coefficient arrays constant-fold to literals)."""
-    return arrs.select("id", minhash_sig_expr(num_hashes).alias("sig"))
-
-
 def minhash_sig_expr(num_hashes: int = 64) -> Column:
     """The in-row MinHash signature EXPRESSION over a ``shingles``
     column — factored out (r13) so callers that keep other columns can
@@ -168,7 +153,7 @@ def minhash_signatures_arrow(arrs: DataFrame,
                              num_hashes: int = 64) -> DataFrame:
     """MinHash signatures via ``mapInArrow`` — the throughput path.
     Shingle hashing stays JVM-side (``xxhash64`` per element, identical
-    signatures to :func:`minhash_signatures_from_arrays`); the 64
+    signatures to :func:`minhash_sig_expr`); the 64
     permutation-mins move from an interpreted per-element fold to
     vectorized numpy: per batch, one ``(a·h+b) mod P`` array op per
     permutation over the flattened hash buffer, then a segmented

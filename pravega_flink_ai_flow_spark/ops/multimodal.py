@@ -22,7 +22,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 MEDIA_SCHEMA = T.StructType([
@@ -44,16 +44,6 @@ FEATURE_SCHEMA = T.StructType([
     T.StructField("n_bytes", T.IntegerType()),
     T.StructField("feature", T.ArrayType(T.FloatType())),
 ])
-
-
-def read_binary_files(spark: SparkSession, path: str,
-                      glob: str | None = None) -> DataFrame:
-    """Ingest raw media files as binary rows (spark.read.format
-    ('binaryFile')); payload stays opaque bytes end-to-end."""
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    return reader.load(path)
 
 
 def content_hash(df: DataFrame, content_col: str = "content") -> DataFrame:

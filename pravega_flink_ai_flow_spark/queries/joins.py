@@ -758,37 +758,31 @@ def j17_stats_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     unscannable in that test — construction still succeeds)."""
     import os as _os
 
+    import pyarrow.parquet as _pq
+
     from ..ops.relational import salted_join
 
     events, customer = tables(spark, sf_dir, "events", "customer")
     p = _os.path.join(sf_dir, "events.parquet")
-    try:
-        import pyarrow.parquet as _pq
-        if _os.path.isdir(p):
-            n = sum(_pq.ParquetFile(_os.path.join(p, f)).metadata.num_rows
-                    for f in _os.listdir(p) if f.endswith(".parquet"))
-        else:
-            n = _pq.ParquetFile(p).metadata.num_rows
-    except Exception:
-        # footers unreadable → the one-scan detection pass is the
-        # honest fallback; the zero-scan contract is pytest-pinned
-        n = None
+    files = ([_os.path.join(p, f) for f in sorted(_os.listdir(p))
+              if f.endswith(".parquet")] if _os.path.isdir(p) else [p])
+    n = 0
+    for f in files:
+        try:
+            n += _pq.ParquetFile(f).metadata.num_rows
+        except (OSError, ValueError) as e:
+            raise ValueError(
+                f"unreadable events parquet footer: {f}: {e}") from e
     fact = events.withColumn("hot_key",
                              F.least(F.col("user_id"), F.lit(5)))
     dim = (customer.filter(F.col("c_custkey") <= 5)
            .select(F.col("c_custkey").alias("dim_key"), "c_acctbal"))
-    if n is not None:
-        stats = spark.createDataFrame([(5, n)], "key long, cnt long")
-        joined = salted_join(fact, dim, left_on="hot_key",
-                             right_on="dim_key", salt=8,
-                             salt_source="event_id",
-                             hot_threshold=max(n // 10, 1),
-                             key_stats=stats)
-    else:  # pragma: no cover - sandbox tiers always carry footers
-        joined = salted_join(fact, dim, left_on="hot_key",
-                             right_on="dim_key", salt=8,
-                             salt_source="event_id",
-                             hot_rel_threshold=2.0)
+    stats = spark.createDataFrame([(5, n)], "key long, cnt long")
+    joined = salted_join(fact, dim, left_on="hot_key",
+                         right_on="dim_key", salt=8,
+                         salt_source="event_id",
+                         hot_threshold=max(n // 10, 1),
+                         key_stats=stats)
     return (joined.groupBy("hot_key")
             .agg(F.count("*").alias("n_events"),
                  F.sum("c_acctbal").cast("double").alias("sum_acctbal"))

@@ -122,7 +122,7 @@ def test_datagen_noncastable_types(spark, tmp_workdir):
     constructions — a blind bigint cast to these is invalid under ANSI
     (the driver's vanilla session keeps ANSI ON), so a datagen DDL
     declaring them used to fail at read despite DATE being in _TYPE_MAP
-    (ADVICE r4). Complex types are rejected at DDL-read time with a
+    (ADVICE r4). Complex types are rejected when the DDL runs, with a
     clear error instead of a Catalyst cast failure."""
     import datetime
 
@@ -140,12 +140,11 @@ def test_datagen_noncastable_types(spark, tmp_workdir):
     # deterministic: d is column 0 (multiplier 1), so id=1 → epoch + 1 day
     assert rows[1].d == datetime.date(1970, 1, 2)
 
-    env.execute_sql("""
-        create table gen3 (xs ARRAY<INT>)
-        with ('connector' = 'datagen', 'number-of-rows' = '2')
-    """)
     with pytest.raises(ValueError, match="datagen connector cannot"):
-        env.from_path("gen3")
+        env.execute_sql("""
+            create table gen3 (xs ARRAY<INT>)
+            with ('connector' = 'datagen', 'number-of-rows' = '2')
+        """)
 
 
 def test_bad_ddl_raises(spark, tmp_workdir):

@@ -40,7 +40,7 @@ def test_iris_end_to_end(spark, tmp_workdir):
     metrics_path = os.path.join(tmp_workdir, "validate_result")
     result_dir = os.path.join(tmp_workdir, "predict_result")
 
-    registry = ModelRegistry(os.path.join(tmp_workdir, "registry.json"))
+    registry = ModelRegistry(os.path.join(tmp_workdir, "aiflow.db"))
     registry.register_model("iris_knn", "KNN on iris (reference parity)")
 
     wf = Workflow(spark, registry)
@@ -118,7 +118,7 @@ def test_second_round_promotion(spark, tmp_workdir):
     (tie-goes-to-new, processor.py:188) promotes; old one DEPRECATED."""
     model_dir = os.path.join(tmp_workdir, "models")
     metrics_path = os.path.join(tmp_workdir, "metrics")
-    registry = ModelRegistry()
+    registry = ModelRegistry(os.path.join(tmp_workdir, "aiflow.db"))
     registry.register_model("m")
 
     train = batch.read_csv(spark, os.path.join(DATA, "iris_train.csv"), IRIS_SCHEMA)
@@ -152,8 +152,6 @@ def test_iris_end_to_end_over_socket_transport(spark, tmp_workdir):
     from pravega_flink_ai_flow_spark.io import (
         PravegaEmulatorServer, register_pravega_socket,
     )
-    from pravega_flink_ai_flow_spark.ml import SqliteModelRegistry
-
     srv = PravegaEmulatorServer()
     srv.start()
     try:
@@ -161,7 +159,7 @@ def test_iris_end_to_end_over_socket_transport(spark, tmp_workdir):
         model_dir = os.path.join(tmp_workdir, "saved_model")
         metrics_path = os.path.join(tmp_workdir, "validate_result")
 
-        registry = SqliteModelRegistry(os.path.join(tmp_workdir, "aiflow.db"))
+        registry = ModelRegistry(os.path.join(tmp_workdir, "aiflow.db"))
         registry.register_model("iris_knn", "KNN on iris over TCP streams")
         wf = Workflow(spark, registry)
 
@@ -228,9 +226,8 @@ def test_iris_end_to_end_over_socket_transport(spark, tmp_workdir):
         assert srv.tail("scope", "train-stream") == 120
         assert srv.tail("scope", "predict-stream") == 30
         assert srv.tail("scope", "result-stream") == 30
-        # DEPLOYED state visible through a FRESH registry handle (the
-        # durability the sqlite store adds over the JSON file)
-        fresh = SqliteModelRegistry(os.path.join(tmp_workdir, "aiflow.db"))
+        # DEPLOYED state visible through a FRESH registry handle
+        fresh = ModelRegistry(os.path.join(tmp_workdir, "aiflow.db"))
         deployed = fresh.get_deployed_model_version("iris_knn")
         assert deployed is not None
         # accuracy over the socket-read predict stream

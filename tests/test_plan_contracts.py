@@ -556,106 +556,6 @@ def test_pretrain_pipeline_composition_contracts(spark):
     assert n <= 8, f"pipeline planned {n} exchanges"
 
 
-def test_bloom_filter_sizing_scales_both_constants():
-    """r14 (SHUFFLE_SF100.json): the sf100 decade caught TWO constants
-    in the runtime-bloom config — the 4M-item grid erodes on ≥30M-key
-    creation sides, and the 256 MB creationSideThreshold silently stops
-    injecting the o_orderkey filter once the creation side outgrows it.
-    bloom_filter_sizing must scale both from the creation-key bound,
-    clamp to broadcastable filter sizes, and keep every value
-    internally consistent (numBits ≤ maxNumBits, items ≤ maxNumItems)."""
-    from pravega_flink_ai_flow_spark.engine.session import \
-        bloom_filter_sizing
-
-    p = "spark.sql.optimizer.runtime.bloomFilter."
-    small = bloom_filter_sizing(1_000_000)
-    assert int(small[p + "expectedNumItems"]) == 4 * 1024 * 1024
-    assert int(small[p + "numBits"]) == 1 << 25
-    assert int(small[p + "creationSideThreshold"]) == 256 * 1024 * 1024
-
-    big = bloom_filter_sizing(600_000_000)
-    assert int(big[p + "expectedNumItems"]) == 1 << 26      # clamped
-    assert int(big[p + "numBits"]) == 1 << 29               # 64 MB cap
-    # the admission bar follows the data: a 2.2 GB orders creation side
-    # must stay under it at sf100
-    assert int(big[p + "creationSideThreshold"]) >= 600_000_000 * 32
-    for conf in (small, big):
-        assert int(conf[p + "numBits"]) <= int(conf[p + "maxNumBits"])
-        assert int(conf[p + "expectedNumItems"]) \
-            <= int(conf[p + "maxNumItems"])
-        assert int(conf[p + "numBits"]) \
-            >= int(conf[p + "expectedNumItems"])            # ≥1 bit/key
-
-
-def test_session_conf_self_sizes_from_parquet_footers(tmp_path):
-    """r15 (r14 verdict #1): the self-sizing path — session_conf(
-    data_dir=tier) must derive the bloom grid from the tier's parquet
-    FOOTERS with no manual key bound, so no tier-pinned constant
-    remains for the next decade to catch. Pinned against
-    bloom_filter_sizing(parquet_row_bound(dir)) and against explicit
-    extra_conf still winning."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from pravega_flink_ai_flow_spark.engine.session import (
-        _DEFAULTS, bloom_filter_sizing, parquet_row_bound, session_conf)
-
-    # two "tables": a small dim file and a fact DIRECTORY of two parts
-    pq.write_table(pa.table({"a": list(range(10))}),
-                   tmp_path / "dim.parquet")
-    fact = tmp_path / "fact.parquet"
-    fact.mkdir()
-    pq.write_table(pa.table({"a": list(range(700))}),
-                   fact / "part-0.parquet")
-    pq.write_table(pa.table({"a": list(range(500))}),
-                   fact / "part-1.parquet")
-
-    assert parquet_row_bound(str(tmp_path)) == 1200
-    conf = session_conf(data_dir=str(tmp_path))
-    for k, v in bloom_filter_sizing(1200).items():
-        assert conf[k] == v
-    # a big-tier bound must actually move the grid off the fallback
-    big = {**dict(_DEFAULTS), **bloom_filter_sizing(600_000_000)}
-    assert big != dict(_DEFAULTS)
-
-    # a real tier: the bound is the largest table, and sf0.001's tiny
-    # counts land on the 4M/2^25 floor (plans identical to the static
-    # fallback at test scale)
-    d = "/root/testdata/sf0.001"
-    if os.path.isdir(d):
-        b = parquet_row_bound(d)
-        assert b and b > 0
-        floor = session_conf(data_dir=d)
-        p = "spark.sql.optimizer.runtime.bloomFilter."
-        assert floor[p + "expectedNumItems"] == str(4 * 1024 * 1024)
-
-    # explicit conf still wins over derived sizing
-    p = "spark.sql.optimizer.runtime.bloomFilter.numBits"
-    over = session_conf(extra_conf={p: "12345"}, data_dir=str(tmp_path))
-    assert over[p] == "12345"
-
-    # empty/missing dirs keep the static fallback
-    assert parquet_row_bound(str(tmp_path / "nope")) is None
-    assert session_conf(data_dir=str(tmp_path / "nope")) == dict(_DEFAULTS)
-
-
-def test_parquet_row_bound_names_an_unreadable_footer(tmp_path):
-    """A truncated parquet file under the tier must raise and name the
-    file, not count as an empty table that undersizes the bloom grid."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from pravega_flink_ai_flow_spark.engine.session import parquet_row_bound
-
-    pq.write_table(pa.table({"a": list(range(100))}),
-                   tmp_path / "good.parquet")
-    bad = tmp_path / "bad.parquet"
-    pq.write_table(pa.table({"a": list(range(100))}), bad)
-    bad.write_bytes(bad.read_bytes()[:-20])
-    with pytest.raises(ValueError, match="bad.parquet"):
-        parquet_row_bound(str(tmp_path))
-
-
 def test_key_stats_salted_join_runs_zero_detection_jobs(spark, tmp_path):
     """r15 (r14 verdict #3): salted_join's ``key_stats`` path must
     classify hot keys WITHOUT any job over the fact side. Proven the

@@ -1,17 +1,16 @@
 """Registry layer under CONCURRENCY (r11 verdict #6) — the one surface
 that had correctness-only coverage. Two real concerns:
 
-1. The SQLite backend claims cross-PROCESS safety (version numbers
+1. The SQLite registry claims cross-PROCESS safety (version numbers
    allocated under ``BEGIN IMMEDIATE``'s write lock, stage transitions
    visible across processes). Claim ≠ test: this suite runs ≥2 separate
    OS processes hammering one db file and asserts the allocation
    sequence is exactly 1..N with no duplicate and the stage machine
    lands consistent.
 
-2. Version allocation is a ``max+1`` read-modify-write in both
-   backends, so THREADS sharing one registry object must not both read
-   max=N and both take N+1: the JSON backend allocates under its
-   in-process lock, the SQLite backend under its write lock.
+2. Version allocation is a ``max+1`` read-modify-write, so THREADS
+   sharing one registry object must not both read max=N and both take
+   N+1: the write lock serializes them too.
 """
 
 from __future__ import annotations
@@ -21,12 +20,9 @@ import multiprocessing as mp
 import threading
 import time
 
-import pytest
-
 from pravega_flink_ai_flow_spark.ml.registry import (
     ModelRegistry,
     ModelVersionStage,
-    SqliteModelRegistry,
 )
 
 N_PROCS = 3
@@ -36,7 +32,7 @@ N_PER_PROC = 20
 def _sqlite_writer(db_path: str, worker: int, out_path: str) -> None:
     """One writer process: allocate N versions, promote each of its own
     allocations GENERATED → VALIDATED, then report what it saw."""
-    reg = SqliteModelRegistry(db_path)
+    reg = ModelRegistry(db_path)
     got = []
     for i in range(N_PER_PROC):
         mv = reg.register_model_version("m", f"/models/w{worker}/{i}")
@@ -70,14 +66,14 @@ def test_sqlite_concurrent_writers_allocate_unique_versions(tmp_path):
 
     # stage machine consistent across processes: every version exists
     # exactly once and was promoted by exactly its allocating process
-    reg = SqliteModelRegistry(db)
+    reg = ModelRegistry(db)
     versions = reg.versions("m")
     assert len(versions) == n
     assert all(v.current_stage == ModelVersionStage.VALIDATED
                for v in versions)
     # and a cross-process read sees a deploy made here
     reg.update_model_version("m", allocated[-1], ModelVersionStage.DEPLOYED)
-    assert SqliteModelRegistry(db).get_deployed_model_version(
+    assert ModelRegistry(db).get_deployed_model_version(
         "m").version == allocated[-1]
     rate = (2 * n) / wall   # each version = 1 allocation + 1 promotion
     print(f"sqlite registry: {N_PROCS} writer processes, "
@@ -93,15 +89,11 @@ def _writer_thread(reg, worker: int, got: list) -> None:
         got.append(mv.version)
 
 
-@pytest.mark.parametrize("open_reg", [
-    pytest.param(lambda d: ModelRegistry(str(d / "r.json")), id="json"),
-    pytest.param(lambda d: SqliteModelRegistry(str(d / "a.db")),
-                 id="sqlite"),
-])
-def test_concurrent_threads_allocate_unique_versions(tmp_path, open_reg):
+def test_concurrent_threads_allocate_unique_versions(tmp_path):
     """4 threads sharing one registry object allocate exactly 1..N: no
     two threads read the same max and both take max+1."""
-    reg = open_reg(tmp_path)
+    db = str(tmp_path / "a.db")
+    reg = ModelRegistry(db)
     results: list[list] = [[] for _ in range(4)]
     t0 = time.perf_counter()
     threads = [threading.Thread(target=_writer_thread,
@@ -116,11 +108,11 @@ def test_concurrent_threads_allocate_unique_versions(tmp_path, open_reg):
     n = 4 * N_PER_PROC
     assert allocated == list(range(1, n + 1)), allocated
     # a fresh object over the same store sees every promotion
-    versions = open_reg(tmp_path).versions("m")
+    versions = ModelRegistry(db).versions("m")
     assert [v.version for v in versions] == list(range(1, n + 1))
     assert all(v.current_stage == ModelVersionStage.VALIDATED
                for v in versions)
-    print(f"{type(reg).__name__}: 4 writer threads, {n} versions + "
+    print(f"sqlite registry: 4 writer threads, {n} versions + "
           f"{n} promotions in {wall:.2f}s ({2 * n / wall:.0f} mutations/s)")
 
 
@@ -129,10 +121,10 @@ def test_sqlite_stage_visibility_across_fresh_connections(tmp_path):
     to a brand-new one over the same file (each op opens a fresh
     connection — the cross-process read path without the processes)."""
     db = str(tmp_path / "reg.db")
-    a = SqliteModelRegistry(db)
+    a = ModelRegistry(db)
     mv = a.register_model_version("m", "/models/x")
     a.update_model_version("m", mv.version, ModelVersionStage.DEPLOYED)
-    b = SqliteModelRegistry(db)
+    b = ModelRegistry(db)
     assert b.get_deployed_model_version("m").version == mv.version
     b.update_model_version("m", mv.version, ModelVersionStage.DEPRECATED)
     assert a.get_deployed_model_version("m") is None

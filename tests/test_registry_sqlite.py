@@ -1,11 +1,10 @@
-"""SQLite metadata-store backend for the model registry (SURVEY.md M4).
+"""The SQLite model registry (SURVEY.md M4).
 
 The reference's own default metadata DB is SQLite (``db_uri:
-sqlite:///${AIFLOW_HOME}/aiflow.db``, /root/reference/README.md:39);
-the JSON backend covers the demo surface but is single-writer. These
-tests pin the properties the SQLite backend adds: cross-process
-visibility, transactional version allocation under concurrent writers,
-and the ``db_uri`` factory routing.
+sqlite:///${AIFLOW_HOME}/aiflow.db``, reference README.md:39). These
+tests pin the lifecycle, cross-process visibility, transactional
+version allocation under concurrent writers, and the ``db_uri``
+factory.
 """
 
 import os
@@ -16,58 +15,36 @@ import textwrap
 import pytest
 
 from pravega_flink_ai_flow_spark.ml import (
-    ModelRegistry, ModelVersionStage, SqliteModelRegistry, open_registry,
+    ModelRegistry, ModelVersionStage, open_registry,
 )
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_open_registry_routing(tmp_workdir):
-    sq = open_registry(f"sqlite:///{tmp_workdir}/aiflow.db")
-    assert isinstance(sq, SqliteModelRegistry)
-    js = open_registry(os.path.join(tmp_workdir, "registry.json"))
-    assert type(js) is ModelRegistry
+    reg = open_registry(f"sqlite:///{tmp_workdir}/aiflow.db")
+    assert isinstance(reg, ModelRegistry)
 
 
-@pytest.mark.parametrize("scheme", ["mysql", "mongodb", "docstore",
-                                    "postgresql"])
-def test_open_registry_rejects_other_schemes(tmp_path, monkeypatch, scheme):
-    """Only ``sqlite:///`` and bare JSON paths are stores; any other
-    ``scheme://`` fails at open time, naming both accepted forms, and
-    leaves nothing behind."""
+@pytest.mark.parametrize("uri", ["mysql://h/db", "mongodb://h/db",
+                                 "docstore://h/db", "postgresql://h/db",
+                                 "registry.json"],
+                         ids=["mysql", "mongodb", "docstore", "postgresql",
+                              "bare_path"])
+def test_open_registry_rejects_other_schemes(tmp_path, monkeypatch, uri):
+    """Only ``sqlite:///`` names a store; any other ``scheme://`` or a
+    bare path fails at open time, naming the accepted form, and leaves
+    nothing behind."""
     monkeypatch.chdir(tmp_path)
-    with pytest.raises(ValueError, match="sqlite:///.*JSON file path"):
-        open_registry(f"{scheme}://h/db")
+    with pytest.raises(ValueError, match="use sqlite:///"):
+        open_registry(uri)
     assert os.listdir(tmp_path) == []
 
 
-def test_json_registry_survives_a_crash_mid_write(tmp_path, monkeypatch):
-    """A write that dies halfway through the dump leaves the previous
-    registry.json loadable with every earlier version."""
-    path = str(tmp_path / "registry.json")
-    reg = ModelRegistry(path)
-    reg.register_model_version("m", "/p1")
-    reg.update_model_version("m", 1, ModelVersionStage.DEPLOYED)
-
-    def torn_dump(obj, f, **kw):
-        f.write('[{"name": "m", "versions": [')
-        raise OSError("process died mid-write")
-
-    monkeypatch.setattr("json.dump", torn_dump)
-    with pytest.raises(OSError):
-        reg.register_model_version("m", "/p2")
-    monkeypatch.undo()
-
-    again = ModelRegistry(path)
-    assert [v.version for v in again.versions("m")] == [1]
-    assert again.get_deployed_model_version("m").model_path == "/p1"
-
-
 def test_sqlite_lifecycle_matches_json_backend(tmp_workdir):
-    """Same API surface, same lifecycle semantics as the JSON backend
-    (stage machine GENERATED → VALIDATED → DEPLOYED → DEPRECATED, event
-    bus on every transition)."""
-    reg = SqliteModelRegistry(os.path.join(tmp_workdir, "aiflow.db"))
+    """The reference's lifecycle semantics: stage machine GENERATED →
+    VALIDATED → DEPLOYED → DEPRECATED, an event on every transition."""
+    reg = ModelRegistry(os.path.join(tmp_workdir, "aiflow.db"))
     events = []
     reg.subscribe(lambda name, event, mv: events.append((event, mv.version)))
 
@@ -84,7 +61,7 @@ def test_sqlite_lifecycle_matches_json_backend(tmp_workdir):
     assert events == [("MODEL_GENERATED", 1), ("MODEL_GENERATED", 2),
                       ("MODEL_DEPLOYED", 1)]
 
-    # unknown version: KeyError, like the JSON backend
+    # unknown version: KeyError
     with pytest.raises(KeyError):
         reg.update_model_version("wide_and_deep", 99,
                                  ModelVersionStage.DEPLOYED)
@@ -92,16 +69,15 @@ def test_sqlite_lifecycle_matches_json_backend(tmp_workdir):
 
 def test_sqlite_cross_process_visibility(tmp_workdir):
     """A stage transition made by ANOTHER process is visible to this
-    one without reopening — the multi-writer durability the JSON
-    load-once backend cannot provide (VERDICT r4, missing #2)."""
+    one without reopening."""
     db = os.path.join(tmp_workdir, "aiflow.db")
-    reg = SqliteModelRegistry(db)
+    reg = ModelRegistry(db)
     reg.register_model_version("m", "/p1")
 
     child = textwrap.dedent(f"""
         import sys; sys.path.insert(0, {REPO!r})
-        from pravega_flink_ai_flow_spark.ml import SqliteModelRegistry
-        r = SqliteModelRegistry({db!r})
+        from pravega_flink_ai_flow_spark.ml import ModelRegistry
+        r = ModelRegistry({db!r})
         r.register_model_version("m", "/p2")
         r.update_model_version("m", 1, "DEPLOYED")
     """)
@@ -115,19 +91,19 @@ def test_sqlite_cross_process_visibility(tmp_workdir):
 def test_sqlite_concurrent_version_allocation(tmp_workdir):
     """N concurrent writer PROCESSES each register one version; the
     BEGIN IMMEDIATE transaction must allocate N distinct consecutive
-    version numbers (the JSON backend would lose updates here)."""
+    version numbers."""
     db = os.path.join(tmp_workdir, "aiflow.db")
-    SqliteModelRegistry(db)  # create schema up front
+    ModelRegistry(db)  # create schema up front
     child = textwrap.dedent(f"""
         import sys; sys.path.insert(0, {REPO!r})
-        from pravega_flink_ai_flow_spark.ml import SqliteModelRegistry
-        SqliteModelRegistry({db!r}).register_model_version("m", "/p")
+        from pravega_flink_ai_flow_spark.ml import ModelRegistry
+        ModelRegistry({db!r}).register_model_version("m", "/p")
     """)
     procs = [subprocess.Popen([sys.executable, "-c", child])
              for _ in range(6)]
     for p in procs:
         assert p.wait(timeout=120) == 0
-    versions = [v.version for v in SqliteModelRegistry(db).versions("m")]
+    versions = [v.version for v in ModelRegistry(db).versions("m")]
     assert versions == [1, 2, 3, 4, 5, 6]
 
 
@@ -140,7 +116,7 @@ def test_project_context_defaults_to_sqlite(tmp_workdir):
     with open(yaml_path, "w") as f:
         f.write("project_name: demo\n")
     ctx = init_project(yaml_path, spark=object())
-    assert isinstance(ctx.registry, SqliteModelRegistry)
+    assert isinstance(ctx.registry, ModelRegistry)
     ctx.registry.register_model_version("m", "/p")
     assert os.path.exists(os.path.join(tmp_workdir, ".project_state",
                                        "aiflow.db"))

@@ -463,9 +463,9 @@ def test_streaming_near_dedup_heals_mid_append_crash(spark, tmp_workdir):
     d2 = "completely unrelated text about query engines and shuffles here"
     batch2 = spark.createDataFrame([(2, d2)], doc_schema)
     arrs = dedup.shingle_arrays(batch2, "doc_id", "text")
-    sigs = dedup.minhash_signatures_from_arrays(arrs, 64)
-    (arrs.join(sigs, "id").select("id", "shingles", "sig")
-     .write.mode("append").parquet(store))
+    sigs = arrs.select("id", "shingles",
+                       dedup.minhash_sig_expr(64).alias("sig"))
+    sigs.write.mode("append").parquet(store)
     # a real crashed attempt writes its _commits marker BEFORE any
     # append (r12: first attempts skip the anti-join scans entirely, so
     # the marker is what routes the retry onto the filter path)
@@ -516,9 +516,9 @@ def test_streaming_near_dedup_heals_torn_partial_bands(spark, tmp_workdir):
     d2 = "completely unrelated text about query engines and shuffles here"
     batch2 = spark.createDataFrame([(2, d2)], doc_schema)
     arrs = dedup.shingle_arrays(batch2, "doc_id", "text")
-    sigs = dedup.minhash_signatures_from_arrays(arrs, 64)
-    (arrs.join(sigs, "id").select("id", "shingles", "sig")
-     .write.mode("append").parquet(store))
+    sigs = arrs.select("id", "shingles",
+                       dedup.minhash_sig_expr(64).alias("sig"))
+    sigs.write.mode("append").parquet(store)
     open(os.path.join(store, "_commits", "batch-1"), "w").close()
     partial = dedup.lsh_band_table(sigs, 64, 16, out_id="id_corpus") \
         .filter(F.col("band_id") < 8)
@@ -564,9 +564,9 @@ def test_streaming_near_dedup_foreign_store_stays_filtered(spark,
     d_a = "the quick brown fox jumps over the lazy dog in the morning"
     ext = spark.createDataFrame([(2, d_a)], doc_schema)
     arrs = dedup.shingle_arrays(ext, "doc_id", "text")
-    sigs = dedup.minhash_signatures_from_arrays(arrs, 64)
-    (arrs.join(sigs, "id").select("id", "shingles", "sig")
-     .write.mode("append").parquet(store))
+    sigs = arrs.select("id", "shingles",
+                       dedup.minhash_sig_expr(64).alias("sig"))
+    sigs.write.mode("append").parquet(store)
     dedup.lsh_band_table(sigs, 64, 16, out_id="id_corpus") \
         .write.mode("append").parquet(store + "_bands")
 

@@ -31,7 +31,7 @@ def iris(spark):
 def deployed_registry(spark, iris, tmp_path_factory):
     train, test = iris
     wd = str(tmp_path_factory.mktemp("reg"))
-    registry = ModelRegistry()
+    registry = ModelRegistry(os.path.join(wd, "aiflow.db"))
     ml_ops.train(train, registry=registry, model_name="m",
                  feature_cols=FEATURES, label_col="type",
                  fit_fn=lambda x, y: KNNClassifier(5).fit(x, y),

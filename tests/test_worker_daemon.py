@@ -195,3 +195,62 @@ def test_driver_outside_the_repo_runs_a_pandas_udf(tmp_path):
     assert out.returncode == 0, out.stderr[-3000:]
     assert f"PATH {REPO}{os.pathsep}/nonexistent" in out.stdout
     assert "RESULT [1, 2, 3, 4]" in out.stdout
+
+
+# Builds a frame with ``batch.from_rows``, then trains, deploys and
+# applies the predict UDF, and prints the command lines of the JVM's
+# child processes, one per line.
+ROWS_THEN_PREDICT = textwrap.dedent("""
+    import os, sys
+    sys.path.insert(0, %r)
+    from pravega_flink_ai_flow_spark.engine.session import get_spark
+    from pravega_flink_ai_flow_spark.io import batch
+    from pravega_flink_ai_flow_spark.ml import (
+        KNNClassifier, ModelRegistry, ops as ml_ops)
+
+    work, iris = sys.argv[1], sys.argv[2]
+    spark = get_spark("one-daemon", master="local[2]")
+    rows = [tuple(float(v) for v in line.split(","))
+            for line in open(iris) if line.strip()]
+    df = batch.from_rows(
+        spark, rows, "sl double, sw double, pl double, pw double, type double")
+    assert df.count() == len(rows) and len(df.collect()) == len(rows)
+    features = ["sl", "sw", "pl", "pw"]
+    reg = ModelRegistry(os.path.join(work, "aiflow.db"))
+    ml_ops.train(df, registry=reg, model_name="m", feature_cols=features,
+                 label_col="type", fit_fn=lambda x, y: KNNClassifier(5).fit(x, y),
+                 model_dir=os.path.join(work, "models"))
+    ml_ops.validate(df, registry=reg, model_name="m", feature_cols=features,
+                    label_col="type", metrics_path=os.path.join(work, "metrics"))
+    out = ml_ops.predict(df, registry=reg, model_name="m",
+                         feature_cols=features).collect()
+    assert len(out) == len(rows)
+
+    jvm = str(spark._jvm.java.lang.ProcessHandle.current().pid())
+    for pid in filter(str.isdigit, os.listdir("/proc")):
+        try:
+            with open(f"/proc/{pid}/stat") as f:
+                ppid = f.read().rsplit(")", 1)[1].split()[1]
+            with open(f"/proc/{pid}/cmdline", "rb") as f:
+                cmd = f.read().replace(b"\\0", b" ").decode()
+        except OSError:
+            continue
+        if ppid == jvm:
+            print("CHILD", cmd)
+    spark.stop()
+""") % REPO
+
+
+def test_rows_source_then_predict_udf_runs_one_engine_daemon(tmp_path):
+    """A ``from_rows`` frame and the predict UDF share one engine daemon:
+    the rows are decoded by the JVM, so no Python task with another
+    worker environment starts a second daemon and its preloaded heap."""
+    from conftest import DATA
+    out = subprocess.run(
+        [sys.executable, "-c", ROWS_THEN_PREDICT, str(tmp_path),
+         os.path.join(DATA, "iris_train.csv")],
+        timeout=300, capture_output=True, text=True)
+    assert out.returncode == 0, out.stderr[-3000:]
+    children = [l for l in out.stdout.splitlines() if l.startswith("CHILD")]
+    daemons = [c for c in children if DAEMON in c.split()]
+    assert len(daemons) == 1, children

@@ -1,9 +1,7 @@
 #!/usr/bin/env python
-"""Streaming near-dedup throughput (r10 verdict next #6): the
-exactly-once ingest writer has a floor-gated artifact (28.5 k rows/s,
-tools/bench_socket_stream.py) but `streaming_near_dedup` — the
+"""Streaming near-dedup throughput of `streaming_near_dedup` — the
 cross-batch LSH suppression with a persistent signature store
-(streaming/ops.py) — had correctness pytest and no throughput number.
+(streaming/ops.py).
 
 This drives the sf0.1 documents table (5 000 docs) through the
 stream-dir transport in ≥10 micro-batches (one segment file per
