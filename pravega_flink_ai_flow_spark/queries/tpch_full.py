@@ -15,9 +15,10 @@ lack ``partsupp`` and lineitem's commit/receipt dates, so:
 
 Scale notes (verified with ``.explain("formatted")``):
 - every dimension join (nation/region/part/supplier) broadcasts;
-- correlated subqueries (Q2 min-per-part, Q15 max-revenue, Q11 total
-  threshold) are computed as one extra aggregate + broadcast join, never
-  a per-row re-scan;
+- Q2's correlated min-per-part is one extra aggregate + broadcast join,
+  never a per-row re-scan; Q11's total threshold and Q15's max revenue
+  are read on the driver from a checkpointed aggregate, so no task
+  receives the whole aggregate;
 - Q21's double EXISTS/NOT-EXISTS collapses to ONE per-(order, supplier)
   aggregate with the per-order supplier counts as a window over the same
   frame — one scan of lineitem total, not four.
@@ -336,22 +337,11 @@ def tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
 def tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Important-stock identification (TPC-H Q11 shape; shipped value by
     one nation's suppliers stands in for partsupp inventory value).
-    The fraction-of-total threshold is a global window SUM over the
-    per-part aggregate itself (r15, guide §2.4): the old 1-row scalar
-    aggregate broadcast-cross-join re-ran the whole lineitem scan +
-    aggregate under the broadcast side (the prior docstring's "reused
-    via cache" claim was stale — no cache existed). The window's
-    single-partition exchange carries only the part-bounded aggregate;
-    its sequential accumulation is a different (equally unguaranteed)
-    float order than the old second aggregate's merge tree — both
-    engines' thresholds sit far from every part_value, which the
-    oracle hash proves. Single-task bound (r15 advice): the empty
-    partitionBy funnels the whole per-part aggregate through ONE task —
-    fine while parts-per-nation stays ~memory-sized; if part
-    cardinality grows to where that window spills, cache() the
-    aggregate and revert to the 1-row broadcast scalar."""
-    from pyspark.sql import Window
-
+    The per-part aggregate is checkpointed and the fraction-of-total
+    threshold is summed from it on the driver, so lineitem is scanned
+    once and no task receives every part. Summation order differs from
+    DuckDB's, but both engines' thresholds sit far from every
+    part_value, which the oracle hash proves."""
     supplier, nation, lineitem = tables(
         spark, sf_dir, "supplier", "nation", "lineitem")
     natsupp = (supplier
@@ -362,12 +352,11 @@ def tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
          .join(F.broadcast(natsupp), F.col("l_suppkey") == F.col("s_suppkey"))
          .groupBy("l_partkey")
          .agg(F.sum(F.col("l_extendedprice") * F.col("l_quantity"))
-              .alias("part_value")))
-    return (v.withColumn(
-                "threshold",
-                (F.sum("part_value").over(Window.partitionBy()) * 0.001))
-            .filter(F.col("part_value") > F.col("threshold"))
-            .select("l_partkey", "part_value")
+              .alias("part_value"))
+         .localCheckpoint())
+    total = v.agg(F.sum("part_value")).first()[0]
+    return (v.filter(F.col("part_value")
+                     > F.lit(total).cast("double") * 0.001)
             .orderBy(F.col("part_value").desc(), "l_partkey"))
 
 
@@ -419,33 +408,22 @@ def tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top supplier (TPC-H Q15 shape): quarterly revenue per supplier,
-    filtered to the max via a global window MAX over the revenue
-    aggregate itself (r15, guide §2.4): the old 1-row scalar-aggregate
-    broadcast join re-ran the whole lineitem scan + aggregate under the
-    broadcast side — Catalyst shares no common subtrees, so "computed
-    once" required a cache it never had. The window's single-partition
-    exchange carries only the supplier-bounded aggregate; max is
-    order-insensitive on doubles, and comparing within ONE computation
-    removes the (theoretical) cross-subtree float mismatch the old
-    shape tolerated. The max rows are then few → broadcast into
-    supplier. Single-task bound (r15 advice): the empty partitionBy
-    funnels the per-supplier aggregate through ONE task — fine while
-    supplier cardinality is dimension-sized; if it ever outgrows a
-    task, cache() the aggregate and revert to the 1-row broadcast
-    scalar."""
-    from pyspark.sql import Window
-
+    filtered to its maximum. The revenue aggregate is checkpointed and
+    its maximum taken on the driver, so lineitem is scanned once, no
+    task receives every supplier, and the equality compares values of
+    one computation (max is exact on doubles). The few max rows are
+    broadcast into supplier."""
     supplier, lineitem = tables(spark, sf_dir, "supplier", "lineitem")
     revenue = (lineitem.filter(
                    (F.col("l_shipdate") >= _ts("1997-01-01")) &
                    (F.col("l_shipdate") < _ts("1997-04-01")))
                .groupBy(F.col("l_suppkey").alias("supplier_no"))
                .agg(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-                    .alias("total_revenue")))
-    best = (revenue.withColumn(
-                "max_rev",
-                F.max("total_revenue").over(Window.partitionBy()))
-            .filter(F.col("total_revenue") == F.col("max_rev")))
+                    .alias("total_revenue"))
+               .localCheckpoint())
+    max_rev = revenue.agg(F.max("total_revenue")).first()[0]
+    best = revenue.filter(
+        F.col("total_revenue") == F.lit(max_rev).cast("double"))
     return (supplier
             .join(F.broadcast(best), F.col("s_suppkey") == F.col("supplier_no"))
             .select("s_suppkey", "s_name", "total_revenue")

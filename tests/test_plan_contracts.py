@@ -79,9 +79,7 @@ SINGLE_PARTITION = {
            + " (vocabulary size)"),
     "m9_feature_drift_psi": (1, "at most 10 bins per cohort"),
     "s15_table_profile": (4, _PARTIALS + ", one per profiled column"),
-    "tpch_q11": (1, "one row per part of the chosen nation's suppliers"),
     "tpch_q14": (1, _PARTIALS),
-    "tpch_q15": (1, "one row per supplier"),
     "tpch_q17": (1, _PARTIALS),
     "tpch_q19": (1, _PARTIALS),
     "tpch_q22": (1, _PARTIALS),

@@ -622,3 +622,47 @@ def test_txn_commit_of_unknown_txn_reports_missing(server):
                                   "stream": "t", "txns": ["ok", "ghost"],
                                   "group": "g", "batch": 7})
     assert r3["duplicate"] is True and server.tail("s2", "t") == 5
+
+
+def test_engine_session_checkpoints_through_the_filesystem_manager(
+        spark, tmp_workdir):
+    """The engine session resolves its checkpoint manager to Spark's
+    FileSystem one. Spark 4.1 moved these classes into
+    ``...streaming.checkpointing``; a conf naming a moved class fails
+    only at ``writeStream.start()`` (``CANNOT_LOAD_CHECKPOINT_FILE_MANAGER``),
+    so this resolves it the way a starting stream does."""
+    jvm = spark._jvm
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing \
+        .CheckpointFileManager.create(
+            jvm.org.apache.hadoop.fs.Path(tmp_workdir),
+            spark._jsparkSession.sessionState().newHadoopConf())
+    assert manager.getClass().getName() == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager")
+
+
+def test_stateful_stream_checkpoint_keeps_its_checksums(
+        spark, server, tmp_workdir):
+    """One micro-batch of a stateful stream on the engine session: the
+    offset and commit logs still carry Hadoop's ``.crc`` side files, and
+    state partition 0 holds its first delta with both Hadoop's side file
+    and Spark's own checksum file."""
+    from pravega_flink_ai_flow_spark.streaming.ops import (
+        stream_dedup_within_watermark)
+
+    server.append("scope", "ck", _events(0, 40))
+    pravega_source.register(spark)
+    sdf = (spark.readStream.format("pravega_socket")
+           .schema(SCHEMA)
+           .option("controller", server.controller_uri)
+           .option("scope", "scope").option("stream", "ck").load())
+    ckpt = os.path.join(tmp_workdir, "ck")
+    q = (stream_dedup_within_watermark(sdf, ["event_id"], "ts", "1 hour")
+         .writeStream.format("noop").option("checkpointLocation", ckpt)
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    assert [p["batchId"] for p in q.recentProgress] == [0]
+    for log in ("offsets", "commits"):
+        assert {"0", ".0.crc"} <= set(os.listdir(os.path.join(ckpt, log)))
+    assert {"1.delta", ".1.delta.crc", "1.delta.crc"} <= set(
+        os.listdir(os.path.join(ckpt, "state", "0", "0")))
