@@ -35,7 +35,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
 def _unit_rows(M: np.ndarray) -> np.ndarray:
@@ -140,18 +140,28 @@ def pq_topk(queries: DataFrame, corpus: DataFrame, *,
             query_vec: str = "q_vec", corpus_vec: str = "c_vec",
             k: int = 10, dim: int, m: int = 8, ks: int = 16,
             iters: int = 6, shortlist_mult: int = 5,
-            exclude_self: bool = False,
             max_queries: int = 100_000,
             codebooks: "np.ndarray | None" = None) -> DataFrame:
     """PQ-compressed top-k: train → encode → ADC shortlist → exact
-    rerank. Output: (query_id, corpus_id, cosine, rank ≤ k).
-    ``codebooks`` short-circuits training with a precomputed
+    rerank. Output: (query_id, corpus_id, cosine, rank ≤ k), self-pairs
+    dropped; an empty query set returns an empty frame. ``codebooks``
+    short-circuits training with a precomputed
     :func:`train_pq_codebooks` result — callers that run the same index
     repeatedly memoize it per session."""
     import pyarrow as pa
 
-    from .similarity import cosine
+    from .similarity import _rank_merge, cosine
 
+    q_rows = (queries.select(query_id, query_vec)
+              .limit(max_queries + 1).collect())
+    if len(q_rows) > max_queries:
+        raise ValueError(
+            f"PQ query set exceeds {max_queries} rows — shortlist "
+            "scoring broadcasts the query matrix; split the query set")
+    if not q_rows:
+        return queries.sparkSession.createDataFrame(
+            [], f"{query_id} long, {corpus_id} long, cosine double, "
+            "rank int")
     C = codebooks if codebooks is not None else train_pq_codebooks(
         corpus, vec_col=corpus_vec, dim=dim, m=m, ks=ks, iters=iters)
     if C.shape != (m, ks, dim // m):
@@ -159,12 +169,6 @@ def pq_topk(queries: DataFrame, corpus: DataFrame, *,
             f"codebooks shape {C.shape} does not match (m={m}, ks={ks}, "
             f"dsub={dim // m}) — stale cache entry or wrong parameters")
     dsub = dim // m
-    q_rows = (queries.select(query_id, query_vec)
-              .limit(max_queries + 1).collect())
-    if len(q_rows) > max_queries:
-        raise ValueError(
-            f"PQ query set exceeds {max_queries} rows — shortlist "
-            "scoring broadcasts the query matrix; split the query set")
     q_ids = np.asarray([r[0] for r in q_rows], dtype=np.int64)
     Q = _unit_rows(np.stack([np.asarray(r[1], dtype=np.float64)
                              for r in q_rows]))
@@ -173,9 +177,9 @@ def pq_topk(queries: DataFrame, corpus: DataFrame, *,
     T = np.stack([Q[:, s * dsub:(s + 1) * dsub] @ C[s].T
                   for s in range(m)], axis=1)
     nq = len(q_ids)
-    # +1 keeps the query's own vector (always shortlisted at cosine 1)
-    # from consuming a real candidate slot under exclude_self
-    shortlist = shortlist_mult * k + (1 if exclude_self else 0)
+    # +1: a query drawn from the corpus shortlists its own vector, which
+    # the self-pair filter then drops, so it must not cost a real slot
+    shortlist = shortlist_mult * k + 1
 
     def score(batches, C=C, T=T):
         for rb in batches:
@@ -209,17 +213,13 @@ def pq_topk(queries: DataFrame, corpus: DataFrame, *,
     # LSH/IVF, where multi-table/multi-probe collisions make the dedup
     # load-bearing) — deduping here would only add a hash Exchange
     cand = (corpus.select(corpus_id, corpus_vec)
-            .mapInArrow(score, f"{query_id} long, {corpus_id} long"))
-    if exclude_self:
-        cand = cand.filter(F.col(query_id) != F.col(corpus_id))
+            .mapInArrow(score, f"{query_id} long, {corpus_id} long")
+            .filter(F.col(query_id) != F.col(corpus_id)))
     # exact rerank on the shortlist only: join back to the true vectors
     qv = queries.select(F.col(query_id), F.col(query_vec))
     cv = corpus.select(F.col(corpus_id), F.col(corpus_vec))
     scored = (cand.join(F.broadcast(qv), query_id).join(cv, corpus_id)
               .withColumn("cosine",
-                          cosine(F.col(query_vec), F.col(corpus_vec), dim)))
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("cosine").desc(), F.col(corpus_id).asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(query_id, corpus_id, "cosine", "rank"))
+                          cosine(F.col(query_vec), F.col(corpus_vec))))
+    return _rank_merge(scored, part=query_id, tie=corpus_id,
+                       score="cosine", k=k)

@@ -1,67 +1,44 @@
 """Similarity search over embedding columns (SURVEY.md L3).
 
-Exact brute-force cosine top-k as the baseline (JVM higher-order
-functions, no Python in the row path), plus an LSH-bucketed approximate
-variant as the 100 TB scale path: random-hyperplane signatures prune the
-candidate set to co-bucketed vectors before the exact rerank.
+Every top-k op here is one local scorer plus one global merge: each
+task selects its local top-k candidates per query, and
+:func:`_rank_merge` ranks them (score desc, id asc). Self-pairs
+(query id == candidate id) are dropped before local selection, so a
+caller asking for ``k`` gets up to ``k`` real neighbours. Exact scorers
+run as blocked GEMMs (query matrix in the task closure, or block pairs
+of the corpus); LSH, IVF and PQ (``ops/pq.py``) are the approximate
+paths that prune candidates before an exact rerank.
 """
 
 from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from .dedup import corpus_doc_count
 from .partitioning import spread
 
 
-def _dot(a: Column, b: Column, dim: int | None = None) -> Column:
+def _dot(a: Column, b: Column) -> Column:
     """JVM-side dot product: zip_with multiply → aggregate sum (doubles).
-
-    ``dim`` is accepted for API stability but intentionally unused: an
-    unrolled ``get(a,0)*get(b,0) + ...`` chain was measured SLOWER than
-    the interpreted fold (m2 warm 1.8 s vs 1.1 s at sf0.1) — the ~dim×64
-    -term whole-stage method exceeds HotSpot's JIT-compile size limit
-    (DontCompileHugeMethods), so the generated bytecode runs interpreted,
-    worse than Spark's optimized HOF evaluator. The fold's sequential
-    summation also matches the oracle's list_dot_product bit-exactly."""
+    An unrolled ``get(a,0)*get(b,0) + ...`` chain was measured slower
+    (m2 warm 1.8 s vs 1.1 s at sf0.1): the generated method exceeds
+    HotSpot's JIT-compile size limit and runs interpreted. The fold's
+    sequential summation matches the oracle's list_dot_product
+    bit-exactly."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0), lambda acc, v: acc + v)
 
 
-def _norm(a: Column, dim: int | None = None) -> Column:
+def _norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(
         a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double")))
 
 
-def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
+def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
-
-
-def brute_force_topk(queries: DataFrame, corpus: DataFrame, *,
-                     query_id: str = "q_id", corpus_id: str = "c_id",
-                     query_vec: str = "q_vec", corpus_vec: str = "c_vec",
-                     k: int = 10, dim: int | None = None) -> DataFrame:
-    """Exact top-k cosine per query. The (small) query set is broadcast
-    against the corpus — one pass over the corpus, no corpus shuffle; the
-    per-query top-k is a WindowGroupLimit (each partition keeps ≤ k rows
-    per query before the final merge). Norms are precomputed per side so
-    each pair costs ONE dot product, not three."""
-    q = queries.withColumn("__qn", _norm(F.col(query_vec), dim))
-    # the per-pair dot products run on the corpus side's partitioning —
-    # spread a small single-file corpus across the cluster first
-    c = spread(corpus).withColumn("__cn", _norm(F.col(corpus_vec), dim))
-    scored = (c.join(F.broadcast(q))
-              .withColumn("cosine",
-                          _dot(F.col(query_vec), F.col(corpus_vec), dim)
-                          / (F.col("__qn") * F.col("__cn"))))
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("cosine").desc(), F.col(corpus_id).asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(query_id, corpus_id, "cosine", "rank"))
 
 
 def _topk_rows_per_col(M, ids, kk):
@@ -91,42 +68,151 @@ def _topk_rows_per_col(M, ids, kk):
     return out
 
 
+def _worst(M):
+    """The value that marks a cell of a lower-is-better score matrix as
+    never selectable."""
+    import numpy as np
+
+    return np.iinfo(M.dtype).max if M.dtype.kind == "i" else np.inf
+
+
+def _local_topk(M, ids, q_ids, k):
+    """The local selection of every top-k op: per query column of ``M``
+    (n candidates × m queries, lower is better) the rows of the ``k``
+    best candidates, ties by ascending ``ids``, as aligned
+    ``(rows, cols)`` picks. The candidate whose id equals its query's
+    id (``q_ids[col]``; ids are unique per side) is never picked, nor
+    is any cell the score rule set to :func:`_worst`. Writes ``M``."""
+    import numpy as np
+
+    worst = _worst(M)
+    order = np.argsort(q_ids, kind="stable")
+    pos = np.minimum(np.searchsorted(q_ids[order], ids), len(q_ids) - 1)
+    hit = np.flatnonzero(q_ids[order][pos] == ids)
+    M[hit, order[pos[hit]]] = worst
+    kk = min(k, len(ids))
+    rows = _topk_rows_per_col(M, ids, kk)
+    cols = np.repeat(np.arange(M.shape[1]), kk)
+    keep = M[rows, cols] != worst
+    return rows[keep], cols[keep]
+
+
 def _pair_dots(A, B):
     """Shape-independent per-pair dot products for the selected rows of
     two aligned (n × dim) matrices. A GEMM's blocked BLAS kernel varies
-    with the MATRIX shape, so two mathematically equal scores computed
-    in different batches/block-pairs can differ in the last ulp — which
-    breaks (score desc, id asc) tie ranking across batches (fuzz repro:
-    ids 1 and 63 with identical vectors ranked 63-first; VERDICT r7
-    wrong #2). ``(A*B).sum(axis=1)`` reduces each row over the FIXED
-    vector dim with numpy's pairwise order, which depends only on dim —
-    identical (query, candidate) vector pairs therefore get bit-identical
-    scores no matter where they were selected, so the global merge sees
-    exact ties and its id-asc tiebreak is deterministic."""
+    with the matrix shape, so two mathematically equal scores computed
+    in different batches or block pairs can differ in the last ulp, and
+    the global (score desc, id asc) merge would then order identical
+    vectors by that noise. ``(A*B).sum(axis=1)`` reduces each row over
+    the fixed vector dim in numpy's pairwise order, so identical
+    (query, candidate) vector pairs get bit-identical scores wherever
+    they were selected and the merge's id tiebreak is deterministic."""
     import numpy as np
 
     return np.multiply(A, B).sum(axis=1)
 
 
+def _quote(c: str) -> str:
+    return "`" + c.replace("`", "``") + "`"
+
+
 def _rank_merge(cands: DataFrame, *, part: str, tie: str, score: str,
                 k: int, select: "list[str] | None" = None) -> DataFrame:
-    """The shared global top-k window merge of every blocked scorer,
-    fused into ONE ``selectExpr`` call (r15, bench plan-build): the
-    Column-DSL chain (window spec + ``withColumn`` + filter + select)
-    cost ~40 py4j round trips per scorer assembly for the identical
-    WindowExec plan. ``select`` overrides the leading output
-    expressions (already-quoted SQL snippets, e.g. aliased ids) —
-    window/partition references resolve against the INPUT row, so
-    aliasing and ranking happen in the same projection."""
-
-    def q(c: str) -> str:
-        return "`" + c.replace("`", "``") + "`"
-
-    exprs = list(select) if select is not None else [q(part), q(tie),
-                                                     q(score)]
-    exprs.append(f"row_number() OVER (PARTITION BY {q(part)} ORDER BY "
-                 f"{q(score)} DESC, {q(tie)}) AS rank")
+    """The global top-k merge of every top-k op, as ONE ``selectExpr``:
+    the Column-DSL chain (window spec + ``withColumn`` + filter +
+    select) cost ~40 py4j round trips for the identical WindowExec
+    plan. ``select`` overrides the leading output expressions
+    (already-quoted SQL snippets, e.g. aliased ids) — window references
+    resolve against the INPUT row, so aliasing and ranking happen in
+    the same projection."""
+    exprs = list(select) if select is not None else [
+        _quote(part), _quote(tie), _quote(score)]
+    exprs.append(f"row_number() OVER (PARTITION BY {_quote(part)} ORDER BY "
+                 f"{_quote(score)} DESC, {_quote(tie)}) AS rank")
     return cands.selectExpr(*exprs).filter(f"rank <= {int(k)}")
+
+
+def _closure_topk(corpus: DataFrame, q_rows: list, rule, *, k: int,
+                  names: tuple, keyed: bool = False, extra=None,
+                  extra_schema: str = "") -> DataFrame:
+    """The one Arrow batch loop of the closure-broadcast scorers.
+
+    ``q_rows`` are the collected ``(id, vec[, key], ...)`` query rows;
+    they ride in the task closure, one group per key when ``keyed``.
+    ``corpus`` streams as ``(id, vec[, key], ...)`` through ONE
+    ``mapInArrow`` pass — never shuffled or joined. ``rule(Q)`` runs
+    once per query group on the driver and returns ``score(C) -> (M,
+    value)``: ``M`` is the lower-is-better candidate × query matrix of
+    one batch (or key group), ``value(rows, cols)`` the emitted score
+    of the picks. Each batch emits only its :func:`_local_topk` picks
+    as ``names`` = (query id, candidate id, score) plus ``extra(rb,
+    rows, qrows)``'s columns (batch rows and query rows of the picks).
+    An empty query set returns an empty frame.
+
+    A tiny corpus is merged to ≥ 8 MB splits first: the per-row GEMM
+    cost is small, so the fixed per-task Python round trip dominates
+    near-empty splits (a narrow coalesce; no-op on large splits)."""
+    import numpy as np
+    import pyarrow as pa
+
+    from .partitioning import compact_for_arrow
+
+    out_schema = "{} long, {} long, {} double".format(*names) + extra_schema
+    if not q_rows:
+        return corpus.sparkSession.createDataFrame([], out_schema)
+    q_ids = np.asarray([r[0] for r in q_rows], dtype=np.int64)
+    Q = np.stack([np.asarray(r[1], dtype=np.float64) for r in q_rows])
+    groups: dict = {}
+    for i, r in enumerate(q_rows):
+        groups.setdefault(r[2] if keyed else None, []).append(i)
+    scorers = {key: (np.asarray(qi), q_ids[qi], rule(Q[qi]))
+               for key, qi in groups.items()}
+
+    # mapInArrow, not mapInPandas: pandas converts the list column to
+    # one numpy object per cell; Arrow's flatten() is the contiguous
+    # value buffer, so batch → matrix is one reshape
+    def score(batches):
+        for rb in batches:
+            n = rb.num_rows
+            if n == 0:
+                continue
+            ids = rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
+            C = (rb.column(1).flatten().to_numpy(zero_copy_only=False)
+                 .reshape(n, -1).astype(np.float64, copy=False))
+            if keyed:
+                keys = rb.column(2).to_numpy(zero_copy_only=False)
+                parts = [(np.flatnonzero(keys == key), scorers[key])
+                         for key in np.unique(keys) if key in scorers]
+            else:
+                parts = [(None, scorers[None])]
+            for sub, (qi, gq_ids, sc) in parts:
+                ids_s, C_s = (ids, C) if sub is None else (ids[sub], C[sub])
+                M, value = sc(C_s)
+                rows, cols = _local_topk(M, ids_s, gq_ids, k)
+                arrays = {names[0]: pa.array(gq_ids[cols], pa.int64()),
+                          names[1]: pa.array(ids_s[rows], pa.int64()),
+                          names[2]: pa.array(value(rows, cols), pa.float64())}
+                if extra is not None:
+                    arrays.update(extra(
+                        rb, rows if sub is None else sub[rows], qi[cols]))
+                yield pa.RecordBatch.from_arrays(list(arrays.values()),
+                                                 names=list(arrays))
+
+    return compact_for_arrow(corpus).mapInArrow(score, out_schema)
+
+
+def _cosine_rule(Q):
+    """Cosine score rule: one GEMM of the L2-normalized matrices selects,
+    the shape-independent :func:`_pair_dots` re-score is emitted."""
+    import numpy as np
+
+    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
+
+    def score(C):
+        Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
+        return -(Cn @ Qn.T), lambda rows, cols: _pair_dots(Qn[cols],
+                                                            Cn[rows])
+    return score
 
 
 def brute_force_topk_blocked(queries: DataFrame | list, corpus: DataFrame, *,
@@ -134,174 +220,64 @@ def brute_force_topk_blocked(queries: DataFrame | list, corpus: DataFrame, *,
                              query_vec: str = "q_vec", corpus_vec: str = "c_vec",
                              k: int = 10,
                              max_queries: int = 100_000) -> DataFrame:
-    """Exact top-k cosine per query via blocked GEMM — the scale path for
-    brute-force search (same layout as :func:`knn_candidates_blocked`):
-    the query matrix must be broadcast-small, is collected once on the
-    driver (guarded by ``max_queries`` — raises instead of OOMing on a
-    misconfigured query set) and rides in the task closure; the corpus
-    streams through ``mapInPandas`` in Arrow batches, each batch emitting
-    only its local top-k per query via one fused BLAS multiply. The
-    global top-k is a window merge over |batches| × |queries| × k
-    candidate rows — never the full pair matrix, and the corpus is never
-    shuffled.
+    """Exact top-k cosine per query via blocked GEMM: the unkeyed case of
+    :func:`filtered_topk_blocked`. Replaces the per-pair higher-order
+    function fold, which measured 46× slower than DuckDB at sf0.1."""
+    return filtered_topk_blocked(
+        queries, corpus, query_id=query_id, corpus_id=corpus_id,
+        query_vec=query_vec, corpus_vec=corpus_vec, query_key=None,
+        corpus_key=None, k=k, max_queries=max_queries)
 
-    Replaces the interpreted per-pair higher-order-function fold
-    (measured 46× slower than DuckDB at sf0.1; VERDICT.md r3 wrong #3).
-    Ties at the k-th cosine break by ascending ``corpus_id``, so each
-    local top-k provably contains its share of the global (cosine, id)
-    top-k. Float64 GEMM may differ from a sequential fold in the last
-    ulp — inside the oracle's 1e-6 canonicalization tolerance."""
-    import numpy as np
-    import pyarrow as pa
 
+def filtered_topk_blocked(queries: DataFrame | list, corpus: DataFrame, *,
+                          query_id: str = "q_id", corpus_id: str = "c_id",
+                          query_vec: str = "q_vec", corpus_vec: str = "c_vec",
+                          query_key: str | None = "q_key",
+                          corpus_key: str | None = "c_key",
+                          k: int = 10,
+                          max_queries: int = 100_000) -> DataFrame:
+    """Exact top-k cosine per query, optionally metadata-FILTERED — the
+    vector-DB "filtered search" pattern: each query row carries a key
+    (language, source, class label, tenant …) and competes only against
+    corpus rows with the SAME key, with the filter applied BEFORE top-k
+    selection (post-filtering a global top-k silently under-fills the
+    result). ``query_key=None`` scores every corpus row, with no
+    per-batch mask or copy.
+
+    The query side must be broadcast-small: it is collected once
+    (guarded by ``max_queries`` — raises instead of OOMing the driver)
+    unless passed pre-collected as ``[(id, vec[, key]), ...]``, and
+    rides in the :func:`_closure_topk` closure; each Arrow batch runs
+    one GEMM per (key present in the batch ∩ query keys). The global
+    top-k is a window merge over |batches| × |queries| × k candidate
+    rows — never the full pair matrix. Float64 GEMM only selects; the
+    emitted cosine is the :func:`_pair_dots` re-score, which may differ
+    from a sequential fold in the last ulp (inside the oracle's 1e-6
+    canonicalization tolerance)."""
+    keyed = query_key is not None
     if isinstance(queries, list):
-        # pre-collected [(id, vec), ...] — lets a caller that scores the
-        # same query set repeatedly skip the per-call collect job
         q_rows = queries
     else:
-        q_rows = (queries.select(query_id, query_vec)
+        q_rows = (queries.select(query_id, query_vec,
+                                 *([query_key] if keyed else []))
                   .limit(max_queries + 1).collect())
     if len(q_rows) > max_queries:
         raise ValueError(
             f"query side exceeds max_queries={max_queries}; it must be "
             "broadcast-small — use lsh_bucket_topk/ivf_topk for large "
             "query sets")
-    q_ids = np.asarray([r[0] for r in q_rows], dtype=np.int64)
-    Q = np.stack([np.asarray(r[1], dtype=np.float64) for r in q_rows])
-    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-    m = len(q_ids)
-
-    out_schema = f"{query_id} long, {corpus_id} long, cosine double"
-
-    # mapInArrow, not mapInPandas: the list-typed vector column converts
-    # to pandas as 50k+ per-cell numpy objects; Arrow's flatten() gives
-    # the contiguous value buffer directly, so the batch → matrix step is
-    # one reshape, not a Python loop over cells
-    def score(batches):
-        for rb in batches:
-            n = rb.num_rows
-            if n == 0:
-                continue
-            ids = rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-            flat = rb.column(1).flatten().to_numpy(zero_copy_only=False)
-            C = flat.reshape(n, -1).astype(np.float64, copy=False)
-            Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
-            S = Cn @ Qn.T                               # n × m
-            kk = min(k, n)
-            rows = _topk_rows_per_col(-S, ids, kk)      # cosine desc, id asc
-            cols = np.repeat(np.arange(m), kk)
-            # re-score the selected pairs shape-independently so equal
-            # vectors in DIFFERENT corpus batches emit bit-identical
-            # cosines and the global (cosine desc, id asc) merge breaks
-            # the tie deterministically (see _pair_dots)
-            cos = _pair_dots(Qn[cols], Cn[rows])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(np.repeat(q_ids, kk), type=pa.int64()),
-                 pa.array(ids[rows], type=pa.int64()),
-                 pa.array(cos, type=pa.float64())],
-                names=[query_id, corpus_id, "cosine"])
-
-    # no spread(): unlike the shingling/hashing paths, per-row GEMM cost
-    # is tiny, so a pre-shuffle of the corpus costs more than it buys.
-    # The opposite correction applies instead: under small-split configs
-    # a tiny corpus fans into near-empty splits and the fixed per-task
-    # Python round trip dominates, so merge splits to ≥8 MB per Arrow
-    # task (a narrow coalesce; no-op once splits are that big anyway)
-    from .partitioning import compact_for_arrow
-    cands = (compact_for_arrow(corpus.select(corpus_id, corpus_vec))
-             .mapInArrow(score, out_schema))
-    return _rank_merge(cands, part=query_id, tie=corpus_id,
-                       score="cosine", k=k)
-
-
-def filtered_topk_blocked(queries: DataFrame | list, corpus: DataFrame, *,
-                          query_id: str = "q_id", corpus_id: str = "c_id",
-                          query_vec: str = "q_vec", corpus_vec: str = "c_vec",
-                          query_key: str = "q_key", corpus_key: str = "c_key",
-                          k: int = 10,
-                          max_queries: int = 100_000) -> DataFrame:
-    """Metadata-FILTERED exact top-k cosine per query — the vector-DB
-    "filtered search" pattern: each query row carries a key (language,
-    source, class label, tenant …) and competes only against corpus
-    rows with the SAME key, with the filter applied BEFORE top-k
-    selection (post-filtering a global top-k silently under-fills the
-    result — the classic filtered-ANN mistake this op exists to avoid).
-
-    Same scale shape as :func:`brute_force_topk_blocked`: the
-    broadcast-small query side is collected once (guarded by
-    ``max_queries``), grouped per key into one matrix each, and rides
-    in the task closure; the corpus streams through ONE ``mapInArrow``
-    pass — never shuffled, never joined — and each Arrow batch runs one
-    GEMM per (key present in the batch ∩ query keys) against that key's
-    query matrix, emitting only local top-k candidates. Selected pairs
-    are re-scored by the shape-independent :func:`_pair_dots` pass so
-    equal vectors in different batches emit bit-identical cosines and
-    the global (cosine desc, id asc) window merge is deterministic."""
-    import numpy as np
-    import pyarrow as pa
-
-    if isinstance(queries, list):
-        q_rows = queries                     # pre-collected [(id, vec, key)]
-    else:
-        q_rows = (queries.select(query_id, query_vec, query_key)
-                  .limit(max_queries + 1).collect())
-    if len(q_rows) > max_queries:
-        raise ValueError(
-            f"query side exceeds max_queries={max_queries}; it must be "
-            "broadcast-small — pre-bucket large query sets by key and "
-            "join instead")
-    qmap: dict = {}
-    for r in q_rows:
-        qmap.setdefault(r[2], []).append((r[0], r[1]))
-    for key, rows in qmap.items():
-        ids = np.asarray([i for i, _ in rows], dtype=np.int64)
-        Q = np.stack([np.asarray(v, dtype=np.float64) for _, v in rows])
-        qmap[key] = (ids, Q / np.linalg.norm(Q, axis=1, keepdims=True))
-
-    out_schema = f"{query_id} long, {corpus_id} long, cosine double"
-
-    def score(batches):
-        for rb in batches:
-            n = rb.num_rows
-            if n == 0:
-                continue
-            ids = rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-            flat = rb.column(1).flatten().to_numpy(zero_copy_only=False)
-            C = flat.reshape(n, -1).astype(np.float64, copy=False)
-            Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
-            keys = rb.column(2).to_numpy(zero_copy_only=False)
-            for key in np.unique(keys):
-                grp = qmap.get(key)
-                if grp is None:
-                    continue
-                q_ids, Qn = grp
-                mask = keys == key
-                Csub, isub = Cn[mask], ids[mask]
-                S = Csub @ Qn.T                       # n_sub × m_key
-                kk = min(k, len(isub))
-                rows = _topk_rows_per_col(-S, isub, kk)
-                cols = np.repeat(np.arange(len(q_ids)), kk)
-                cos = _pair_dots(Qn[cols], Csub[rows])
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(np.repeat(q_ids, kk), type=pa.int64()),
-                     pa.array(isub[rows], type=pa.int64()),
-                     pa.array(cos, type=pa.float64())],
-                    names=[query_id, corpus_id, "cosine"])
-
-    from .partitioning import compact_for_arrow
-    cands = (compact_for_arrow(
-                corpus.select(corpus_id, corpus_vec, corpus_key))
-             .mapInArrow(score, out_schema))
+    cols = [corpus_id, corpus_vec] + ([corpus_key] if keyed else [])
+    cands = _closure_topk(corpus.select(*cols), q_rows, _cosine_rule, k=k,
+                          names=(query_id, corpus_id, "cosine"), keyed=keyed)
     return _rank_merge(cands, part=query_id, tie=corpus_id,
                        score="cosine", k=k)
 
 
 # Deterministic pseudo-random hyperplanes: component i of plane p is ±1
 # from sha256(p, i) — computed in PYTHON at plan-build time and embedded
-# as a constant array literal. The previous form evaluated
-# xxhash64(concat(...)) inside an interpreted lambda per element × plane
-# × table × row (~15M hash calls at sf0.01); the sign matrix is plan
-# data, not row data, so it must never touch the row path.
+# as a constant array literal. The sign matrix is plan data, not row
+# data: hashing inside an interpreted lambda per element × plane ×
+# table × row costs ~15M hash calls at sf0.01.
 def _plane_signs(plane: int, dim: int) -> list[float]:
     return [1.0 if hashlib.sha256(f"p{plane}_{i}".encode()).digest()[0] % 2 == 0
             else -1.0 for i in range(dim)]
@@ -321,12 +297,11 @@ def lsh_table_rows_arrow(df: DataFrame, *, id_col: str, vec_col: str,
     projection is within ~1e-15 of zero — vanishingly unlikely and
     bounded by the pytest recall check.
 
-    ``carry_vec=False`` (r16) drops the vector from the output rows:
-    the band table then carries ~16 bytes per (row, table) instead of
-    replicating each 64-float vector ``n_tables`` times across the
-    Arrow boundary and into the bucket join — callers re-attach vectors
-    from the base frame after the skinny pair dedup (guide §2.3
-    "shuffle keys and metadata instead of payloads")."""
+    ``carry_vec=False`` drops the vector from the output rows: the band
+    table then carries ~16 bytes per (row, table) instead of replicating
+    each 64-float vector ``n_tables`` times across the Arrow boundary
+    and into the bucket join; callers re-attach vectors from the base
+    frame after the skinny pair dedup."""
     import numpy as np
     import pyarrow as pa
 
@@ -370,7 +345,7 @@ def lsh_bucket_topk(queries: DataFrame, corpus: DataFrame, *,
                     query_id: str = "q_id", corpus_id: str = "c_id",
                     query_vec: str = "q_vec", corpus_vec: str = "c_vec",
                     k: int = 10, n_tables: int = 8, n_planes: int = 3,
-                    dim: int = 64, exclude_self: bool = False) -> DataFrame:
+                    dim: int = 64) -> DataFrame:
     """Approximate top-k: multi-table random-hyperplane LSH. A pair is a
     candidate if it collides in ANY of ``n_tables`` independent tables of
     ``n_planes`` sign bits (the standard OR-of-ANDs construction: per-table
@@ -380,21 +355,15 @@ def lsh_bucket_topk(queries: DataFrame, corpus: DataFrame, *,
     At scale the per-query corpus scan becomes an equi-join on
     (table, bucket): candidate count drops ~2^planes per table.
 
-    Rerank shape (r16, guide §2.3 "shuffle keys and metadata instead of
-    payloads"): the band rows and the pair dedup used to CARRY both
-    64-float vectors — every corpus vector crossed the Arrow boundary
-    16× and the dedup exchange shuffled the full collision fan-out with
-    ~0.5 KB of vectors per pair (the plan's dominant cost: candidate
-    stage 2.31 s of the query's 2.75 s at sf0.1, 174 k pairs). Bands
-    are now vector-free, the dedup moves 16-byte id pairs, and vectors
-    re-attach map-side afterwards: the deduped pair table joins the
-    corpus (pairs side small → broadcast; a corpus-side equi-join
-    shuffle of matched rows otherwise — either way the fan-out with
-    vectors is never shuffled), then the broadcast-small query side.
-    Per-side norms are projected once per row (the brute_force_topk
-    trick) so each pair pays ONE interpreted fold, not three; the
-    cosine expression tree is unchanged (dot / (qn · cn), same
-    association), so scores are bit-identical."""
+    Rerank shape: bands are vector-free and the pair dedup moves 16-byte
+    id pairs; vectors re-attach afterwards (the deduped pairs join the
+    corpus, then the broadcast-small query side), so the collision
+    fan-out is never shuffled with vectors. Carrying both 64-float
+    vectors through the dedup measured 2.31 s of the query's 2.75 s at
+    sf0.1 (174 k pairs). Per-side norms are projected once per row so
+    each pair pays ONE interpreted fold, not three; dot / (qn · cn)
+    keeps the association of :func:`cosine`, so scores are
+    bit-identical."""
     qb = lsh_table_rows_arrow(queries, id_col=query_id, vec_col=query_vec,
                               n_tables=n_tables, n_planes=n_planes, dim=dim,
                               carry_vec=False)
@@ -403,21 +372,18 @@ def lsh_bucket_topk(queries: DataFrame, corpus: DataFrame, *,
                               carry_vec=False)
     pairs = (cb.join(F.broadcast(qb), ["lsh_table", "bucket"])
              .select(query_id, corpus_id)
-             .dropDuplicates([query_id, corpus_id]))
-    if exclude_self:
-        # when queries are drawn from the corpus, the query trivially
-        # collides with itself (cosine 1.0) and would waste a top-k slot
-        pairs = pairs.filter(F.col(query_id) != F.col(corpus_id))
+             .dropDuplicates([query_id, corpus_id])
+             .filter(F.col(query_id) != F.col(corpus_id)))
     # NO spread_coalesced on the deduped pairs (measured: +0.11 s at
     # sf0.1 for nothing) — unlike l2's array_intersect verify (~ms/pair)
     # the rerank fold is ~µs/pair, so AQE's 1 MB-minimum coalescing of
     # 16-byte pair rows still leaves only ~0.1 s of work per partition
-    c = corpus.withColumn("__cn", _norm(F.col(corpus_vec), dim))
-    q = queries.withColumn("__qn", _norm(F.col(query_vec), dim))
+    c = corpus.withColumn("__cn", _norm(F.col(corpus_vec)))
+    q = queries.withColumn("__qn", _norm(F.col(query_vec)))
     scored = (c.join(pairs, corpus_id)
               .join(F.broadcast(q), query_id)
               .withColumn("cosine",
-                          _dot(F.col(query_vec), F.col(corpus_vec), dim)
+                          _dot(F.col(query_vec), F.col(corpus_vec))
                           / (F.col("__qn") * F.col("__cn")))
               .select(query_id, corpus_id, "cosine"))
     return _rank_merge(scored, part=query_id, tie=corpus_id,
@@ -465,7 +431,7 @@ def nearest_refs_arrow(df: DataFrame, *, id_col: str, vec_col: str,
             # construction, so n×m sort is cheap and EXACT on ties
             # (refs pre-sorted by id + stable sort ⇒ sim desc, id asc)
             srt = np.argsort(-S, axis=1, kind="stable")
-            # Slack-banded exact re-score (r12 advice #1): the GEMM sims
+            # Slack-banded exact re-score: the GEMM sims
             # above reassociate the oracle's normalize-then-fold chain,
             # so a pick whose margin at the selection BOUNDARY (rank
             # kk-1 vs kk — within-top-k order never leaves this
@@ -504,7 +470,7 @@ def auto_centroid_stride(corpus: DataFrame) -> int:
     centroid count grow linearly with the corpus, so cell assignment
     (one |corpus| × |centroids| GEMM) silently goes QUADRATIC — the
     sf1→sf10 scale gate measured l3_ivf_topk at 12.9× wall for 10×
-    data before this rule (BENCH_sf10.json, r10). With nlist ∝ √N,
+    data before this rule (BENCH_sf10.json). With nlist ∝ √N,
     assignment FLOPs grow as N^1.5 with a GEMM-small constant (the
     measured wall tracks the linear scan), cells hold ≈√N vectors, and
     a fixed-count probe costs nprobe·√N per query. Past ~10^9 vectors
@@ -536,7 +502,7 @@ def _stride_rule(n: int) -> int:
 # (6144² × 8 B) regardless of corpus size. Chosen so the sf1 corpus
 # (50 k docs) lands just above the 8-block floor (9 blocks — plans
 # effectively unchanged) while 500 k docs get 82 bounded blocks instead
-# of 8 × 31 GB score matrices (the r11 sf10 OOM, see _n_blocks_rule).
+# of 8 × 31 GB score matrices (the sf10 OOM, see auto_n_blocks).
 _BLOCK_ROWS_TARGET = 6144
 
 
@@ -554,7 +520,7 @@ def auto_n_blocks(df: DataFrame, floor: int = 8) -> int:
     the :func:`auto_centroid_stride` lesson applied to block-pair
     memory: a FIXED ``n_blocks`` makes each task's score matrix grow
     as (N/blocks)² with the corpus, which is a silent per-executor OOM
-    at the next decade, not a slowdown (measured r11: 500 k docs / 8
+    at the next decade, not a slowdown (measured: 500 k docs / 8
     blocks → 62.5 k² × 8 B ≈ 31 GB per task — the sf10 gate run was
     OOM-killed). With blocks ∝ N the score matrix is capped at
     ~:data:`_BLOCK_ROWS_TARGET`² × 8 B ≈ 300 MB per task at ANY corpus
@@ -608,8 +574,7 @@ def ivf_topk(queries: DataFrame, corpus: DataFrame, *,
              query_id: str = "q_id", corpus_id: str = "c_id",
              query_vec: str = "q_vec", corpus_vec: str = "c_vec",
              k: int = 10, centroid_stride: int | None = None,
-             nprobe: int = 4, exclude_self: bool = False,
-             dim: int | None = None, kmeans_iters: int = 0,
+             nprobe: int = 4, kmeans_iters: int = 0,
              centroid_rows: list | None = None) -> DataFrame:
     """Approximate top-k via an IVF (inverted-file) index, the other
     standard ANN layout next to LSH: partition the corpus into cells
@@ -644,33 +609,29 @@ def ivf_topk(queries: DataFrame, corpus: DataFrame, *,
         centroid_rows = ivf_train_quantizer(
             corpus, corpus_id=corpus_id, corpus_vec=corpus_vec,
             centroid_stride=centroid_stride, kmeans_iters=kmeans_iters)
-    cent_rows = centroid_rows
 
     # corpus side: each vector lives in exactly its nearest cell
     assigned = nearest_refs_arrow(corpus, id_col=corpus_id,
-                                  vec_col=corpus_vec, ref_rows=cent_rows,
+                                  vec_col=corpus_vec, ref_rows=centroid_rows,
                                   k=1, out_col="cell")
     # query side: probe the nprobe nearest cells
     probes = nearest_refs_arrow(queries, id_col=query_id,
-                                vec_col=query_vec, ref_rows=cent_rows,
+                                vec_col=query_vec, ref_rows=centroid_rows,
                                 k=nprobe, out_col="cell")
-    # NO dropDuplicates (r16, guide §2.4 "a distinct on data that is
-    # already unique"): a corpus vector lives in EXACTLY one cell (k=1
+    # NO dropDuplicates: a corpus vector lives in EXACTLY one cell (k=1
     # assignment) and a query's nprobe probe cells are distinct, so a
-    # (query, corpus) pair can meet at most once — the dedup was a full
-    # shuffle of the candidate fan-out WITH both 64-float vectors, for
-    # identical output (the SQL oracle never had a dedup either).
-    # Per-side norms (the brute_force_topk trick): one interpreted fold
-    # per row instead of three per pair; dot / (qn · cn) keeps the
-    # association of cosine(), so scores are bit-identical.
-    cands = (assigned.withColumn("__cn", _norm(F.col(corpus_vec), dim))
+    # (query, corpus) pair meets at most once — a dedup would shuffle
+    # the candidate fan-out WITH both vectors for identical output.
+    # Per-side norms: one interpreted fold per row instead of three per
+    # pair; dot / (qn · cn) keeps the association of cosine(), so
+    # scores are bit-identical.
+    cands = (assigned.withColumn("__cn", _norm(F.col(corpus_vec)))
              .join(F.broadcast(
-                 probes.withColumn("__qn", _norm(F.col(query_vec), dim))),
-                 "cell"))
-    if exclude_self:
-        cands = cands.filter(F.col(query_id) != F.col(corpus_id))
+                 probes.withColumn("__qn", _norm(F.col(query_vec)))),
+                 "cell")
+             .filter(F.col(query_id) != F.col(corpus_id)))
     scored = cands.withColumn(
-        "cosine", _dot(F.col(query_vec), F.col(corpus_vec), dim)
+        "cosine", _dot(F.col(query_vec), F.col(corpus_vec))
         / (F.col("__qn") * F.col("__cn")))
     return _rank_merge(scored, part=query_id, tie=corpus_id,
                        score="cosine", k=k)
@@ -683,74 +644,46 @@ def knn_candidates_blocked(train: DataFrame, test_rows, *, k: int,
                            test_label_col: str | None = None) -> DataFrame:
     """Exact squared-euclidean top-k candidates via blocked GEMM — the
     scale path for KNN scoring: the (broadcast-small) test matrix rides
-    in the task closure, the train side streams through ``mapInPandas``
-    in Arrow batches, and each batch emits only its local top-k rows per
-    test vector. The global top-k is a window merge over
-    |batches| × |test| × k candidate rows — never the full pair matrix.
+    in the :func:`_closure_topk` closure, the train side streams through
+    ``mapInArrow``, and each batch emits only its local top-k rows per
+    test vector (dist2 asc, id asc; a train row with the test row's id
+    is never picked); the caller merges. Per-pair cost is
+    one fused BLAS multiply-add instead of an interpreted 64-step fold;
+    per-task memory is one Arrow batch plus the test matrix. float64
+    GEMM may differ from a sequential fold in the last ulp (pytest
+    asserts prediction-level equality with the fold formulation).
 
-    Per-pair cost is one fused BLAS multiply-add instead of an
-    interpreted 64-step fold; per-task memory is one Arrow batch plus
-    the test matrix, independent of train size. Ties at the k-th
-    distance are broken by ascending ``id_col`` (lexsort), so the
-    candidate set provably contains the global (dist2, id) top-k.
-
-    Numerics: float64 GEMM may differ from a sequential fold in the
-    last ulp (pytest asserts prediction-level equality with the fold
-    formulation); dist2 is ordering state, not output.
-
-    ``test_label_col``: when set, each emitted candidate row also
-    carries its TEST vector's label (``test_rows[i][2]``) straight from
-    the closure — the caller then needs no label-attach join at all
-    (a 2×|test|-literal ``create_map`` alternative measured ~0.12 s of
-    pure Catalyst analysis per call at |test|=100, and a broadcast join
-    costs an extra build job per run)."""
+    Output: (test id, train id, dist2, train label[, test label]).
+    ``test_label_col``: when set, each candidate row also carries its
+    TEST vector's label (``test_rows[i][2]``) straight from the closure,
+    so the caller needs no label-attach join (a 2×|test|-literal
+    ``create_map`` measured ~0.12 s of Catalyst analysis per call at
+    |test|=100; a broadcast join costs an extra build job)."""
     import numpy as np
     import pyarrow as pa
 
-    test_ids = np.asarray([r[0] for r in test_rows], dtype=np.int64)
-    Xt = np.stack([np.asarray(r[1], dtype=np.float64) for r in test_rows])
-    tt = (Xt * Xt).sum(axis=1)
-    m = len(test_ids)
-    test_labels = (np.asarray([r[2] for r in test_rows], dtype=np.int32)
-                   if test_label_col else None)
+    test_labels = np.asarray([r[2] for r in test_rows], dtype=np.int32)
 
-    out_schema = (f"{test_id_col} long, {id_col} long, "
-                  f"{label_col} int, dist2 double")
-    if test_label_col:
-        out_schema += f", {test_label_col} int"
+    def rule(Xt):
+        tt = (Xt * Xt).sum(axis=1)
 
-    # mapInArrow (not mapInPandas): Arrow's flatten() exposes the list
-    # column's contiguous value buffer, so batch → matrix is one reshape
-    # instead of a per-cell Python loop
-    def score(batches):
-        for rb in batches:
-            n = rb.num_rows
-            if n == 0:
-                continue
-            ids = rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-            labels = rb.column(1)
-            flat = rb.column(2).flatten().to_numpy(zero_copy_only=False)
-            Xn = flat.reshape(n, -1).astype(np.float64, copy=False)
-            nn = (Xn * Xn).sum(axis=1)
+        def score(X):
             # same accumulation shape as the fold: (tt - 2·t·n) + nn
-            D = (tt[None, :] - 2.0 * (Xn @ Xt.T)) + nn[:, None]  # n × m
-            kk = min(k, n)
-            rows = _topk_rows_per_col(D, ids, kk)     # dist2 asc, id asc
-            cols = np.repeat(np.arange(m), kk)
-            arrays = [pa.array(np.repeat(test_ids, kk), type=pa.int64()),
-                      pa.array(ids[rows], type=pa.int64()),
-                      labels.take(pa.array(rows)).cast(pa.int32()),
-                      pa.array(D[rows, cols], type=pa.float64())]
-            names = [test_id_col, id_col, label_col, "dist2"]
-            if test_labels is not None:
-                arrays.append(pa.array(np.repeat(test_labels, kk),
-                                       type=pa.int32()))
-                names.append(test_label_col)
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
+            D = (tt[None, :] - 2.0 * (X @ Xt.T)) + (X * X).sum(axis=1)[:, None]
+            return D, lambda rows, cols: D[rows, cols]
+        return score
 
-    from .partitioning import compact_for_arrow
-    return (compact_for_arrow(train.select(id_col, label_col, vec_col))
-            .mapInArrow(score, out_schema))
+    def labels(rb, rows, qrows):
+        out = {label_col: rb.column(2).take(pa.array(rows)).cast(pa.int32())}
+        if test_label_col:
+            out[test_label_col] = pa.array(test_labels[qrows], pa.int32())
+        return out
+
+    return _closure_topk(
+        train.select(id_col, vec_col, label_col), test_rows, rule, k=k,
+        names=(test_id_col, id_col, "dist2"), extra=labels,
+        extra_schema=f", {label_col} int"
+        + (f", {test_label_col} int" if test_label_col else ""))
 
 
 def quantize_int8(V):
@@ -767,6 +700,23 @@ def quantize_int8(V):
     return np.floor(V * 127.0 / safe + 0.5).astype(np.int64)
 
 
+def _int8_rule(Q):
+    """int8 dot-product score rule: one exact int64 GEMM; zero vectors
+    (max|v| = 0) on either side are never selected."""
+    import numpy as np
+
+    Q8, q_zero = quantize_int8(Q), np.abs(Q).max(axis=1) == 0
+
+    def score(C):
+        S = quantize_int8(C) @ Q8.T
+        M, worst = -S, _worst(S)
+        M[np.abs(C).max(axis=1) == 0] = worst
+        M[:, q_zero] = worst
+        # < 2⁵³, so double carries the integer score exactly
+        return M, lambda rows, cols: S[rows, cols].astype(np.float64)
+    return score
+
+
 def quantized_topk(corpus: DataFrame, query_rows, *, k: int,
                    corpus_id: str = "vec_id", vec_col: str = "embedding",
                    query_id: str = "q_id", out_id: str = "c_id") -> DataFrame:
@@ -774,49 +724,65 @@ def quantized_topk(corpus: DataFrame, query_rows, *, k: int,
     4×-memory-compression ANN path (int8 vectors are what a 100 TB
     embedding store actually keeps hot; recall vs float cosine is
     pytest-checked). Same plan shape as the float scorer: quantized
-    query matrix in the task closure, corpus streams through
-    ``mapInArrow``, ONE integer GEMM per batch (numpy int64 matmul is
-    exact, so the scores are oracle-hashable), per-batch top-k + window
-    merge. Zero vectors (max|v| = 0) are excluded on both sides."""
+    query matrix in the :func:`_closure_topk` closure, ONE integer GEMM
+    per corpus batch (numpy int64 matmul is exact, so the scores are
+    oracle-hashable), per-batch top-k + window merge."""
+    cands = _closure_topk(corpus.select(corpus_id, vec_col), query_rows,
+                          _int8_rule, k=k, names=(query_id, out_id, "score"))
+    return _rank_merge(cands, part=query_id, tie=out_id,
+                       score="score", k=k)
+
+
+def _block_pairs(df: DataFrame, *, id_col: str, vec_col: str,
+                 n_blocks: int | None, names: tuple, pair_fn) -> DataFrame:
+    """The block-pair layout of the all-pairs ops: rows split into
+    ``pmod(id, n_blocks)`` blocks, each unordered block pair (i ≤ j)
+    lands in one ``applyInArrow`` group via a broadcast block-pair
+    join, and ``pair_fn(same, ids_a, A, ids_b, B)`` gets the two
+    blocks' ids and L2-normalized float64 matrices (``same`` when
+    i = j) and returns the three output columns ``names`` (long, long,
+    double).
+
+    Shuffle volume is corpus × (n_blocks+1)/2 rows; per-task memory is
+    two blocks of vectors plus their score matrix, so
+    ``n_blocks=None`` applies :func:`auto_n_blocks`'s blocks-∝-N rule.
+    Arrow, not pandas: pandas turns the list column into one numpy
+    object per cell; Arrow's flatten() is the contiguous buffer."""
     import numpy as np
     import pyarrow as pa
 
-    q_ids = np.asarray([r[0] for r in query_rows], dtype=np.int64)
-    Qf = np.stack([np.asarray(r[1], dtype=np.float64) for r in query_rows])
-    keep = np.abs(Qf).max(axis=1) > 0
-    q_ids, Q = q_ids[keep], quantize_int8(Qf[keep])
-    m = len(q_ids)
+    if n_blocks is None:
+        n_blocks = auto_n_blocks(df)
+    e = df.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"),
+                  F.pmod(F.col(id_col), F.lit(n_blocks)).cast("int").alias("blk"))
+    block_pairs = df.sparkSession.createDataFrame(
+        [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)],
+        "ba int, bb int")
+    # a row participates in pair (ba, bb) if its block matches either side
+    tagged = e.join(F.broadcast(block_pairs),
+                    (F.col("blk") == F.col("ba")) | (F.col("blk") == F.col("bb")))
+    schema = pa.schema([(names[0], pa.int64()), (names[1], pa.int64()),
+                        (names[2], pa.float64())])
 
-    out_schema = f"{query_id} long, {out_id} long, score double"
+    def gemm(key: tuple, tbl: pa.Table) -> pa.Table:
+        ba, bb = key[0].as_py(), key[1].as_py()
+        blk = tbl.column("blk").to_numpy(zero_copy_only=False)
+        ma, mb = blk == ba, blk == bb
+        if not (ma.any() and mb.any()):
+            return schema.empty_table()
+        vid = tbl.column("vid").to_numpy(zero_copy_only=False).astype(np.int64)
+        V = (tbl.column("vec").combine_chunks().flatten()
+             .to_numpy(zero_copy_only=False).reshape(tbl.num_rows, -1))
+        A = V[ma].astype(np.float64)
+        B = V[mb].astype(np.float64)
+        A /= np.linalg.norm(A, axis=1, keepdims=True)
+        B /= np.linalg.norm(B, axis=1, keepdims=True)
+        return pa.table(dict(zip(names, pair_fn(ba == bb, vid[ma], A,
+                                                vid[mb], B))),
+                        schema=schema)
 
-    def score(batches):
-        for rb in batches:
-            n = rb.num_rows
-            if n == 0:
-                continue
-            ids = rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-            flat = rb.column(1).flatten().to_numpy(zero_copy_only=False)
-            Vf = flat.reshape(n, -1).astype(np.float64, copy=False)
-            nz = np.abs(Vf).max(axis=1) > 0
-            ids, Vf = ids[nz], Vf[nz]
-            if len(ids) == 0:
-                continue
-            C = quantize_int8(Vf)
-            S = C @ Q.T                                  # n × m, exact int64
-            kk = min(k, len(ids))
-            rows = _topk_rows_per_col(-S, ids, kk)       # score desc, id asc
-            cols = np.repeat(np.arange(m), kk)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(np.repeat(q_ids, kk), type=pa.int64()),
-                 pa.array(ids[rows], type=pa.int64()),
-                 # < 2⁵³, so double carries the integer score exactly
-                 pa.array(S[rows, cols].astype(np.float64),
-                          type=pa.float64())],
-                names=[query_id, out_id, "score"])
-
-    cands = (corpus.select(corpus_id, vec_col).mapInArrow(score, out_schema))
-    return _rank_merge(cands, part=query_id, tie=out_id,
-                       score="score", k=k)
+    return tagged.groupBy("ba", "bb").applyInArrow(
+        gemm, "{} long, {} long, {} double".format(*names))
 
 
 def cosine_near_dup_pairs_blocked(df: DataFrame, *, id_col: str = "vec_id",
@@ -824,99 +790,35 @@ def cosine_near_dup_pairs_blocked(df: DataFrame, *, id_col: str = "vec_id",
                                   threshold: float = 0.95,
                                   n_blocks: int | None = None) -> DataFrame:
     """All-pairs cosine ≥ threshold via blocked GEMM — the scalable exact
-    formulation: split the corpus into ``n_blocks`` deterministic blocks,
-    ship each unordered block pair (i ≤ j) to one ``applyInArrow`` group,
-    and compute the block×block similarity as ONE numpy matrix multiply
-    over L2-normalized float64 rows.
-
-    Shuffle volume is corpus × (n_blocks+1)/2 rows (each row joins every
-    partner block); per-task memory is 2 blocks of vectors PLUS their
-    block×block score matrix, so ``n_blocks=None`` (the default)
-    applies :func:`auto_n_blocks`'s blocks-∝-N rule — a fixed count is
-    a measured second-decade per-task OOM (31 GB score matrices at
-    500 k docs / 8 blocks, r11; see the rule's docstring). Versus the
+    formulation: each :func:`_block_pairs` group computes its
+    block×block similarity as ONE numpy matrix multiply. Versus the
     row-at-a-time self-join this replaces |corpus|²/2 interpreted
     higher-order-function dot products with dense BLAS.
 
-    Numerics (r11 advice): the GEMM only CANDIDATE-selects (with 1e-9
-    slack); the threshold decision and the emitted cosine both come from
-    the shape-independent :func:`_pair_dots` re-score of the selected
-    pairs, so the output is invariant to ``n_blocks`` / block shape —
-    pytest asserts bit-equality across block counts. The pairwise-sum
-    value can still differ from a strict sequential fold in the last
-    ulp — equal under any ≥1e-9 tolerance (pytest-checked against
+    Numerics: the GEMM only CANDIDATE-selects (with 1e-9 slack); the
+    threshold decision and the emitted cosine both come from the
+    shape-independent :func:`_pair_dots` re-score, so the output is
+    invariant to ``n_blocks`` and block shape (pytest asserts
+    bit-equality across block counts). The pairwise-sum value can still
+    differ from a strict sequential fold in the last ulp — equal under
+    any ≥1e-9 tolerance (pytest-checked against
     :func:`cosine_near_dup_pairs`); use the fold version when bit-exact
     SQL parity matters."""
     import numpy as np
-    import pyarrow as pa
 
-    spark = df.sparkSession
-    if n_blocks is None:
-        n_blocks = auto_n_blocks(df)
-    e = df.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"),
-                  F.pmod(F.col(id_col), F.lit(n_blocks)).cast("int").alias("blk"))
-    block_pairs = spark.createDataFrame(
-        [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)],
-        "ba int, bb int")
-    # a row participates in pair (ba, bb) if its block matches either side
-    tagged = e.join(F.broadcast(block_pairs),
-                    (F.col("blk") == F.col("ba")) | (F.col("blk") == F.col("bb")))
-
-    out_schema = "id_a long, id_b long, cosine double"
-
-    # applyInArrow, not applyInPandas (r15, guide §4): pandas turns the
-    # list column into one numpy object per cell and re-stacks it per
-    # group; Arrow's flatten() is the contiguous buffer, group → matrix
-    # is a reshape. Same float64 cast / normalize / GEMM inputs.
-    def gemm(key: tuple, tbl: pa.Table) -> pa.Table:
-        ba, bb = key[0].as_py(), key[1].as_py()
-        empty = pa.table({"id_a": pa.array([], pa.int64()),
-                          "id_b": pa.array([], pa.int64()),
-                          "cosine": pa.array([], pa.float64())})
-        n = tbl.num_rows
-        if n == 0:
-            return empty
-        vid = tbl.column("vid").to_numpy(zero_copy_only=False).astype(np.int64)
-        blk = tbl.column("blk").to_numpy(zero_copy_only=False)
-        V = (tbl.column("vec").combine_chunks().flatten()
-             .to_numpy(zero_copy_only=False).reshape(n, -1))
-        ma, mb = blk == ba, blk == bb
-        A = V[ma].astype(np.float64)
-        B = V[mb].astype(np.float64)
-        if len(A) == 0 or len(B) == 0:
-            return empty
-        A /= np.linalg.norm(A, axis=1, keepdims=True)
-        B /= np.linalg.norm(B, axis=1, keepdims=True)
-        sims = A @ B.T
-        # candidate-select with a 1e-9 slack, then DECIDE and EMIT from
-        # the shape-independent :func:`_pair_dots` re-score (r11 advice):
-        # auto_n_blocks changes GEMM block shapes with corpus size, and
-        # BLAS results can differ in the last ulp across shapes — without
-        # the re-score a threshold-boundary pair (and every emitted
-        # cosine) could flip between tiers. The slack bounds the
-        # GEMM-vs-pairwise disagreement (documented ≥1e-9 tolerance), so
-        # the selected set depends only on the re-scored value.
-        ia, ib = np.nonzero(sims >= threshold - 1e-9)
-        id_a = vid[ma][ia]
-        id_b = vid[mb][ib]
-        cos = _pair_dots(A[ia], B[ib])
+    def pairs(same, ia, A, ib, B):
+        ra, rb = np.nonzero(A @ B.T >= threshold - 1e-9)
+        id_a, id_b, cos = ia[ra], ib[rb], _pair_dots(A[ra], B[rb])
         keep = cos >= threshold
-        id_a, id_b, cos = id_a[keep], id_b[keep], cos[keep]
-        if ba == bb:
+        if same:
             # each unordered pair appears as (u,v) AND (v,u): keep one
-            keep = id_a < id_b
-            id_a, id_b, cos = id_a[keep], id_b[keep], cos[keep]
-        else:
-            # appears once — orient to (lo, hi)
-            lo = np.minimum(id_a, id_b)
-            hi = np.maximum(id_a, id_b)
-            id_a, id_b = lo, hi
-        return pa.table({"id_a": pa.array(id_a, pa.int64()),
-                         "id_b": pa.array(id_b, pa.int64()),
-                         "cosine": pa.array(cos, pa.float64())})
+            keep &= id_a < id_b
+        id_a, id_b = id_a[keep], id_b[keep]
+        return np.minimum(id_a, id_b), np.maximum(id_a, id_b), cos[keep]
 
-    return (tagged.groupBy("ba", "bb")
-            .applyInArrow(gemm, out_schema))
+    return _block_pairs(df, id_col=id_col, vec_col=vec_col,
+                        n_blocks=n_blocks, names=("id_a", "id_b", "cosine"),
+                        pair_fn=pairs)
 
 
 def allpairs_topk_blocked(df: DataFrame, *, id_col: str = "vec_id",
@@ -924,120 +826,52 @@ def allpairs_topk_blocked(df: DataFrame, *, id_col: str = "vec_id",
                           n_blocks: int | None = None,
                           round_dp: int | None = None) -> DataFrame:
     """Exact all-pairs cosine top-k where the query set IS the corpus —
-    fully distributed, NO driver collect of either side (closes the
-    r5 verdict's t16 scale ceiling: ``brute_force_topk_blocked`` raises
-    past ``max_queries`` because its query matrix rides in the closure).
+    fully distributed, NO driver collect of either side (the closure
+    scorers raise past ``max_queries`` because their query matrix rides
+    in the closure). Output: (``{id_col}_a``, ``{id_col}_b``, cosine,
+    rank).
 
-    Same block-pair shape as :func:`cosine_near_dup_pairs_blocked`:
-    deterministic ``pmod(id, n_blocks)`` blocks, each unordered block
-    pair (i ≤ j) lands in one ``applyInArrow`` group, ONE L2-normalized
-    float64 GEMM per pair. Each group emits the local top-k of block-j
-    candidates per block-i query — and, for i ≠ j, the reverse direction
-    too, so every query meets every candidate exactly once. A window
-    merge over the |pairs| × k candidate rows yields the global top-k;
-    the full pair matrix is never materialized and nothing is broadcast.
-
-    Shuffle volume is corpus × (n_blocks+1)/2 rows; per-task memory is
-    two blocks of vectors plus their score matrix, so ``n_blocks=None``
-    (the default) applies :func:`auto_n_blocks`'s blocks-∝-N rule — a
-    fixed count is a measured second-decade per-task OOM (see the
-    rule's docstring). Self-pairs (query == candidate, cosine 1) are
-    emitted; callers drop them.
-
-    Emitted scores are re-computed per selected pair by the
-    shape-independent :func:`_pair_dots` pass (not read out of the
-    GEMM), so mathematically equal cosines arising in DIFFERENT
-    block-pair GEMMs are bit-identical at the global merge and the
-    (cosine desc, id asc) tiebreak is deterministic — closes the r7
-    fuzz-falsified ulp-tie bug. Residual assumption: within ONE GEMM,
-    identical candidate vectors score identically (true for standard
-    BLAS — every output element accumulates over k in the same order),
-    which the local selection's own tiebreak relies on.
+    Each :func:`_block_pairs` group runs ONE GEMM and emits the local
+    top-k of block-j candidates per block-i query — and, for i ≠ j, the
+    reverse direction too, so every query meets every candidate exactly
+    once. A window merge over the |pairs| × k candidate rows yields the
+    global top-k; the full pair matrix is never materialized and
+    nothing is broadcast. Emitted scores are the shape-independent
+    :func:`_pair_dots` re-score, so equal cosines arising in different
+    block-pair GEMMs are bit-identical at the merge. Residual
+    assumption: within ONE GEMM, identical candidate vectors score
+    identically (true for standard BLAS), which the local selection's
+    own tiebreak relies on.
 
     ``round_dp`` ranks BOTH the local selection and the global merge on
     the score rounded to that many decimals (ties → ascending id), and
-    emits the rounded score — this makes the ordering bit-identical to
-    an oracle that ranks on ``ROUND(corr, dp)``, eliminating the
-    shortlist-vs-rounded-rank tie window the r5 advice flagged."""
+    emits the rounded score, so the ordering is bit-identical to an
+    oracle that ranks on ``ROUND(score, dp)``."""
     import numpy as np
-    import pyarrow as pa
 
-    spark = df.sparkSession
-    if n_blocks is None:
-        n_blocks = auto_n_blocks(df)
-    e = df.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"),
-                  F.pmod(F.col(id_col), F.lit(n_blocks)).cast("int").alias("blk"))
-    block_pairs = spark.createDataFrame(
-        [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)],
-        "ba int, bb int")
-    tagged = e.join(F.broadcast(block_pairs),
-                    (F.col("blk") == F.col("ba")) | (F.col("blk") == F.col("bb")))
-
-    out_schema = "q_id long, c_id long, cosine double"
-
-    def _emit(S, Q, C, q_ids, c_ids, kk):
-        rows = _topk_rows_per_col(-S.T, c_ids, kk)   # per-query: desc, id asc
-        cols = np.repeat(np.arange(len(q_ids)), kk)
-        # re-score the ≤ |queries|·k selected pairs shape-independently:
-        # the SAME logical score computed in two different block-pair
-        # GEMMs (whose BLAS blocking differs by shape) can differ in the
-        # last ulp, so the global merge would never see the tie and its
-        # id-asc tiebreak flips nondeterministically (VERDICT r7 wrong
-        # #2, fuzz repro ids 1/63 identical). _pair_dots depends only on
-        # the vector dim, so equal pairs emit bit-identical cosines.
+    def emit(M, Q, C, q_ids, c_ids):
+        rows, cols = _local_topk(M, c_ids, q_ids, k)
         cos = _pair_dots(Q[cols], C[rows])
         if round_dp is not None:
             cos = np.round(cos, round_dp)
-        return np.repeat(q_ids, kk), c_ids[rows], cos
+        return q_ids[cols], c_ids[rows], cos
 
-    # applyInArrow, not applyInPandas (r15, guide §4): the pandas path
-    # materializes every list cell as its own numpy object and re-stacks
-    # them per group; Arrow's flatten() hands back the contiguous value
-    # buffer, so group → matrix is one reshape. Values are identical:
-    # same float64 cast, same normalize, same GEMM inputs.
-    def gemm(key: tuple, tbl: pa.Table) -> pa.Table:
-        ba, bb = key[0].as_py(), key[1].as_py()
-        empty = pa.table({"q_id": pa.array([], pa.int64()),
-                          "c_id": pa.array([], pa.int64()),
-                          "cosine": pa.array([], pa.float64())})
-        n = tbl.num_rows
-        if n == 0:
-            return empty
-        vid = tbl.column("vid").to_numpy(zero_copy_only=False).astype(np.int64)
-        blk = tbl.column("blk").to_numpy(zero_copy_only=False)
-        V = (tbl.column("vec").combine_chunks().flatten()
-             .to_numpy(zero_copy_only=False).reshape(n, -1))
-        ma, mb = blk == ba, blk == bb
-        A = V[ma].astype(np.float64)
-        B = V[mb].astype(np.float64)
-        if len(A) == 0 or len(B) == 0:
-            return empty
-        A /= np.linalg.norm(A, axis=1, keepdims=True)
-        B /= np.linalg.norm(B, axis=1, keepdims=True)
+    def pairs(same, ia, A, ib, B):
         S = A @ B.T
         if round_dp is not None:
             S = np.round(S, round_dp)
-        ia, ib = vid[ma], vid[mb]
-        out = [_emit(S, A, B, ia, ib, min(k, len(ib)))]
-        if ba != bb:
-            out.append(_emit(S.T, B, A, ib, ia, min(k, len(ia))))
-        return pa.table(
-            {"q_id": pa.array(np.concatenate([o[0] for o in out]),
-                              pa.int64()),
-             "c_id": pa.array(np.concatenate([o[1] for o in out]),
-                              pa.int64()),
-             "cosine": pa.array(np.concatenate([o[2] for o in out]),
-                                pa.float64())})
+        out = [emit(-S.T, A, B, ia, ib)]
+        if not same:
+            out.append(emit(-S, B, A, ib, ia))
+        return [np.concatenate(c) for c in zip(*out)]
 
-    cands = tagged.groupBy("ba", "bb").applyInArrow(gemm, out_schema)
-
-    def q(c: str) -> str:
-        return "`" + c.replace("`", "``") + "`"
-
+    cands = _block_pairs(df, id_col=id_col, vec_col=vec_col,
+                         n_blocks=n_blocks, names=("q_id", "c_id", "cosine"),
+                         pair_fn=pairs)
     return _rank_merge(
         cands, part="q_id", tie="c_id", score="cosine", k=k,
-        select=[f"q_id AS {q(id_col + '_a')}",
-                f"c_id AS {q(id_col + '_b')}", "cosine"])
+        select=[f"q_id AS {_quote(id_col + '_a')}",
+                f"c_id AS {_quote(id_col + '_b')}", "cosine"])
 
 
 def semdedup(df: DataFrame, *, id_col: str = "vec_id",
@@ -1063,16 +897,16 @@ def semdedup(df: DataFrame, *, id_col: str = "vec_id",
     ``applyInArrow`` per cell does the pair GEMM AND the transitive
     keeper resolution (task memory = one cell; Arrow, not pandas — the
     list column flattens zero-copy instead of one numpy object per
-    cell-row, r15 guide §4). Every duplicate edge is
-    by construction within-cell — the pair search never examines a
-    cross-cell pair — so the components of the duplicate graph are
-    confined to cells and a per-cell union-find (by min id, matching
-    :func:`~..ops.dedup.connected_components` labels) is exact. This
-    keeps the assignment subtree out of the plan a second time: the old
-    global-CC + broadcast-anti-join formulation referenced ``assigned``
-    twice, re-running the corpus scan and the assignment GEMM for the
-    anti-join side, and funneled the pair list through a driver
-    collect. Returns the KEPT rows as ``(id_col, cell)``."""
+    cell-row). Every duplicate edge is by construction within-cell —
+    the pair search never examines a cross-cell pair — so the
+    components of the duplicate graph are confined to cells and a
+    per-cell union-find (by min id, matching
+    :func:`~..ops.dedup.connected_components` labels) is exact. The
+    assignment subtree therefore appears once in the plan: a global
+    connected-components + anti-join would reference ``assigned``
+    twice, re-running the corpus scan and the assignment GEMM, and
+    funnel the pair list through a driver collect. Returns the KEPT
+    rows as ``(id_col, cell)``."""
     import numpy as np
     import pyarrow as pa
 
@@ -1122,20 +956,19 @@ def semdedup(df: DataFrame, *, id_col: str = "vec_id",
 
 def cosine_near_dup_pairs(df: DataFrame, *, id_col: str = "vec_id",
                           vec_col: str = "embedding",
-                          threshold: float = 0.95,
-                          dim: int | None = None) -> DataFrame:
+                          threshold: float = 0.95) -> DataFrame:
     """Embedding-cosine near-dup pairs (L2 embedding variant), exact:
     id-ordered self-join + cosine filter. This is the oracle-checkable
     baseline; at corpus scale use ``lsh_bucket_topk``-style hyperplane
     blocking first so the pair count stays near-linear."""
     df = spread(df)
     a = (df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("vec_a"))
-         .withColumn("__na", _norm(F.col("vec_a"), dim)))
+         .withColumn("__na", _norm(F.col("vec_a"))))
     b = (df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vec_b"))
-         .withColumn("__nb", _norm(F.col("vec_b"), dim)))
+         .withColumn("__nb", _norm(F.col("vec_b"))))
     pairs = a.join(b, F.col("id_a") < F.col("id_b"))
     return (pairs.withColumn("cosine",
-                             _dot(F.col("vec_a"), F.col("vec_b"), dim)
+                             _dot(F.col("vec_a"), F.col("vec_b"))
                              / (F.col("__na") * F.col("__nb")))
             .filter(F.col("cosine") >= threshold)
             .select("id_a", "id_b", "cosine"))

@@ -60,18 +60,10 @@ def l3_brute_force_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-batch candidates only."""
     (emb,) = tables(spark, sf_dir, "embeddings")
     corpus = emb.selectExpr("vec_id AS c_id", "embedding AS c_vec")
-    out = similarity.brute_force_topk_blocked(
+    return similarity.brute_force_topk_blocked(
         _query_rows(spark, sf_dir), corpus,
         query_id="q_id", corpus_id="c_id",
-        query_vec="q_vec", corpus_vec="c_vec", k=_TOP_K + 1)
-    # exclude self-matches, then re-rank to 1..k (single-selectExpr
-    # assembly — r15, bench plan-build)
-    return (out.filter("q_id != c_id")
-            .selectExpr(
-                "q_id", "c_id", "cosine",
-                "row_number() OVER (PARTITION BY q_id ORDER BY cosine "
-                "DESC, c_id) AS rank")
-            .filter(f"rank <= {_TOP_K}"))
+        query_vec="q_vec", corpus_vec="c_vec", k=_TOP_K)
 
 
 @declared(
@@ -109,21 +101,13 @@ def l3_allpairs_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     — nothing is collected or broadcast, so the plan holds when the
     corpus is 100 TB of embeddings. Ranking and emitted scores use
     ``round_dp=6`` (ties → ascending id), matching the oracle's
-    ``ROUND(cosine, 6)`` ranking exactly; self-pairs are dropped and
-    ranks recomputed over the rounded scores."""
-    from pyspark.sql import Window
-
+    ``ROUND(cosine, 6)`` ranking exactly."""
     (emb,) = tables(spark, sf_dir, "embeddings")
     top = similarity.allpairs_topk_blocked(
         emb, id_col="vec_id", vec_col="embedding",
-        k=_TOP_K + 1, round_dp=6)   # n_blocks: auto (blocks ∝ N)
-    top = (top.filter(F.col("vec_id_a") != F.col("vec_id_b"))
-           .select(F.col("vec_id_a").alias("q_id"),
-                   F.col("vec_id_b").alias("c_id"), "cosine"))
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cosine").desc(), F.col("c_id"))
-    return (top.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= _TOP_K))
+        k=_TOP_K, round_dp=6)   # n_blocks: auto (blocks ∝ N)
+    return top.selectExpr("vec_id_a AS q_id", "vec_id_b AS c_id", "cosine",
+                          "rank")
 
 
 @declared(
@@ -162,8 +146,6 @@ def l3_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k under-fills results). One ``mapInArrow`` corpus pass, one
     GEMM per (batch, matching key); the corpus is never shuffled or
     joined, so the plan is a map-only scan at any corpus size."""
-    from pyspark.sql import Window
-
     def collect():
         (emb,) = tables(spark, sf_dir, "embeddings")
         return (emb.filter(F.col("vec_id") < _N_QUERIES)
@@ -175,16 +157,10 @@ def l3_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = emb.select(F.col("vec_id").alias("c_id"),
                         F.col("embedding").alias("c_vec"),
                         F.col("label").alias("c_key"))
-    out = similarity.filtered_topk_blocked(
+    return similarity.filtered_topk_blocked(
         q_rows, corpus, query_id="q_id", corpus_id="c_id",
         query_vec="q_vec", corpus_vec="c_vec",
-        query_key="q_key", corpus_key="c_key", k=_TOP_K + 1)
-    out = out.filter(F.col("q_id") != F.col("c_id"))
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cosine").desc(), F.col("c_id"))
-    return (out.select("q_id", "c_id", "cosine")
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= _TOP_K))
+        query_key="q_key", corpus_key="c_key", k=_TOP_K)
 
 
 def _lsh_oracle(n_tables: int = 16, n_planes: int = 3, dim: int = 64,
@@ -259,7 +235,7 @@ def l3_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = similarity.lsh_bucket_topk(
         queries, corpus, query_id="q_id", corpus_id="c_id",
         query_vec="q_vec", corpus_vec="c_vec",
-        k=_TOP_K, n_tables=16, n_planes=3, dim=64, exclude_self=True)
+        k=_TOP_K, n_tables=16, n_planes=3, dim=64)
     return out.orderBy("q_id", "rank")
 
 
@@ -334,7 +310,7 @@ def l3_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = similarity.ivf_topk(
         queries, corpus, query_id="q_id", corpus_id="c_id",
         query_vec="q_vec", corpus_vec="c_vec",
-        k=_TOP_K, centroid_stride=None, nprobe=8, exclude_self=True, dim=64)
+        k=_TOP_K, centroid_stride=None, nprobe=8)
     return out.orderBy("q_id", "rank")
 
 
@@ -374,7 +350,7 @@ def l3_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         queries, corpus, query_id="q_id", corpus_id="c_id",
         query_vec="q_vec", corpus_vec="c_vec",
         k=_TOP_K, dim=64, m=16, ks=32, shortlist_mult=10,
-        exclude_self=True, codebooks=books)
+        codebooks=books)
     return out.orderBy("q_id", "rank")
 
 
@@ -412,8 +388,7 @@ def l3_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = similarity.ivf_topk(
         queries, corpus, query_id="q_id", corpus_id="c_id",
         query_vec="q_vec", corpus_vec="c_vec",
-        k=_TOP_K, centroid_stride=None, nprobe=8, exclude_self=True, dim=64,
-        centroid_rows=cents)
+        k=_TOP_K, centroid_stride=None, nprobe=8, centroid_rows=cents)
     return out.orderBy("q_id", "rank")
 
 
@@ -504,8 +479,7 @@ def l3b_ivf_pinned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = similarity.ivf_topk(
         queries, corpus, query_id="q_id", corpus_id="c_id",
         query_vec="q_vec", corpus_vec="c_vec",
-        k=_TOP_K, nprobe=8, exclude_self=True, dim=64,
-        centroid_rows=cent_rows)
+        k=_TOP_K, nprobe=8, centroid_rows=cent_rows)
     return out.orderBy("q_id", "rank")
 
 
@@ -717,20 +691,10 @@ def l3_int8_quant_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     one integer GEMM per Arrow batch, per-batch top-k + window merge —
     no corpus shuffle. Recall vs float cosine is pytest-checked."""
     (emb,) = tables(spark, sf_dir, "embeddings")
-    out = similarity.quantized_topk(
-        emb, _query_rows(spark, sf_dir), k=_TOP_K + 1,
+    return similarity.quantized_topk(
+        emb, _query_rows(spark, sf_dir), k=_TOP_K,
         corpus_id="vec_id", vec_col="embedding",
         query_id="q_id", out_id="c_id")
-    # exclude self-matches (k+1 requested so the slot loss is covered),
-    # then re-rank to 1..k
-    from pyspark.sql import Window
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("score").desc(), F.col("c_id"))
-    return (out.filter(F.col("q_id") != F.col("c_id"))
-            .drop("rank")
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= _TOP_K)
-            .select("q_id", "c_id", "score", "rank"))
 
 
 @declared(
@@ -954,7 +918,8 @@ def l3_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         _query_rows(spark, sf_dir), corpus,
         query_id="q_id", corpus_id="c_id",
         query_vec="q_vec", corpus_vec="c_vec", k=_MMR_CAND + 4)
-    top = top.filter(F.col("q_id") != F.col("c_id"))
+    # the pool ranks on the ROUNDED cosine like the oracle, so the +4
+    # headroom covers candidates whose rounding ties reorder them
     w = Window.partitionBy("q_id").orderBy(
         F.round("cosine", 6).desc(), F.col("c_id"))
     cand = (top.withColumn("rk", F.row_number().over(w))
@@ -1051,21 +1016,15 @@ def l3_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     and counts the overlap. Plan: two corpus-streaming passes (never
     shuffled), a 50-row × 50-row membership join (broadcast), one tiny
     aggregate. recall is a single exact-int division."""
-    from pyspark.sql import Window
-
     (emb,) = tables(spark, sf_dir, "embeddings")
     corpus = emb.select(F.col("vec_id").alias("c_id"),
                         F.col("embedding").alias("c_vec"))
     # exact reference: same construction as l3_brute_force_topk
-    top = similarity.brute_force_topk_blocked(
+    brute = similarity.brute_force_topk_blocked(
         _query_rows(spark, sf_dir), corpus,
         query_id="q_id", corpus_id="c_id",
-        query_vec="q_vec", corpus_vec="c_vec", k=_TOP_K + 1)
-    top = top.filter(F.col("q_id") != F.col("c_id"))
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cosine").desc(), F.col("c_id"))
-    brute = (top.withColumn("rank", F.row_number().over(w))
-             .filter(F.col("rank") <= _TOP_K).select("q_id", "c_id"))
+        query_vec="q_vec", corpus_vec="c_vec",
+        k=_TOP_K).select("q_id", "c_id")
     # candidate under test: same construction as l3_ivf_topk
     queries = (emb.filter(F.col("vec_id") < _N_QUERIES)
                .select(F.col("vec_id").alias("q_id"),
@@ -1073,8 +1032,7 @@ def l3_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ivf = (similarity.ivf_topk(
         queries, corpus, query_id="q_id", corpus_id="c_id",
         query_vec="q_vec", corpus_vec="c_vec",
-        k=_TOP_K, centroid_stride=None, nprobe=8, exclude_self=True,
-        dim=64)
+        k=_TOP_K, centroid_stride=None, nprobe=8)
         .select("q_id", "c_id").withColumn("__hit", F.lit(1)))
     return (brute.join(F.broadcast(ivf), ["q_id", "c_id"], "left")
             .groupBy("q_id")

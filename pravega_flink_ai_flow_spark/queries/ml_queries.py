@@ -102,7 +102,7 @@ def _spark_knn_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale-path KNN: the test set (broadcast-small by construction,
     mirroring the reference's in-memory predict input, processor.py:236)
     rides in the scorer closure; the train side streams once through a
-    blocked-GEMM ``mapInPandas`` that emits per-batch top-k candidates;
+    blocked-GEMM ``mapInArrow`` that emits per-batch top-k candidates;
     a window merge + majority vote finishes. One train pass, no pair
     materialization — the plan a 1000-executor cluster wants. An
     oversized test split (guarded collect) degrades to the all-JVM

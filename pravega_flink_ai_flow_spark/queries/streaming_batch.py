@@ -440,10 +440,9 @@ def t16_user_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     COSINE of the mean-centered daily vectors — the (n−1) and σ factors
     cancel — so the all-pairs scoring runs through the block-pair GEMM
     scorer (ops/similarity.allpairs_topk_blocked): the query set IS the
-    corpus here, so nothing is driver-collected (the r5 verdict flagged
-    the previous brute_force_topk_blocked path's 100k query-collect
-    ceiling — it raises at 100× users); each unordered block pair does
-    ONE BLAS multiply and emits local top-k per user, a window merges.
+    corpus here, so nothing is driver-collected (the closure scorers
+    raise past 100k queries); each unordered block pair does ONE BLAS
+    multiply and emits local top-k per user, a window merges.
     The full pair matrix (quadratic in users) is NEVER materialized.
     The first formulation of this query joined users pairwise through
     a shared-bucket inverted index — dense daily series made every
@@ -454,8 +453,8 @@ def t16_user_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     block-pair selection AND the global merge (round_dp=6) — orders by
     the ROUNDED correlation (6 dp, the multi-pass-accumulation policy),
     so both engines break near-ties identically with no shortlist tie
-    window (r5 advice: an unrounded shortlist could exclude a pair that
-    rounds into a rank-3 tie)."""
+    window (an unrounded shortlist could exclude a pair that rounds
+    into a rank-3 tie)."""
     from ..ops.similarity import allpairs_topk_blocked
 
     (events,) = tables(spark, sf_dir, "events")
@@ -508,23 +507,12 @@ def t16_user_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 names=["user_id", "cvec"])
 
     centered = entries.mapInArrow(center, "user_id long, cvec array<double>")
-    # k=8 gives headroom over the 3 kept ranks for the self-pair plus
-    # any rounded ties at the boundary (selection already orders on the
-    # rounded score, so top-3-after-self is provably inside top-8)
+    # local selection and merge both order on the score rounded to 6 dp,
+    # so the top 3 need no headroom for rounded ties
     top = allpairs_topk_blocked(centered, id_col="user_id",
-                                vec_col="cvec", k=8, round_dp=6)
-    # self always scores corr=1 at rank 1 — drop it, then re-rank (the
-    # emitted cosine is ALREADY rounded to 6 dp, so this ordering is the
-    # oracle's ROUND(corr,6) DESC, user_b ordering exactly)
-    from pyspark.sql import Window
-    w = Window.partitionBy("user_a").orderBy(F.col("corr_v").desc(),
-                                             F.col("user_b"))
-    return (top.filter(F.col("user_id_a") != F.col("user_id_b"))
-            .select(F.col("user_id_a").alias("user_a"),
-                    F.col("user_id_b").alias("user_b"),
-                    F.col("cosine").alias("corr_v"))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= 3)
+                                vec_col="cvec", k=3, round_dp=6)
+    return (top.selectExpr("user_id_a AS user_a", "user_id_b AS user_b",
+                           "cosine AS corr_v", "rank")
             .orderBy("user_a", "rank"))
 
 

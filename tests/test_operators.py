@@ -121,7 +121,7 @@ def test_brute_force_topk_exact(spark):
     c = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [1.0, 1.0])],
         "c_id long, c_vec array<double>")
-    out = similarity.brute_force_topk(q, c, k=2).collect()
+    out = similarity.brute_force_topk_blocked(q, c, k=2).collect()
     ranked = [(r.rank, r.c_id) for r in sorted(out, key=lambda r: r.rank)]
     assert ranked[0] == (1, 1)            # identical direction first
     assert ranked[1][1] == 3              # 45° second
@@ -683,6 +683,86 @@ def test_allpairs_topk_matches_closure_blocked(spark):
         did, dcos = dist[key]
         assert did == cid, (key, cid, did)
         assert abs(dcos - cos) < 1e-9, (key, cos, dcos)
+
+
+def _topk_fixture(spark):
+    """30 random 8-dim vectors; ids 0-2 share key 9 (a group with fewer
+    than k non-self rows), the rest are keyed by parity. Queries are
+    ids 0-5, drawn from the corpus, so every op meets self-pairs."""
+    import numpy as np
+
+    rng = np.random.default_rng(11)
+    rows = [(i, [float(x) for x in rng.normal(size=8)], 9 if i < 3 else i % 2)
+            for i in range(30)]
+    df = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>, label long")
+    q = df.filter("vec_id < 6").selectExpr("vec_id AS q_id",
+                                           "embedding AS q_vec")
+    c = df.selectExpr("vec_id AS c_id", "embedding AS c_vec",
+                      "label AS c_key")
+    return rows, df, q, c
+
+
+def _topk_op(name, df, q, c, q_rows, k):
+    from pravega_flink_ai_flow_spark.ops import pq
+
+    plain = c.select("c_id", "c_vec")
+    if name == "brute":
+        return similarity.brute_force_topk_blocked(q, plain, k=k)
+    if name == "filtered":
+        return similarity.filtered_topk_blocked(q_rows, c, k=k)
+    if name == "quantized":
+        return similarity.quantized_topk(df, [r[:2] for r in q_rows], k=k)
+    if name == "allpairs":
+        return similarity.allpairs_topk_blocked(df, k=k, n_blocks=3) \
+            .selectExpr("vec_id_a AS q_id", "vec_id_b AS c_id", "rank")
+    if name == "ivf":
+        return similarity.ivf_topk(q, plain, k=k, centroid_stride=5,
+                                   nprobe=2)
+    if name == "lsh":
+        return similarity.lsh_bucket_topk(q, plain, k=k, n_tables=4,
+                                          n_planes=2, dim=8)
+    if name == "knn":
+        train = df.selectExpr("vec_id AS n_id", "label AS n_label",
+                              "embedding AS nv")
+        return similarity.knn_candidates_blocked(train, q_rows, k=k)
+    return pq.pq_topk(q, plain, k=k, dim=8, m=2, ks=4, iters=2)
+
+
+@pytest.mark.parametrize("name", ["brute", "filtered", "quantized",
+                                  "allpairs", "ivf", "lsh", "pq"])
+def test_topk_ops_drop_self_pairs_and_rank_without_gaps(spark, name):
+    """The top-k contract: no op returns a self-pair (q_id == c_id), and
+    each query's ranks run 1..n without gaps, n ≤ k. The exact ops
+    return n = min(k, non-self candidates): filtered's key-9 group has
+    two."""
+    rows, df, q, c = _topk_fixture(spark)
+    q_rows = [r for r in rows if r[0] < 6]
+    k = 5
+    got: dict = {}
+    for r in _topk_op(name, df, q, c, q_rows, k).collect():
+        assert r.q_id != r.c_id, (name, r)
+        got.setdefault(r.q_id, []).append(r.rank)
+    assert got
+    for qid, ranks in got.items():
+        assert sorted(ranks) == list(range(1, len(ranks) + 1)), (qid, ranks)
+        if name in ("brute", "quantized", "allpairs"):
+            assert len(ranks) == k
+        elif name == "filtered":
+            key = rows[qid][2]
+            assert len(ranks) == min(k, sum(r[2] == key for r in rows) - 1)
+        else:
+            assert len(ranks) <= k
+
+
+@pytest.mark.parametrize("name", ["brute", "filtered", "quantized", "knn",
+                                  "pq"])
+def test_topk_ops_return_empty_frame_for_empty_query_set(spark, name):
+    """An empty query set yields an empty result, not a driver-side
+    ``np.stack`` error."""
+    rows, df, q, c = _topk_fixture(spark)
+    out = _topk_op(name, df, q.filter("q_id < 0"), c, [], 3)
+    assert out.collect() == []
 
 
 def test_csv_drop_malformed_rows(spark, tmp_workdir):

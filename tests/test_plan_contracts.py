@@ -184,14 +184,14 @@ def test_a1_filter_pushed_to_scan(spark):
 
 
 @pytest.mark.parametrize("name", ["l3_brute_force_topk", "m2_knn_predict",
-                                  "l3_filtered_topk"])
+                                  "l3_filtered_topk", "l3_int8_quant_topk"])
 def test_gemm_scorers_stay_arrow_native(spark, name):
     plan = _plan(spark, name)
     assert "MapInArrow" in plan, "blocked-GEMM scorer regressed off Arrow"
 
 
 @pytest.mark.parametrize("name", ["l3_brute_force_topk", "m2_knn_predict",
-                                  "l3_filtered_topk"])
+                                  "l3_filtered_topk", "l3_int8_quant_topk"])
 def test_gemm_scorers_compact_tiny_scans(spark, name):
     """compact_for_arrow (r15): a sub-8MB corpus must reach the Arrow
     scorer as one merged split (a narrow Coalesce — NOT an Exchange), so

@@ -363,13 +363,14 @@ def test_allpairs_topk_matches_closure_fuzz(spark, data):
 
 
 def test_allpairs_topk_ulp_tie_regression(spark):
-    """Pinned minimal repro of the r7 fuzz-falsified ulp-tie bug:
+    """Pinned minimal repro of a fuzz-falsified ulp-tie bug:
     vectors 1 and 63 are IDENTICAL but land in different pmod-3 blocks,
     so their (mathematically equal) cosines against every query were
     computed by different-shaped GEMMs and differed in the last ulp —
     the merge never saw the tie and ranked 63 above 1. The fix
     (_pair_dots re-score of selected pairs) must rank 1 first on the
-    id-asc tiebreak, with round_dp=None, stably across runs."""
+    id-asc tiebreak, with round_dp=None, stably across runs. Self-pairs
+    are never returned, so each twin ranks the other first."""
     from pravega_flink_ai_flow_spark.ops import similarity
 
     data = [(0, [-2.0, -2.0, -2.0, -2.0]),
@@ -381,18 +382,14 @@ def test_allpairs_topk_ulp_tie_regression(spark):
                for r in similarity.allpairs_topk_blocked(
                    df, id_col="vec_id", vec_col="embedding",
                    k=4, n_blocks=3).collect()}
-        # per query: self at rank 1 (cos 1.0); the identical twins 1/63
-        # tie everywhere and must order id-ascending
-        assert got[(0, 2)][0] == 1 and got[(0, 3)][0] == 63
-        assert got[(1, 1)][0] == 1 and got[(1, 2)][0] == 63
-        assert got[(63, 1)][0] == 1 and got[(63, 2)][0] == 63
+        # query 0: the twins tie and must order id-ascending
+        assert got[(0, 1)][0] == 1 and got[(0, 2)][0] == 63
+        # each twin ranks the other first
+        assert got[(1, 1)][0] == 63 and got[(63, 1)][0] == 1
         # the tied scores are BIT-identical after the canonical
-        # re-score — that's the property the fix restores (the twins
-        # tie against every query, and each twin's self-score ties its
-        # twin-score)
-        assert got[(0, 2)][1] == got[(0, 3)][1]
-        assert got[(1, 1)][1] == got[(1, 2)][1]
-        assert got[(63, 1)][1] == got[(63, 2)][1]
+        # re-score — that's the property the fix restores
+        assert got[(0, 1)][1] == got[(0, 2)][1]
+        assert got[(1, 1)][1] == got[(63, 1)][1]
 
 
 @settings(max_examples=10, deadline=None)
