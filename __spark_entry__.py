@@ -35,29 +35,31 @@ def entry(spark: SparkSession) -> DataFrame:
 # under its own name, and canonical names in the package registry,
 # bench.py and tests never change. Each round `_PROMOTED` holds exactly
 # 50 names: first any red to re-prove, any new query, and every query
-# whose optimized plan changed since its last green (the diff of two
-# `tools/plans.py fingerprint` runs), then the stalest greens as pad.
+# whose optimized plan (the diff of two `tools/plans.py fingerprint`
+# runs) or oracle SQL changed since its last green, then the stalest
+# greens as pad.
 # The round-by-round history of the set is in git and CHANGES.md.
 _PROMOTED = frozenset({
-    # (a) the r11-stale pool minus the two name-ordered-last deferrals
+    # (a) the r11-stale pool minus its name-ordered-last six
     "a7_stats", "a8_having", "a9_pivot", "f_array", "f_bitwise",
     "f_cast", "f_conditional", "f_datetime", "f_explode_wordcount",
     "f_json", "f_map", "f_math", "f_pandas_udf_normalize", "f_string",
     "f_vector_dot", "l4_quality_features", "l4_quality_filter",
-    "l4_text_normalize", "l5_gif_decode", "l5_mixed_codec_decode",
-    "l6_sequence_packing", "m5_softmax_predict", "m6_pca_project",
-    "m7_naive_bayes_predict", "p9_hash_sample_per_group",
-    "s12_jsonl_roundtrip", "s13_partitioned_pruned_scan",
-    "s15_table_profile", "s16_zorder_key", "s17_schema_evolution",
-    "s18_permissive_csv", "s19_compaction", "t17_per_key_trend",
-    "t18_gap_detection", "t19_anomaly_zscore", "t20_ewma_smooth",
-    "t21_session_paths", "u4_except",
-    # (b) optimized-plan changes this round (worktree plan-diff)
+    "l4_text_normalize", "l6_sequence_packing", "m5_softmax_predict",
+    "m6_pca_project", "m7_naive_bayes_predict",
+    "p9_hash_sample_per_group", "s12_jsonl_roundtrip",
+    "s13_partitioned_pruned_scan", "s15_table_profile", "s16_zorder_key",
+    "s17_schema_evolution", "s18_permissive_csv", "s19_compaction",
+    "t17_per_key_trend", "t18_gap_detection",
+    # (b) optimized-plan changes (worktree plan-diff)
     "a14_hll_mergeable_sketch", "j15_recursive_hierarchy",
     "l2_minhash_lsh_pairs", "l3_ivf_kmeans_topk", "l3_ivf_topk",
     "l3_lsh_topk", "l3_recall_eval", "l3b_ivf_pinned_topk",
     "l4_bm25_search", "l6_heavy_hitter_terms", "m8_confusion_matrix",
     "m9_feature_drift_psi",
+    # (c) oracle SQL now built by queries/multimodal._formula_oracle
+    "l5_gif_decode", "l5_image_decode", "l5_interlaced_decode",
+    "l5_jpeg_decode", "l5_mixed_codec_decode", "l5_progressive_decode",
 })
 
 

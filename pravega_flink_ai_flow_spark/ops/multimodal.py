@@ -1,54 +1,55 @@
-"""Multimodal columns (SURVEY.md L5): image/audio/video as opaque
-``binary`` payloads + typed metadata structs.
+"""Multimodal columns (SURVEY.md L5): image and audio payloads as
+opaque ``binary`` columns, decoded by pure python/numpy codecs (no media
+libraries in this container).
 
-The Spark-side plumbing — schema, partition sizing, Arrow-batched UDF
-signatures — is real and tested. PNG, JPEG (baseline sequential and
-progressive), GIF (87a/89a, real LZW) and PCM16 WAV decode for REAL
-(pure python/numpy codecs — no media libraries in this container); the
-remaining formats (WebP, MP3, video) stay behind
-``NotImplementedError`` / a deterministic fake, clearly marked.
+PNG (sequential and Adam7), JPEG (baseline sequential and progressive,
+:mod:`.jpeg`), GIF 87a/89a, WebP lossless/VP8L (:mod:`.webp`, with the
+subtract-green, predictor and color transforms) and PCM16 WAV decode
+for real. The VP8L color-indexing transform and meta-prefix codes,
+lossy VP8, other audio encodings and video raise
+``NotImplementedError``.
 
 At 100 TB the rules encoded here: payloads ride in ``BinaryType`` columns
-(never base64 strings), metadata lives in a pruned-friendly struct,
-decode work happens in ``mapInPandas`` with small-`maxRecordsPerBatch`
-Arrow batches so a partition of 100 MB images never materializes as one
-pandas block.
+(never base64 strings), and per-row decode work runs in one
+:func:`map_rows` pass over small-`maxRecordsPerBatch` Arrow batches, so a
+partition of 100 MB images never materializes as one pandas block.
 """
 
 from __future__ import annotations
 
-import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType()),
-    T.StructField("kind", T.StringType()),          # image | audio | video
-    T.StructField("content", T.BinaryType()),
-    T.StructField("meta", T.StructType([
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("n_frames", T.IntegerType()),
-        T.StructField("mime", T.StringType()),
-    ])),
-])
-
-FEATURE_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType()),
-    T.StructField("content_sha256", T.StringType()),
-    T.StructField("n_bytes", T.IntegerType()),
-    T.StructField("feature", T.ArrayType(T.FloatType())),
-])
 
 
-def content_hash(df: DataFrame, content_col: str = "content") -> DataFrame:
-    """Exact binary dedup key: sha2 over the payload, computed JVM-side."""
-    return df.withColumn("content_sha256", F.sha2(F.col(content_col), 256))
+def map_rows(df: DataFrame, row: Callable[..., tuple],
+             schema: str) -> DataFrame:
+    """The per-row Python pass for media work: ``row(*values)`` maps each
+    input row (values in ``df``'s column order) to one output tuple in
+    the column order of ``schema``, a flat DDL string. Rows arrive one
+    Arrow batch at a time, so peak worker memory is one batch of
+    payloads."""
+    names = [field.split()[0] for field in schema.split(",")]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                [row(*values)
+                 for values in pdf.itertuples(index=False, name=None)],
+                columns=names)
+
+    return df.mapInPandas(run, schema)
+
+
+def _px_stats(arr) -> tuple[float, int]:
+    """``(mean, position-weighted checksum)`` of channel 0 of a decoded
+    h×w×c raster — the stats every formula oracle recomputes in SQL."""
+    import numpy as np
+
+    flat = arr[:, :, 0].reshape(-1).astype(np.int64)
+    return float(flat.mean()), int((flat * np.arange(flat.size)).sum())
 
 
 # -- real codecs (pure python/stdlib — no media libraries needed) ----------
@@ -58,9 +59,9 @@ def content_hash(df: DataFrame, content_col: str = "content") -> DataFrame:
 # JPEG: baseline sequential AND progressive DCT decode + encode in the
 # sibling ``ops.jpeg`` module (numpy IDCT, file-driven Huffman/quant
 # tables, 4:2:0, restarts, spectral selection + successive
-# approximation). WAV: PCM16 via the stdlib ``wave`` module. Formats
-# that genuinely need external libraries (WebP, MP3, video containers)
-# stay behind the NotImplementedError seam below.
+# approximation). GIF: LZW codec below. WebP lossless/VP8L: ``ops.webp``.
+# WAV: PCM16 via the stdlib ``wave`` module. Everything else raises
+# NotImplementedError at the decode_image seam or inside its codec.
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 _PNG_CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}   # color type → samples/pixel
@@ -147,7 +148,7 @@ def _png_unfilter(raw: bytes, h: int, w: int, c: int, p: int):
             # ascontiguousarray returns the read-only frombuffer view
             # itself — copy so the contract (writable array, no
             # reference pinning the whole decompressed stream) holds
-            # shape-independently (r10 review)
+            # shape-independently
             out = out.copy()
         return out, p
     if (fts == 2).all():
@@ -187,7 +188,7 @@ def decode_png(content: bytes):
 
     Implements the spec's scanline reconstruction (filters 0-4: None,
     Sub, Up, Average, Paeth) for 8-bit depth images, sequential AND
-    Adam7-interlaced (r10) — each interlace pass is an independently
+    Adam7-interlaced — each interlace pass is an independently
     filtered sub-image scattered back through the pass grid."""
     import struct
     import zlib
@@ -240,7 +241,7 @@ def decode_png(content: bytes):
 
 _GIF_SIGS = (b"GIF87a", b"GIF89a")
 # constant 256-entry grayscale global palette (index i → RGB (i,i,i)) —
-# module-level because encode_gif runs once per ROW inside mapInPandas
+# module-level because encode_gif runs once per ROW inside map_rows
 # (the CLAUDE.md per-call lookup-table rule)
 _GIF_GRAY_PALETTE = bytes(v for i in range(256) for v in (i, i, i))
 # GIF row-interlace pass grid: (first_row, row_step)
@@ -410,7 +411,7 @@ def decode_gif(content: bytes):
     # bytes indexing raises IndexError and short struct slices raise
     # struct.error on payloads cut off mid block-chain; the codec's
     # corrupt-input contract is ValueError (quarantine wrappers around
-    # the decode seam catch that family — r11 review), so normalize.
+    # the decode seam catch that family), so normalize.
     try:
         return _decode_gif_blocks(content, pos, w, h, gct)
     except (IndexError, struct.error) as e:
@@ -508,12 +509,12 @@ def decode_wav(content: bytes):
 
 
 def decode_image(content: bytes):
-    """Image decode seam. PNG, JPEG — baseline sequential AND
-    progressive (r10) — GIF 87a/89a (r11) and WebP lossless/VP8L (r14)
-    decode for real (pure python — :mod:`.jpeg` implements both T.81
-    DCT processes, :mod:`.webp` the VP8L entropy layer; the LZW raster
-    codec lives above); the remaining formats (lossy VP8, VP8L
-    transforms, video frames) raise — swap in
+    """Image decode seam, routed by the payload's magic bytes. PNG, JPEG
+    (baseline and progressive, :mod:`.jpeg`), GIF 87a/89a and WebP
+    lossless/VP8L (:mod:`.webp`, including the subtract-green, predictor
+    and color transforms) decode for real. The VP8L color-indexing
+    transform and meta-prefix codes, lossy VP8, and every other format
+    raise ``NotImplementedError`` — swap in
     PIL.Image.open(io.BytesIO(content)) where it's available."""
     if content[:8] == _PNG_SIG:
         return decode_png(content)
@@ -549,7 +550,7 @@ def _declared_pixels(content: bytes):
     try:
         if content[:8] == _PNG_SIG:
             # walk the chunk chain to the IHDR instead of assuming it is
-            # first (r12 review #1: a non-IHDR first chunk would both
+            # first (a non-IHDR first chunk would both
             # bypass the guard — huge dims in a later IHDR — and
             # false-quarantine lenient-but-decodable payloads). The walk
             # is bounded; a chain the walk can't resolve is one the
@@ -595,7 +596,7 @@ def _declared_pixels(content: bytes):
 
 def decode_image_safe(content, max_pixels: int = _IMG_MAX_PIXELS):
     """Quarantining wrapper around :func:`decode_image` — the per-row
-    s18 pattern for binary columns (r11 verdict #5): corpus bytes are
+    s18 pattern for binary columns: corpus bytes are
     untrusted, and ONE malformed payload must become a dead-letter row,
     never a task failure that kills the whole partition (and, after
     retries, the job). Returns ``(width, height, channels, arr, None)``
@@ -608,8 +609,8 @@ def decode_image_safe(content, max_pixels: int = _IMG_MAX_PIXELS):
     contract), corrupted tables/streams (ValueError/zlib.error),
     dims-overflow headers (rejected by the cheap pre-parse above BEFORE
     any allocation; MemoryError from interior fields is caught as the
-    second line of defense), unknown formats (NotImplementedError —
-    the honest WebP/video seam), and empty/None payloads."""
+    second line of defense), unsupported formats and codec features
+    (NotImplementedError), and empty/None payloads."""
     try:
         if content is None or len(content) == 0:
             raise ValueError("empty payload")
@@ -629,60 +630,32 @@ def decode_images_quarantined(df: DataFrame, *, id_col: str = "media_id",
                               content_col: str = "content",
                               max_pixels: int = _IMG_MAX_PIXELS) -> DataFrame:
     """Frame-level quarantined decode (the s18 PERMISSIVE-CSV pattern
-    applied to the image seam): one ``mapInPandas`` pass emits
+    applied to the image seam): one :func:`map_rows` pass emits
     ``(id, ok, codec, width, height, channels, px_checksum, err)`` per
     input row — decodable payloads carry their stats, malformed ones
     carry ``ok=false`` and the error class (the dead-letter channel a
     production ingest routes to a review table). Row-count is conserved
     by construction; in local mode a single task failure fails the job,
     so the fuzz pytest's completion IS the zero-task-retry assertion."""
-    import numpy as np
+    def row(mid, content):
+        # a NULL id must dead-letter like any other bad row, not
+        # TypeError the task
+        if mid is None or (isinstance(mid, float) and mid != mid):
+            return (None, False) + (None,) * 5 + ("ValueError: null id",)
+        w, h, c, arr, err = decode_image_safe(content, max_pixels)
+        if err is not None:
+            return (int(mid), False) + (None,) * 5 + (err,)
+        raw = bytes(content)
+        codec = ("png" if raw[:8] == _PNG_SIG
+                 else "gif" if raw[:6] in _GIF_SIGS
+                 else "webp" if raw[:4] == b"RIFF" else "jpeg")
+        return int(mid), True, codec, w, h, c, _px_stats(arr)[1], None
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"id": [], "ok": [], "codec": [], "width": [],
-                   "height": [], "channels": [], "px_checksum": [],
-                   "err": []}
-            for mid, content in zip(pdf[id_col], pdf[content_col]):
-                # a NULL id must dead-letter like any other bad row, not
-                # TypeError the task (r12 review #4)
-                if mid is None or (isinstance(mid, float) and mid != mid):
-                    for k in ("id", "codec", "width", "height", "channels",
-                              "px_checksum"):
-                        out[k].append(None)
-                    out["ok"].append(False)
-                    out["err"].append("ValueError: null id")
-                    continue
-                w, h, c, arr, err = decode_image_safe(content, max_pixels)
-                out["id"].append(int(mid))
-                out["ok"].append(err is None)
-                if err is None:
-                    raw = bytes(content)
-                    out["codec"].append(
-                        "png" if raw[:8] == _PNG_SIG
-                        else "gif" if raw[:6] in _GIF_SIGS
-                        else "webp" if raw[:4] == b"RIFF" else "jpeg")
-                    flat = arr[:, :, 0].reshape(-1).astype(np.int64) \
-                        if arr.ndim == 3 else arr.reshape(-1).astype(np.int64)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["channels"].append(c)
-                    out["px_checksum"].append(
-                        int((flat * np.arange(flat.size)).sum()))
-                    out["err"].append(None)
-                else:
-                    for k in ("codec", "width", "height", "channels",
-                              "px_checksum"):
-                        out[k].append(None)
-                    out["err"].append(err)
-            yield pd.DataFrame(out)
-
-    return (df.select(F.col(id_col).alias(id_col), content_col)
-            .mapInPandas(
-                run, f"id long, ok boolean, codec string, width int, "
-                     f"height int, channels int, px_checksum long, "
-                     f"err string")
-            .withColumnRenamed("id", id_col))
+    return (map_rows(
+        df.select(F.col(id_col).alias(id_col), content_col), row,
+        "id long, ok boolean, codec string, width int, height int, "
+        "channels int, px_checksum long, err string")
+        .withColumnRenamed("id", id_col))
 
 
 def resize_nearest(arr, out_h: int, out_w: int):
@@ -700,41 +673,3 @@ def resize_nearest(arr, out_h: int, out_w: int):
     ys = np.arange(out_h) * h // out_h
     xs = np.arange(out_w) * w // out_w
     return arr[np.ix_(ys, xs)]
-
-
-def _fake_feature(content: bytes, dim: int = 8) -> list[float]:
-    """Deterministic fake feature extractor (stands in for a real encoder):
-    bytes → sha256 → `dim` floats in [0,1). Stable across runs/executors."""
-    digest = hashlib.sha256(content or b"").digest()
-    return [int.from_bytes(digest[4 * i: 4 * i + 4], "big") / 2**32
-            for i in range(dim)]
-
-
-def extract_features(df: DataFrame, content_col: str = "content",
-                     id_col: str = "media_id", dim: int = 8) -> DataFrame:
-    """Feature extraction over binary payloads via mapInPandas — the real
-    plumbing for a decode/encode stage: Arrow-batched iterator in, bounded
-    memory per batch, columnar result out. The per-item transform is the
-    deterministic fake above (decode itself is stubbed)."""
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "media_id": pdf[id_col],
-                "content_sha256": pdf[content_col].map(
-                    lambda b: hashlib.sha256(bytes(b or b"")).hexdigest()),
-                "n_bytes": pdf[content_col].map(lambda b: len(b or b"")).astype("int32"),
-                "feature": pdf[content_col].map(lambda b: _fake_feature(bytes(b or b""), dim)),
-            })
-
-    return df.mapInPandas(extract, FEATURE_SCHEMA)
-
-
-def frame_sample_plan(df: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling *plan*: expands (media_id, n_frames) into one
-    row per sampled frame index — pure JVM sequence/explode; the actual
-    frame decode is the stubbed seam above."""
-    return (df.select("media_id",
-                      F.explode(F.sequence(
-                          F.lit(0),
-                          F.greatest(F.col("meta.n_frames") - 1, F.lit(0)),
-                          F.lit(every_n))).alias("frame_idx")))

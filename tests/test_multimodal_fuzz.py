@@ -168,3 +168,22 @@ def test_decode_image_safe_success_passthrough():
     w, h, c, arr, err = decode_image_safe(encode_png(px))
     assert err is None and (w, h) == (8, 8)
     assert np.array_equal(arr[:, :, 0] if arr.ndim == 3 else arr, px)
+
+
+def test_quarantine_dead_letters_null_id(spark):
+    """A NULL id is a dead letter like any malformed payload: the row
+    comes back with ``ok=false`` and the null-id error, and no row is
+    lost or added."""
+    schema = T.StructType([
+        T.StructField("media_id", T.LongType()),
+        T.StructField("content", T.BinaryType()),
+    ])
+    png = encode_png(np.arange(16, dtype=np.uint8).reshape(4, 4))
+    df = spark.createDataFrame([(None, png), (7, png)], schema)
+    out = decode_images_quarantined(df).collect()
+    assert len(out) == 2
+    by_id = {r.media_id: r for r in out}
+    dead = by_id[None]
+    assert not dead.ok and dead.err == "ValueError: null id"
+    assert dead.px_checksum is None and dead.codec is None
+    assert by_id[7].ok and by_id[7].codec == "png"

@@ -522,7 +522,10 @@ def test_codec_queries_force_spread_round_robin(spark):
     ratio, fixed by spread(force=True))."""
     for name in ("l5_jpeg_decode", "l5_mixed_codec_decode",
                  "l5_image_resize", "l5_image_phash", "l5_image_decode",
-                 "l5_audio_decode", "l5_audio_features"):
+                 "l5_audio_decode", "l5_audio_features",
+                 "l5_interlaced_decode", "l5_gif_decode",
+                 "l5_progressive_decode", "l5_quarantine_decode",
+                 "l5_webp_decode"):
         plan = _plan(spark, name)
         assert "REPARTITION_BY_NUM" in plan or "RoundRobinPartitioning" \
             in plan, f"{name}: no forced round-robin spread\n{plan}"
